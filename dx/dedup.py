@@ -4,7 +4,11 @@ ABSENT in the reference (DataX has no relational operators, SURVEY.md
 §2.7); mandated by BASELINE.json:6: per (repo, path) keep only the
 highest-LSN event in a batch, collapsing I/U/D sequences.
 
-Two strategies, both exposed (tests assert equality):
+Three strategies, all exposed (tests assert equality). The replay
+engine runs ``join`` below its ``broadcast_key_limit`` and
+:func:`dedup_bucket_window` above it; ``window`` and ``maxby`` are
+library functions, checked by the ``cdc_dedup_window`` /
+``cdc_dedup_maxby`` queries and the unit equality test:
 
 - ``window`` — the spec-literal form: ``row_number() OVER
   (PARTITION BY repo, path ORDER BY lsn DESC) = 1``. One full shuffle
@@ -16,7 +20,7 @@ Two strategies, both exposed (tests assert equality):
   every mapper instead of landing on one reducer — per-key skew is
   defused structurally, before salting (skew.py) is even needed.
   Still shuffles one full-payload row per (mapper, key).
-- ``join`` (engine default) — two-phase: aggregate only
+- ``join`` (engine small-batch path) — two-phase: aggregate only
   ``(key, max(lsn))`` (a narrow shuffle of key+lsn, ~1% of payload
   bytes for code content), then left-semi join the batch against the
   winning (key, lsn) pairs. With the winner set broadcast (a CDC
@@ -42,8 +46,7 @@ def latest_keys(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn") -> Da
 
 
 def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
-                  strategy: str = "join", winners: DataFrame | None = None,
-                  broadcast_winners: bool = True) -> DataFrame:
+                  strategy: str = "join", winners: DataFrame | None = None) -> DataFrame:
     """Keep only the max-LSN event per key; preserves input schema.
 
     ``winners`` lets the caller pass a precomputed/persisted
@@ -65,9 +68,7 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
         return agg.select(*key, *[F.col(f"__top.{c}").alias(c) for c in payload])
     if strategy == "join":
         w = winners if winners is not None else latest_keys(df, key, lsn_col)
-        if broadcast_winners:
-            w = F.broadcast(w)
-        semi = df.join(w, on=[*key, lsn_col], how="left_semi")
+        semi = df.join(F.broadcast(w), on=[*key, lsn_col], how="left_semi")
         # A redelivered event ROW (same key AND same lsn appearing twice
         # in one batch — e.g. an at-least-once shipper landing a chunk
         # twice) would survive the semi-join in both copies; window/

@@ -12,18 +12,18 @@ Per batch (SURVEY.md §3.4):
   2. events = changelog.filter(W < lsn ≤ W+Δ)                    [X1]
      — Catalyst pushes the range predicate to the parquet scan
   3. split at DDL boundaries; ALTER TABLE per DDL event          [X4]
-  4. per sub-range: max-LSN dedup [X2] — policy by batch size:
+  4. per sub-range: max-LSN dedup [X2] — one path per batch size:
      small (≤ broadcast_key_limit events): broadcast semi-join on
      the narrow (key, max lsn) winner set — payload shuffles ONCE
      (the bucket write); large: bucket-window dedup fused with the
      write partitioning — still exactly one payload shuffle
   5. normalize content + sha256, materialize evolved columns     [X7]
-  6. skew [X6]: structural on the default paths (bucket-hash
-     write spreads hot repos; maxby partial-combines hot keys);
-     explicit salted repartition on the spec-literal window path
-  7. MERGE into the lake table [X3] — mor (default): append
+  6. skew [X6] is structural on both paths: the bucket-hash write
+     spreads a hot repo's paths, and the (bucket, subtask) split
+     keeps one hot bucket from straggling the stage
+  7. MERGE into the lake table [X3], merge-on-read: append
      per-bucket delta files + tombstones, auto-compact at depth
-     ≥ compact_threshold; cow: rewrite dirty buckets only
+     ≥ compact_threshold
   8. snapshot commit = atomic pointer swap; manifest is derived  [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 
@@ -43,15 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dx import manifest as mf
-from dx import skew
 from dx.dedup import dedup_bucket_window, dedup_max_lsn, latest_keys
-from dx.lake import KEY, LakeTable
-from dx.transforms import (
-    content_sha_bin,
-    normalize_content,
-    normalize_content_udf,
-    sha256_bin_pandas,
-)
+from dx.lake import LakeTable
+from dx.transforms import content_sha_bin, normalize_content
 
 
 def seed_lake(spark: SparkSession, table: LakeTable, seed_df) -> str:
@@ -103,13 +97,7 @@ class ReplayEngine:
         table: LakeTable,
         changelog: DataFrame,
         delta: int = 10_000,
-        dedup_strategy: str = "join",
-        salt_threshold: float = 0.10,
-        n_salts: int = 16,
-        use_pandas_udfs: bool = False,
-        broadcast_keys: bool = True,
         metrics_path: str | None = None,
-        merge_mode: str = "mor",
         compact_threshold: int = 8,
         broadcast_key_limit: int = 2_000_000,
     ):
@@ -117,13 +105,7 @@ class ReplayEngine:
         self.table = table
         self.changelog = changelog
         self.delta = delta
-        self.dedup_strategy = dedup_strategy
-        self.salt_threshold = salt_threshold
-        self.n_salts = n_salts
-        self.use_pandas_udfs = use_pandas_udfs
-        self.broadcast_keys = broadcast_keys
         self.metrics_path = metrics_path
-        self.merge_mode = merge_mode
         self.compact_threshold = compact_threshold
         self.broadcast_key_limit = broadcast_key_limit
         self._max_lsn: int | None = None
@@ -161,14 +143,10 @@ class ReplayEngine:
 
     # ------------------------------------------------------------ transforms
     def _transform_sel(self) -> list:
-        """Column list: vectorized payload transforms + evolved-column
+        """Column list: payload transforms + evolved-column
         materialization (the normalize + sha256 invariant, X7)."""
-        if self.use_pandas_udfs:
-            norm = normalize_content_udf(F.col("content"))
-            sha = sha256_bin_pandas(norm)
-        else:
-            norm = normalize_content(F.col("content"))
-            sha = content_sha_bin(F.col("content"))
+        norm = normalize_content(F.col("content"))
+        sha = content_sha_bin(F.col("content"))
         cols = self.table.columns()
         base = {"repo", "path", "commit", "lang"}
         sel = []
@@ -207,40 +185,17 @@ class ReplayEngine:
             *self._transform_sel(), F.col("__bucket"), F.col("__subtask")
         )
 
-    def _prepare_changes(self, events: DataFrame, winners: DataFrame | None = None,
-                         strategy: str | None = None) -> DataFrame:
-        """Dedup + vectorized payload transforms + evolved-column
+    def _prepare_changes(self, events: DataFrame, winners: DataFrame) -> DataFrame:
+        """Small-batch path: dedup + payload transforms + evolved-column
         materialization → the exact frame lake.merge expects.
 
-        With the default ``join`` strategy, ``winners`` is the cached
-        (repo, path, lsn) winner set: the payload is filtered by a
-        broadcast semi-join and flows to the bucket write with exactly
-        one shuffle total (the write repartition)."""
-        strategy = strategy or self.dedup_strategy
-        deduped = dedup_max_lsn(
-            events, strategy=strategy, winners=winners,
-            broadcast_winners=self.broadcast_keys,
-        )
-        changes = deduped.select(*self._transform_sel())
-        if strategy != "window":
-            # X6 is structural on these paths: "join" never shuffles
-            # the payload by key at all (broadcast semi-join), "maxby"
-            # partial-combines a hot key on every mapper before its
-            # shuffle, and the only payload-wide shuffle left — the
-            # bucket write — is keyed by pmod(hash(repo, path)), which
-            # spreads a hot repo's paths uniformly. An explicit salt
-            # column would just add a second payload shuffle. The
-            # spec-literal "window" strategy below is the one shuffle
-            # that serializes a hot key, so it gets the salt.
-            return changes
-        hot = skew.hot_repos(deduped, self.salt_threshold)
-        if hot:
-            salted = skew.with_salt(changes, hot, self.n_salts)
-            changes = salted.repartition(
-                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                F.col("repo"), F.col("__salt"),
-            ).drop("__salt")
-        return changes
+        ``winners`` is the cached (repo, path, lsn) winner set: the
+        payload is filtered by a broadcast semi-join and flows to the
+        bucket write with exactly one shuffle total (the write
+        repartition, keyed by the bucket hash, which also spreads a
+        hot repo's paths — X6 needs no salt column here)."""
+        deduped = dedup_max_lsn(events, winners=winners)
+        return deduped.select(*self._transform_sel())
 
     # ------------------------------------------------------------ run loop
     def run_batch(self, lo: int, hi: int, crash_after_commit: bool = False) -> list[BatchMetrics]:
@@ -336,51 +291,29 @@ class ReplayEngine:
         pool = ThreadPoolExecutor(max_workers=1)
         lineage_fut = pool.submit(self._collect_lineage, events)
         size_bound = hi - lo
-        winners = None
+        winners = n_keys = None
         try:
-            if self.dedup_strategy == "join" and size_bound > self.broadcast_key_limit:
+            if size_bound > self.broadcast_key_limit:
                 # huge batch: building a broadcast hash of the winner
                 # set would serialize the driver — take the
                 # single-shuffle bucket-window path instead.
                 changes = self._prepare_changes_bucketed(events)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=False,
-                    crash_after_commit=crash_after_commit,
-                    mode=self.merge_mode,
-                )
-            elif self.dedup_strategy == "join":
-                # the narrow winner set (key + lsn) drives dedup, dirty-
-                # bucket planning, the anti-join, and the change count —
-                # the payload frame is evaluated once, in the write.
+            else:
+                # the narrow winner set (key + lsn) drives dedup and the
+                # change count — the payload frame is evaluated once,
+                # in the write.
                 winners = latest_keys(events).persist()
                 n_keys = winners.count()
                 changes = self._prepare_changes(events, winners)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=self.broadcast_keys,
-                    crash_after_commit=crash_after_commit,
-                    keys=winners,
-                    change_rows=n_keys,
-                    mode=self.merge_mode,
-                )
-            else:
-                changes = self._prepare_changes(events)
-                sid = self.table.merge(
-                    changes,
-                    batch_id=batch_id,
-                    watermark_hi=hi,
-                    lineage=lineage_fut.result,
-                    broadcast_keys=self.broadcast_keys,
-                    crash_after_commit=crash_after_commit,
-                    mode=self.merge_mode,
-                )
+            sid = self.table.merge(
+                changes,
+                batch_id=batch_id,
+                watermark_hi=hi,
+                lineage=lineage_fut.result,
+                crash_after_commit=crash_after_commit,
+                change_rows=n_keys,
+                mode="mor",
+            )
         finally:
             if winners is not None:
                 winners.unpersist()
@@ -416,7 +349,7 @@ class ReplayEngine:
             hi = min(w + self.delta, head)
             crash = crash_after_batch is not None and n == crash_after_batch
             out.extend(self.run_batch(w, hi, crash_after_commit=crash))
-            if self.merge_mode == "mor" and self.compact_threshold:
+            if self.compact_threshold:
                 deep = [
                     b for b, d in self.table.delta_depth().items()
                     if d >= self.compact_threshold

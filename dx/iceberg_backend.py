@@ -18,7 +18,7 @@ created with:
 Surface parity: every method below matches the signature and column
 contract of ``dx.lake.LakeTable`` **as ReplayEngine actually invokes
 it** (``merge(changes, batch_id=, watermark_hi=, lineage=,
-broadcast_keys=, crash_after_commit=, keys=, change_rows=, mode=)``,
+crash_after_commit=, change_rows=, mode=)``,
 ``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
 ``checkpoint_watermark()``, ``delta_depth()``, ``compact(buckets)``,
 ``meta()``, ``bucket_expr()``) — tests/test_units.py asserts the
@@ -214,7 +214,6 @@ class IcebergTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        broadcast_keys: bool = True,
         crash_after_commit: bool = False,
         keys: DataFrame | None = None,
         change_rows: int | None = None,
@@ -229,24 +228,16 @@ class IcebergTable:
         ``_lsn`` (+ optional ``__bucket`` planning column, dropped —
         Iceberg routes rows via its own bucket transform). ``keys`` /
         ``change_rows`` are planning hints the Iceberg MERGE does not
-        need (its engine prunes files by partition + column stats);
-        ``broadcast_keys`` is ACCEPTED FOR SIGNATURE PARITY BUT NOT
-        APPLIED to the source frame: the engine passes it by default on
-        small batches, and broadcasting a payload-bearing change frame
-        (multi-KB ``content`` per row, up to broadcast_key_limit rows)
-        can blow the broadcast size limit or OOM the driver — the class
-        of failure LakeTable avoids by only ever broadcasting the
-        narrow (repo, path, lsn) key projection. Iceberg's MERGE
-        already prunes target files via partition + column stats, so
-        the hint buys nothing the engine needs.
+        need (its engine prunes files by partition + column stats).
+        The payload-bearing source frame is never broadcast: multi-KB
+        ``content`` per row, up to broadcast_key_limit rows, can blow
+        the broadcast size limit or OOM the driver.
         ``mode`` is fixed at table level (write.merge.mode property) —
         per-batch override would be an ALTER, deliberately not done
         mid-stream. ``crash_after_commit`` is a sandbox test hook; a
         real commit cannot inject a crash, so it is ignored.
         """
-        # planning hints / test hooks; broadcast_keys intentionally unused —
-        # never broadcast the payload-bearing source frame (see docstring)
-        del keys, change_rows, mode, crash_after_commit, broadcast_keys
+        del keys, change_rows, mode, crash_after_commit  # planning hints / test hooks
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         src = changes.drop("__bucket") if "__bucket" in changes.columns else changes

@@ -117,7 +117,7 @@ def read_kv(
     filter dialect); ``key_range`` bounds the whole scan [lo, hi)."""
     decl = _columns(db_path, table)
     cols = columns or list(decl)
-    missing = [c for c in cols if c not in decl]
+    missing = [c for c in [key_col, *cols] if c not in decl]
     if missing:
         raise ValueError(f"unknown kv columns: {missing}")
     fields, dtypes = [], {}
@@ -160,9 +160,9 @@ def read_kv(
 
     # one range per task: a two-column ranges frame, range-partitioned
     # on lo so each split lands in its own partition
-    lo_t = next(
-        (f.dataType for f in fields if f.name == key_col), T.LongType()
-    )
+    # typed from the catalog, not the projection: ``columns`` may leave
+    # the key out
+    lo_t = _TYPES.get(decl[key_col], (T.StringType(), None))[0]
     ranges_schema = T.StructType(
         [T.StructField("lo", lo_t, True), T.StructField("hi", lo_t, True)]
     )

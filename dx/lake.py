@@ -28,10 +28,12 @@ Scale notes (10^10 rows / 1000 executors):
 - Snapshot metadata holds one entry per bucket (choose ``n_buckets``
   so a bucket ≈ 0.5-1 GB; metadata stays KB-MB). Real Iceberg splits
   this into manifest files/lists — same information, two levels.
-- The MERGE anti-join broadcasts the changed-key set when small
-  (typical CDC batch ≪ table); otherwise it's a shuffled join with
-  AQE skew handling. Either way only dirty-bucket rows participate.
-- Two merge modes, mirroring Iceberg v1/v2:
+- The cow MERGE anti-join broadcasts the changed-key set (a CDC
+  batch's keys ≪ the table); only dirty-bucket rows participate.
+- Two merge modes, mirroring Iceberg v1/v2. ``ReplayEngine`` always
+  writes ``mor``; ``cow`` is the path of direct ``merge()`` callers
+  (the default mode) and the only one that takes
+  ``update_mode='partial'`` (the ``cdc_partial_update`` query):
   * ``cow`` (copy-on-write): dirty buckets are rewritten (anti-join
     survivors ∪ upserts). Zero read amplification; write-amplified
     when changes spread across many buckets.
@@ -782,7 +784,6 @@ class LakeTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        broadcast_keys: bool = True,
         crash_after_commit: bool = False,
         keys: DataFrame | None = None,
         change_rows: int | None = None,
@@ -799,8 +800,8 @@ class LakeTable:
 
         Physical plan: dirty buckets = distinct bucket ids of changes
         (collect of ≤ n_buckets ints); only those buckets' files are
-        read; untouched rows survive via an anti-join on the changed
-        keys (broadcast when the batch is small); clean buckets carry
+        read; untouched rows survive via an anti-join on the broadcast
+        changed-key set; clean buckets carry
         forward by file reference — zero IO.
 
         ``crash_after_commit`` is a test hook (T3b): raises right
@@ -840,8 +841,7 @@ class LakeTable:
         if mode == "mor":
             return self._merge_mor(
                 changes, batch_id, watermark_hi, lineage=lineage,
-                crash_after_commit=crash_after_commit, keys=keys,
-                change_rows=change_rows,
+                crash_after_commit=crash_after_commit, change_rows=change_rows,
             )
         meta = self.meta()
         cols = self.columns()
@@ -862,9 +862,7 @@ class LakeTable:
             "__bucket", self.bucket_expr()
         )
 
-        key_bounds_src = key_set
-        if broadcast_keys:
-            key_set = F.broadcast(key_set)
+        key_set = F.broadcast(key_set)
         survivors = old.join(key_set, on=KEY, how="left_anti")
         if update_mode == "partial":
             # Matched rows need the stored values to coalesce into.
@@ -881,7 +879,7 @@ class LakeTable:
             # exactly _bucket_state's key_bounds contract. survivors
             # stays unpruned — the anti-join must see EVERY stored row
             # to carry it forward.
-            kb = key_bounds_src.agg(
+            kb = key_set.agg(
                 F.min("repo"), F.max("repo"), F.min("path"), F.max("path")
             ).collect()[0]
             old_for_hits = (
@@ -976,7 +974,6 @@ class LakeTable:
         watermark_hi: int,
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
-        keys: DataFrame | None = None,
         change_rows: int | None = None,
     ) -> str:
         """Merge-on-read apply: append the batch's deduped change rows

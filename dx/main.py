@@ -45,8 +45,6 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--workdir", required=True)
         if name == "replay":
             sp.add_argument("--delta", type=int, default=1_000)
-            sp.add_argument("--dedup", choices=["join", "maxby", "window"], default="join")
-            sp.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
             sp.add_argument("--compact-threshold", type=int, default=8)
         if name == "gc":
             sp.add_argument("--keep-last", type=int, default=100)
@@ -54,8 +52,6 @@ def main(argv: list[str] | None = None) -> int:
                             help="orphan-file age guard (s); 0 only if no writer is active")
 
     demo.add_argument("--delta", type=int, default=1_000)
-    demo.add_argument("--dedup", choices=["join", "maxby", "window"], default="join")
-    demo.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
     demo.add_argument("--compact-threshold", type=int, default=8)
 
     args = p.parse_args(argv)
@@ -137,9 +133,8 @@ def main(argv: list[str] | None = None) -> int:
 
     log_df = spark.read.parquet(log_path)
     engine = ReplayEngine(
-        spark, table, log_df, delta=args.delta,
-        dedup_strategy=args.dedup, metrics_path=metrics_path,
-        merge_mode=args.merge_mode, compact_threshold=args.compact_threshold,
+        spark, table, log_df, delta=args.delta, metrics_path=metrics_path,
+        compact_threshold=args.compact_threshold,
     )
     metrics = engine.run()
     applied = [m for m in metrics if not m.skipped]

@@ -91,9 +91,10 @@ def cdc_dedup_window(spark, sf_dir):
     """,
 )
 def cdc_dedup_maxby(spark, sf_dir):
-    """X2 engine-default dedup: groupBy + max_by — hash aggregation
-    with map-side partial combine; shuffles |keys| rows, not |events|,
-    and defuses per-key skew structurally (dx/dedup.py)."""
+    """X2 library dedup (dx/dedup.py ``strategy="maxby"``; the engine
+    runs ``join``): groupBy + max_by — hash aggregation with map-side
+    partial combine; shuffles |keys| rows, not |events|, and defuses
+    per-key skew structurally."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.max("event_id").alias("last_lsn"),

@@ -7,10 +7,10 @@ SQL oracle. Determinism rules are the module docstring of
 dx/pipelines/__init__.py (md5 hashing, integer quantization, explicit
 tie-breaks).
 
-``td_multimodal_decode`` has NO oracle on purpose: its point is the
-mapInPandas binary plumbing; the driver records a rows-only check.
-``td_multimodal_meta`` covers the same metadata math through a pure
-SQL-expressible path so the values themselves are still oracle-gated.
+``td_multimodal_decode`` and ``td_multimodal_meta`` are both
+hash-oracled: the oracles reproduce the deterministic fake decoder's
+metadata arithmetic (and, for decode, the md5 feature fingerprint)
+in SQL, so the mapInPandas binary plumbing is value-gated end to end.
 """
 
 from __future__ import annotations

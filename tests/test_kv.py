@@ -89,6 +89,18 @@ def test_kv_key_range_and_verbatim_where(spark, kv_db):
     assert len(rows) == expect
 
 
+def test_kv_text_key_projected_out(spark, tmp_path):
+    """The ranges frame takes the key's type from the store catalog, so
+    a TEXT key still splits when the projection leaves it out."""
+    path = str(tmp_path / "text.db")
+    pdf = pd.DataFrame({"k": [f"key{i:04d}" for i in range(200)],
+                        "v": [f"val{i}" for i in range(200)]})
+    stage_kv(path, "kv", pdf, key_col="k")
+    df = read_kv(spark, path, key_col="k", columns=["v"], n_splits=4)
+    assert df.columns == ["v"]
+    assert sorted(r["v"] for r in df.collect()) == sorted(pdf["v"])
+
+
 def test_kv_unknown_column_raises(spark, kv_db):
     with pytest.raises(ValueError, match="unknown kv columns"):
         read_kv(spark, kv_db, table="files", key_col="k", columns=["nope"])

@@ -50,10 +50,7 @@ def test_skewed_replay_matches_oracle(spark, tmp_path):
     changelog = gen_changelog(seed_df, n_events=2_000, seed=29, zipf_s=1.6)
     table = LakeTable.create(spark, str(tmp_path / "t6"), n_buckets=16)
     seed_lake(spark, table, seed_df)
-    ReplayEngine(
-        spark, table, changelog_from_pandas(spark, changelog),
-        delta=400, salt_threshold=0.10, n_salts=8,
-    ).run()
+    ReplayEngine(spark, table, changelog_from_pandas(spark, changelog), delta=400).run()
     expected = replay(seed_df, changelog)
     actual = spark_state_to_pandas(table.read(include_system=True))
     assert state_hash(actual) == state_hash(expected)

@@ -7,12 +7,17 @@ per-row sha256(content) equality (BASELINE.json:15).
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pytest
+
+import dx.session
 
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
 from dx.generator import gen_changelog, gen_seed_table
 from dx.lake import LakeTable
+from dx.main import main
 from tests.oracle import replay, spark_state_to_pandas, state_hash
 
 
@@ -92,3 +97,23 @@ def test_merge_touches_only_dirty_buckets(spark, tmp_path):
     # final state still matches the oracle
     actual = spark_state_to_pandas(table.read(include_system=True))
     assert_states_equal(actual, replay(seed_df, changelog))
+
+
+def test_cli_demo_then_replay_is_noop(spark, tmp_path, monkeypatch, capsys):
+    """The CLI drives one replay path: ``demo`` seeds and replays,
+    a second ``replay`` applies nothing (exactly-once), and the removed
+    path flags are rejected by argparse."""
+    monkeypatch.setattr(dx.session, "get_spark", lambda *a, **k: spark)
+    wd = str(tmp_path / "cli")
+    assert main(["demo", "--workdir", wd, "--events", "600", "--delta", "200"]) == 0
+    demo = json.loads(capsys.readouterr().out)
+    assert demo["batches_applied"] > 0 and demo["watermark"] == 600
+
+    assert main(["replay", "--workdir", wd]) == 0
+    again = json.loads(capsys.readouterr().out)
+    assert again["batches_applied"] == 0
+    assert again["snapshot_id"] == demo["snapshot_id"]
+
+    with pytest.raises(SystemExit) as exc:
+        main(["replay", "--workdir", wd, "--dedup", "maxby"])
+    assert exc.value.code == 2
