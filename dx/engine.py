@@ -19,11 +19,11 @@ Per batch (SURVEY.md §3.4):
      write partitioning — still exactly one payload shuffle
   5. normalize content + sha256, materialize evolved columns     [X7]
   6. skew [X6] is structural on both paths: the bucket-hash write
-     spreads a hot repo's paths, and the (bucket, subtask) split
-     keeps one hot bucket from straggling the stage
+     spreads a hot repo's paths, and on the large path the (bucket,
+     subtask) split keeps one hot bucket from straggling the stage
   7. MERGE into the lake table [X3], merge-on-read: append
-     per-bucket delta files + tombstones, auto-compact at depth
-     ≥ compact_threshold
+     per-bucket delta files + tombstones (one file per dirty bucket
+     on the small path), auto-compact at depth ≥ compact_threshold
   8. snapshot commit = atomic pointer swap; manifest is derived  [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 

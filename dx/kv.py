@@ -17,7 +17,8 @@ connector shape is store-agnostic: quantile splits, schema mapping,
 range predicates, projection and verbatim-filter pushdown are the
 reusable structure; the sqlite3 connect/catalog/scan calls are the
 thin layer a production deployment swaps for an HBase/OTS/Mongo
-client.
+client. Such stores publish their own region/partition boundaries,
+so there the split probes of ``kv_splits`` can be skipped.
 
 Scale notes (the parts that must survive 1000 executors):
 - Splits are EXACT quantiles of the key column (one ORDER BY/OFFSET
@@ -30,6 +31,10 @@ Scale notes (the parts that must survive 1000 executors):
 - Projection and the verbatim ``where`` filter are pushed into the
   store's SQL/scan API, so bytes that don't survive the filter never
   cross the wire.
+
+Identifiers (table, key, version and projected column names) are
+double-quoted into every statement, and a name that holds a ``"`` is
+refused; only ``where`` is interpolated verbatim.
 """
 
 from __future__ import annotations
@@ -54,10 +59,18 @@ _TYPES = {
 }
 
 
+def _q(name: str) -> str:
+    """``name`` as a double-quoted sqlite identifier. A name holding a
+    double quote is refused rather than escaped."""
+    if '"' in name:
+        raise ValueError(f"kv identifier may not contain '\"': {name!r}")
+    return f'"{name}"'
+
+
 def _columns(db_path: str, table: str) -> dict[str, str]:
     """Declared column types from the store's schema catalog."""
     with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
-        info = conn.execute(f"PRAGMA table_info({table})").fetchall()
+        info = conn.execute(f"PRAGMA table_info({_q(table)})").fetchall()
     if not info:
         raise ValueError(f"kv table not found: {table}")
     return {row[1]: (row[2] or "TEXT").upper() for row in info}
@@ -72,24 +85,34 @@ def kv_splits(
 ) -> list[tuple]:
     """Exact-quantile key-range boundaries: [lo, hi) per split, hi=None
     for the last (†hbase11xreader auto-split; quantiles instead of
-    lexicographic midpoints so skewed keys still balance)."""
+    lexicographic midpoints so skewed keys still balance).
+
+    The splits balance RAW rows in the key range: ``read_kv``'s
+    ``where`` filter is not applied here, so a filter that is more
+    selective in one part of the key space leaves some tasks with
+    fewer surviving rows than others."""
+    if key_col not in _columns(db_path, table):
+        # checked, not left to the store: sqlite reads a quoted name
+        # that matches no column as a string literal
+        raise ValueError(f"unknown kv columns: [{key_col!r}]")
+    key, tbl = _q(key_col), _q(table)
     lo_bound, hi_bound = key_range or (None, None)
     pred, args = "", []
     if lo_bound is not None:
-        pred, args = f" WHERE {key_col} >= ?", [lo_bound]
+        pred, args = f" WHERE {key} >= ?", [lo_bound]
     if hi_bound is not None:
-        pred += (" AND" if pred else " WHERE") + f" {key_col} < ?"
+        pred += (" AND" if pred else " WHERE") + f" {key} < ?"
         args.append(hi_bound)
     with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
         n_rows = conn.execute(
-            f"SELECT count(*) FROM {table}{pred}", args
+            f"SELECT count(*) FROM {tbl}{pred}", args
         ).fetchone()[0]
         bounds = [lo_bound]
         for i in range(1, max(1, n_splits)):
             off = (n_rows * i) // n_splits
             row = conn.execute(
-                f"SELECT {key_col} FROM {table}{pred} "
-                f"ORDER BY {key_col} LIMIT 1 OFFSET ?",
+                f"SELECT {key} FROM {tbl}{pred} "
+                f"ORDER BY {key} LIMIT 1 OFFSET ?",
                 args + [off],
             ).fetchone()
             if row is not None and row[0] != bounds[-1]:
@@ -129,7 +152,8 @@ def read_kv(
     schema = T.StructType(fields)
 
     splits = kv_splits(db_path, table, key_col, n_splits, key_range)
-    sel = ", ".join(cols)
+    sel = ", ".join(_q(c) for c in cols)
+    key, tbl = _q(key_col), _q(table)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         conn = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
@@ -138,14 +162,14 @@ def read_kv(
                 for lo, hi in zip(ranges["lo"], ranges["hi"]):
                     pred, args = [], []
                     if not pd.isna(lo):
-                        pred.append(f"{key_col} >= ?")
+                        pred.append(f"{key} >= ?")
                         args.append(lo.item() if hasattr(lo, "item") else lo)
                     if not pd.isna(hi):
-                        pred.append(f"{key_col} < ?")
+                        pred.append(f"{key} < ?")
                         args.append(hi.item() if hasattr(hi, "item") else hi)
                     if where:
                         pred.append(f"({where})")
-                    stmt = f"SELECT {sel} FROM {table}"
+                    stmt = f"SELECT {sel} FROM {tbl}"
                     if pred:
                         stmt += " WHERE " + " AND ".join(pred)
                     cur = conn.execute(stmt, args)
@@ -208,7 +232,8 @@ def read_kv_versions(
         ]
     )
     splits = kv_splits(db_path, table, key_col, n_splits, key_range)
-    sel = ", ".join([key_col, version_col, *columns])
+    sel = ", ".join(_q(c) for c in [key_col, version_col, *columns])
+    key, tbl = _q(key_col), _q(table)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         conn = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
@@ -217,14 +242,14 @@ def read_kv_versions(
                 for lo, hi in zip(ranges["lo"], ranges["hi"]):
                     pred, args = [], []
                     if not pd.isna(lo):
-                        pred.append(f"{key_col} >= ?")
+                        pred.append(f"{key} >= ?")
                         args.append(lo.item() if hasattr(lo, "item") else lo)
                     if not pd.isna(hi):
-                        pred.append(f"{key_col} < ?")
+                        pred.append(f"{key} < ?")
                         args.append(hi.item() if hasattr(hi, "item") else hi)
                     inner = f"SELECT {sel}, row_number() OVER (PARTITION BY " \
-                            f"{key_col} ORDER BY {version_col} DESC) AS _rn " \
-                            f"FROM {table}"
+                            f"{key} ORDER BY {_q(version_col)} DESC) AS _rn " \
+                            f"FROM {tbl}"
                     if pred:
                         inner += " WHERE " + " AND ".join(pred)
                     cur = conn.execute(
@@ -287,18 +312,19 @@ def stage_kv(
             return "BLOB"
         return "TEXT"
 
+    tbl = _q(table)
     with sqlite3.connect(db_path) as conn:
-        conn.execute(f"DROP TABLE IF EXISTS {table}")
+        conn.execute(f"DROP TABLE IF EXISTS {tbl}")
         col_sql = [
-            f"{c} {decl(c)}"
+            f"{_q(c)} {decl(c)}"
             f"{' PRIMARY KEY' if isinstance(key_col, str) and c == key_col else ''}"
             for c in pdf.columns
         ]
         if isinstance(key_col, tuple):
-            col_sql.append(f"PRIMARY KEY ({', '.join(key_col)})")
-        conn.execute(f"CREATE TABLE {table} ({', '.join(col_sql)})")
+            col_sql.append(f"PRIMARY KEY ({', '.join(_q(k) for k in key_col)})")
+        conn.execute(f"CREATE TABLE {tbl} ({', '.join(col_sql)})")
         conn.executemany(
-            f"INSERT INTO {table} VALUES ({', '.join('?' * len(pdf.columns))})",
+            f"INSERT INTO {tbl} VALUES ({', '.join('?' * len(pdf.columns))})",
             pdf.itertuples(index=False, name=None),
         )
         conn.commit()

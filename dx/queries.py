@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dx.session import single_jvm
 from dx.transforms import sha_hex
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1250,6 +1251,19 @@ def dx_querysql(spark, sf_dir):
     return read_query_sql(spark, _QUERYSQL)
 
 
+def _require_single_jvm(master: str) -> None:
+    """Refuse a master whose tasks run outside the driver JVM: an
+    embedded database booted by the driver (schema inference) cannot be
+    booted again by an executor (the scan) — Derby's lock allows one
+    JVM — and ``derby.system.home`` set here reaches the driver only."""
+    if not single_jvm(master):
+        raise RuntimeError(
+            "dx_jdbc_roundtrip boots embedded Derby, which one JVM at a "
+            f"time may open; master {master!r} runs tasks in other JVMs. "
+            "Run it under a single-JVM local[N] master."
+        )
+
+
 @query(
     "dx_jdbc_roundtrip",
     """
@@ -1272,10 +1286,13 @@ def dx_jdbc_roundtrip(spark, sf_dir):
     scan SQL (DataX †CommonRdbmsReader semantics), hence the quoted
     identifiers against Spark's case-sensitive created columns.
     Registered past the driver's 50-slot window (VERDICT r4 #3);
-    tests/test_oracle_gate.py hash-verifies it per commit."""
+    tests/test_oracle_gate.py hash-verifies it per commit. Runs only
+    under a single-JVM ``local[N]`` master (``_require_single_jvm``)."""
     import shutil
 
     from dx.sources import jdbc_reader_options, jdbc_writer_options
+
+    _require_single_jvm(spark.sparkContext.master)
 
     scratch = os.path.abspath(os.path.join(".tmp", f"jdbc_q_{os.getpid()}"))
     shutil.rmtree(scratch, ignore_errors=True)

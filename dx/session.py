@@ -51,6 +51,14 @@ def _jvm_cores(master: str) -> int | None:
     return _master_cores(master)
 
 
+def single_jvm(master: str) -> bool:
+    """True when driver and every task share one JVM: ``local``,
+    ``local[N]``, ``local[*]`` (optionally with a max-failures count,
+    ``local[N,F]``). local-cluster and cluster masters run tasks in
+    executor JVMs of their own."""
+    return re.fullmatch(r"local(\[(\*|\d+)(,\d+)?\])?", master) is not None
+
+
 def _use_wide_codec(master: str) -> bool:
     """Decide the zstd default. DX_WIDE_CODEC: "auto" (default,
     per-JVM-width-decided at _WIDE_CODEC_CORES) | "on" | "off" — the

@@ -111,3 +111,143 @@ def test_time_travel_point_read_uses_old_bounds(spark, tmp_path):
     )
     old = table.read_point("repo-aaa", "aaa/0005", snapshot_id=sid).collect()
     assert len(old) == 1 and old[0]["content"] == "v105"
+
+
+def test_small_mor_batch_writes_one_delta_file_per_bucket(spark, tmp_path):
+    """A merge-on-read batch that arrives without ``__bucket`` (the
+    engine's broadcast path, direct callers) lands ONE delta file per
+    dirty bucket, not one per write task: every later read opens each
+    delta file, so the file count is the read cost."""
+    table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    before: dict[str, int] = {}
+    for i, prefix in enumerate(["aaa", "bbb", "ccc"]):
+        changes = _changes(spark, _batch(prefix, 200, lsn0=1000 * (i + 1)))
+        dirty = {
+            str(r[0])
+            for r in changes.select(table.bucket_expr()).distinct().collect()
+        }
+        table.merge(changes, batch_id=f"b{i + 1}",
+                    watermark_hi=1000 * (i + 1) + 999, mode="mor")
+        deltas = table.meta()["deltas"]
+        added = {b: len(fl) - before.get(b, 0) for b, fl in deltas.items()}
+        assert {b: n for b, n in added.items() if n} == {b: 1 for b in dirty}
+        before = {b: len(fl) for b, fl in deltas.items()}
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_deep_mor_point_read_is_two_jobs(spark, tmp_path):
+    """A point read of a depth-7 merge-on-read table is the bucket-id
+    job plus one reconcile job: no footer-schema job, no file-listing
+    job, no shuffle stage for a result of at most one row."""
+    table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
+    for i in range(7):
+        # overlapping key ranges: every layer rewrites half the last
+        rows = [
+            (r, f"k/{int(p[2:]) + 300 * i:05d}", c, lsn,
+             "D" if lsn % 10 == 0 else "U")
+            for r, p, c, lsn, _ in _batch("k", 600, lsn0=1000 * (i + 1))
+        ]
+        table.merge(_changes(spark, rows), batch_id=f"b{i + 1}",
+                    watermark_hi=1000 * (i + 1) + 999, mode="mor")
+    assert max(table.delta_depth().values()) >= 7
+    for path, want in [("k/00905", "v4005"), ("k/00910", None), ("k/99999", None)]:
+        out = []
+        assert _jobs_of(spark, lambda: out.extend(
+            table.read_point("repo-k", path).collect())) <= 2
+        assert [r["content"] for r in out] == ([want] if want else [])
+
+
+def _evolving_changes(spark, rows, **cols):
+    df = _changes(spark, rows)
+    for name, values in cols.items():
+        by_path = F.create_map(*[F.lit(x) for kv in values.items() for x in kv])
+        df = df.withColumn(name, by_path[F.col("path")])
+    return df
+
+
+def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
+    """Layers written under different schemas (add_column, drop_column,
+    then a re-add of the same name): a point read equals the filtered
+    full read for live, updated, tombstoned and never-existing keys, at
+    the head, as of an older snapshot, and after compaction. A file
+    that lacks a column reads it as null, and the dropped column's
+    data never comes back under the re-added name."""
+    table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2)
+    r = "repo-e"
+    table.merge(_changes(spark, _batch("e", 20, lsn0=100)),
+                batch_id="b1", watermark_hi=199, mode="mor")
+    table.alter("add_column", "stars", batch_id="ddl1", at_lsn=200)
+    table.alter("add_column", "license", batch_id="ddl2", at_lsn=201)
+    table.merge(
+        _evolving_changes(
+            spark,
+            [(r, "e/0001", "u1", 301, "U"), (r, "e/0002", "", 302, "D"),
+             (r, "e/0003", "u3", 303, "U")],
+            stars={"e/0001": "old-1", "e/0003": "old-3"},
+            license={"e/0001": "mit", "e/0003": "bsd"},
+        ),
+        batch_id="b2", watermark_hi=399, mode="mor",
+    )
+    mid = table.meta()["snapshot_id"]
+    table.alter("drop_column", "stars", batch_id="ddl3", at_lsn=400)
+    table.merge(
+        _evolving_changes(spark, [(r, "e/0004", "", 501, "D"),
+                                  (r, "e/0005", "u5", 502, "U")],
+                          license={"e/0005": "gpl"}),
+        batch_id="b3", watermark_hi=599, mode="mor",
+    )
+    table.alter("add_column", "stars", batch_id="ddl4", at_lsn=600)
+    table.merge(
+        _evolving_changes(spark, [(r, "e/0003", "u3b", 701, "U"),
+                                  (r, "e/0006", "u6", 702, "U")],
+                          stars={"e/0003": "new-3", "e/0006": "new-6"},
+                          license={"e/0003": "bsd", "e/0006": "apache"}),
+        batch_id="b4", watermark_hi=799, mode="mor",
+    )
+    keys = [(r, f"e/{i:04d}") for i in range(7)]
+    keys += [(r, "e/9999"), ("repo-x", "e/0001")]  # never existed
+
+    def assert_point_equals_scan(snapshot_id=None):
+        full = table.read(include_system=True, snapshot_id=snapshot_id)
+        for repo, path in keys:
+            point = table.read_point(repo, path, snapshot_id=snapshot_id,
+                                     include_system=True).collect()
+            scanned = full.filter(
+                (F.col("repo") == repo) & (F.col("path") == path)).collect()
+            assert [x.asDict() for x in point] == [x.asDict() for x in scanned], path
+            assert len(point) <= 1
+
+    def point(path, snapshot_id=None):
+        rows = table.read_point(r, path, snapshot_id=snapshot_id).collect()
+        return rows[0].asDict() if rows else None
+
+    assert_point_equals_scan()
+    assert_point_equals_scan(mid)
+    assert point("e/0000")["stars"] is None             # file predates both columns
+    assert point("e/0000")["license"] is None
+    assert point("e/0001")["stars"] is None             # dropped data stays dropped
+    assert point("e/0001")["license"] == "mit"
+    assert point("e/0003")["stars"] == "new-3"
+    assert point("e/0002") is None and point("e/0004") is None
+    assert point("e/9999") is None
+    assert point("e/0001", mid)["stars"] == "old-1"      # time travel sees fid 6
+    assert point("e/0004", mid)["content"] == "v104"
+    table.compact()
+    assert not table.meta()["deltas"]
+    assert_point_equals_scan()
+    assert point("e/0001")["stars"] is None
+    assert point("e/0006")["stars"] == "new-6"

@@ -101,6 +101,24 @@ def test_kv_text_key_projected_out(spark, tmp_path):
     assert sorted(r["v"] for r in df.collect()) == sorted(pdf["v"])
 
 
+def test_kv_identifiers_are_quoted(spark, tmp_path):
+    """Table, key and column names are double-quoted into the store's
+    SQL, so names with spaces stage and scan; a name holding a double
+    quote is refused."""
+    path = str(tmp_path / "quoted.db")
+    pdf = pd.DataFrame({"doc id": range(100),
+                        "file size": [i * 2 for i in range(100)]})
+    stage_kv(path, "my docs", pdf, key_col="doc id")
+    df = read_kv(spark, path, table="my docs", key_col="doc id",
+                 columns=["file size"], key_range=(10, 50), n_splits=3)
+    assert df.columns == ["file size"]
+    assert sorted(r["file size"] for r in df.collect()) == [
+        i * 2 for i in range(10, 50)
+    ]
+    with pytest.raises(ValueError, match="may not contain"):
+        read_kv(spark, path, table='my "docs"', key_col="doc id")
+
+
 def test_kv_unknown_column_raises(spark, kv_db):
     with pytest.raises(ValueError, match="unknown kv columns"):
         read_kv(spark, kv_db, table="files", key_col="k", columns=["nope"])

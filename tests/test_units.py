@@ -355,3 +355,18 @@ def test_wide_codec_env_override(monkeypatch):
     assert _use_wide_codec("local[8]") is True
     monkeypatch.setenv("DX_WIDE_CODEC", "off")
     assert _use_wide_codec("local[32]") is False
+
+
+def test_jdbc_roundtrip_requires_single_jvm_master():
+    """Embedded Derby boots in one JVM only: the JDBC round-trip query
+    runs under local[N] and refuses local-cluster and cluster masters."""
+    from dx.queries import _require_single_jvm
+    from dx.session import single_jvm
+
+    for master in ("local[4]", "local[*]", "local", "local[4,2]"):
+        assert single_jvm(master)
+    _require_single_jvm("local[4]")
+    for master in ("local-cluster[2,2,1024]", "spark://h:7077"):
+        assert not single_jvm(master)
+        with pytest.raises(RuntimeError, match="single-JVM local"):
+            _require_single_jvm(master)
