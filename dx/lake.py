@@ -2,15 +2,18 @@
 
 Sandbox has no iceberg-spark-runtime jars (SURVEY.md §0.2), so this
 module implements the Iceberg semantics the north_rule needs —
-snapshot isolation, atomic commit, MERGE upsert, ALTER TABLE schema
-evolution with field-ids — behind the same interface
-``iceberg_backend.py`` exposes for real clusters. Design mirrors
-public Iceberg concepts (spec at iceberg.apache.org/spec/):
+snapshot isolation, atomic commit (one writer process), MERGE
+upsert, ALTER TABLE schema evolution with field-ids — behind the
+same interface ``iceberg_backend.py`` exposes for real clusters.
+Design mirrors public Iceberg concepts (spec at
+iceberg.apache.org/spec/):
 
 - A table = immutable parquet data files + a chain of snapshot JSON
-  metadata; the *commit point* is an atomic pointer swap
-  (``os.replace``), the file-system analogue of Iceberg's optimistic
-  metadata swap.
+  metadata; the *commit point* is a pointer swap (``os.replace``),
+  atomic for readers. It is NOT a compare-and-swap: the parent check
+  is a separate read, so racing writer processes can both pass it and
+  lose commits silently (8 processes × 200 commits: 1,077 reported,
+  183 kept). A table assumes ONE writer process at a time.
 - Data is hash-bucketed by ``pmod(hash(repo, path), n_buckets)``
   (Spark's Murmur3 ``F.hash`` — deterministic across sessions, so
   bucket routing is stable between snapshots). A MERGE rewrites ONLY
@@ -103,7 +106,8 @@ class ColumnSpec:
 
 
 class CommitConflict(RuntimeError):
-    """Pointer moved between plan and commit (optimistic concurrency)."""
+    """Pointer moved between plan and commit. Checked before the swap,
+    not atomically with it: reliable for one writer process only."""
 
 
 def _resolve_lineage(lineage) -> list[dict]:
@@ -260,12 +264,13 @@ class LakeTable:
         }
 
     def _write_snapshot(self, snap: dict, expected_parent: str | None) -> None:
-        """Write snapshot json then atomically swap the pointer.
+        """Write snapshot json then swap the pointer.
 
-        Optimistic commit à la Iceberg: if the pointer no longer names
-        ``expected_parent``, a concurrent writer won — raise, caller
-        replans. The ``os.replace`` of the pointer is the single
-        atomic commit point; a crash before it leaves only orphan
+        If the pointer no longer names ``expected_parent``, the plan is
+        stale — raise, caller replans. Read-compare then ``os.replace``
+        is two steps, not a compare-and-swap, so this assumes a single
+        writer process (module docstring). The pointer swap is the
+        commit point; a crash before it leaves only orphan
         data/metadata files (ignored by readers, GC-able).
         """
         if expected_parent is not None or os.path.exists(self._pointer_path):
@@ -377,8 +382,7 @@ class LakeTable:
             meta = self.meta()
             cols = self.columns()
         else:
-            with open(self._snap_path(snapshot_id)) as f:
-                meta = json.load(f)
+            meta = self.snapshot_meta(snapshot_id)
             cols = [ColumnSpec(**c) for c in meta["columns"]]
         buckets = sorted(
             set(meta["files"]) | set(meta.get("deltas", {})), key=int

@@ -53,9 +53,11 @@ def minhash_signatures_df(df: DataFrame, text_col: str = "text",
     partial-combined min rows. (2) One md5 per shingle beats md5 per
     (shingle, i): the hash stage is the linear-CPU term that dominates
     once scan/shuffle overhead amortizes — 8× fewer md5 calls; the
-    same-session A/B (tools/ab_minhash.py, sf0.1) measured wall
-    3.12s → 2.63s with the fixed scan/shuffle overhead still attached
-    (the md5 delta alone is ~0.49s of a ~0.56s hash stage).
+    same-session A/B at sf0.1 (no BENCH/ record; script
+    ``ab_minhash.py`` in ``tools/`` at commit 456b0d4, the last that
+    has it) measured wall 3.12s → 2.63s with the fixed scan/shuffle
+    overhead still attached (the md5 delta alone is ~0.49s of a
+    ~0.56s hash stage).
     Docs with fewer than ``shingle_n`` tokens have no shingles and drop
     out (our corpus guarantees ≥ shingle_n tokens per doc).
 

@@ -169,7 +169,7 @@ def ivf_assign(df: DataFrame, centroids: list[tuple[int, list[int]]],
       O(k·dim). Kept as the UDF-free twin and the equivalence anchor.
 
     There is NO crossover — the interleaved A/B
-    (tools/ab_ivf_assign.py, BENCH/AB_IVF_ASSIGN.json) measures
+    (BENCH/AB_IVF_ASSIGN.json) measures
     matmul 9.5× faster at k=16 and 54× at k=256: Spark never
     code-gens interpreted HOF lambdas, so the "zero Python" form pays
     per-row interpretation that dwarfs one Arrow hop. Measurement

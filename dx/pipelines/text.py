@@ -164,7 +164,7 @@ def fingerprint(c: Column, n: int = 16) -> Column:
     (embarrassingly parallel per document), and measured 1.27-1.75×
     faster than the explode→min-agg rewrite in a same-session
     alternating A/B at sf0.1, both orderings
-    (tools/ab_fingerprint.py → BENCH/AB_FINGERPRINT.json). The
+    (BENCH/AB_FINGERPRINT.json). The
     interpreted-HOF penalty that made explode 44× faster for MinHash
     applies to NESTED HOF trees, not this one-level map."""
     return F.array_min(F.transform(char_shingles(c, n), lambda s: F.md5(s)))

@@ -162,11 +162,10 @@ def td_token_count(spark, sf_dir):
 def td_fingerprint(spark, sf_dir):
     """Rolling-hash fingerprint: min md5 over char-16-gram windows —
     scalar expression form. The r1-demanded explode→min-agg rewrite was
-    A/B'd same-session at sf0.1 (tools/ab_fingerprint.py, both
+    A/B'd same-session at sf0.1 (BENCH/AB_FINGERPRINT.json, both
     orderings, 6 pairs): the SCALAR form is 1.27-1.75× FASTER and
     shuffle-free — a single non-nested md5 transform() stays cheap,
-    unlike MinHash's nested HOF tree where explode won 44×. Measured
-    result committed in BENCH/AB_FINGERPRINT.json."""
+    unlike MinHash's nested HOF tree where explode won 44×."""
     return _docs(spark, sf_dir).select(
         F.col("doc_id"), ptext.fingerprint(F.col("text"), 16).alias("fp")
     )

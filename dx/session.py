@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 # BENCH/scaling_ab_e28_r5{,_off}.json): a 4-core JVM is CPU-bound on
 # compression long before its share of the bus saturates. Real
 # clusters run small-core executors, so they default stock unless
-# the operator opts in (DX_WIDE_CODEC=on).
+# the operator opts in through ``get_spark(extra_conf=...)``.
 _WIDE_CODEC_CORES = 16
 
 
@@ -60,15 +60,11 @@ def single_jvm(master: str) -> bool:
 
 
 def _use_wide_codec(master: str) -> bool:
-    """Decide the zstd default. DX_WIDE_CODEC: "auto" (default,
-    per-JVM-width-decided at _WIDE_CODEC_CORES) | "on" | "off" — the
-    explicit switch exists so interleaved A/Bs can hold everything but
-    the codec constant without editing code."""
-    wide = os.environ.get("DX_WIDE_CODEC", "auto").lower()
-    if wide == "auto":
-        cores = _jvm_cores(master)
-        return cores is not None and cores >= _WIDE_CODEC_CORES
-    return wide in ("on", "1", "true", "zstd")
+    """Decide the zstd default from the per-JVM width alone (at least
+    _WIDE_CODEC_CORES slots in one JVM). A caller who must force a codec
+    passes it in ``get_spark(extra_conf=...)``, which overrides this."""
+    cores = _jvm_cores(master)
+    return cores is not None and cores >= _WIDE_CODEC_CORES
 
 
 def get_spark(
@@ -91,8 +87,9 @@ def get_spark(
     or an already-running gateway the driver JVM exists before this
     code runs and the conf is silently ignored — spark-submit callers
     must pass ``--conf spark.driver.extraJavaOptions=-XX:+UseParallelGC``
-    (or ``--driver-java-options``) explicitly, as tools/bench_scaling*
-    do. Executor options always apply (executors launch after conf).
+    (or ``--driver-java-options``) explicitly, as the executors-mode
+    scaling A/Bs in BENCH/RUNS.md did. Executor options always apply
+    (executors launch after conf).
     When a session already exists, getOrCreate() reuses it and ALL
     confs here are ignored; we warn on a GC mismatch below.
     """
@@ -134,8 +131,9 @@ def get_spark(
     # scaling_ab_e28_r5{,_off}.json): zstd loses at 8 threads and at
     # 8 x 4-core executor JVMs, wins at 32 threads in one JVM — the
     # crossover is where shared-bus bytes, not CPU, bound throughput.
-    # extra_conf below still overrides (tools/ab_codec.py pins codecs
-    # explicitly so A/Bs stay default-independent).
+    # extra_conf below still overrides it; the codec sweep
+    # (BENCH/AB_CODEC.json) pinned its codecs that way, independent of
+    # this default.
     if _use_wide_codec(master):
         builder = (
             builder.config("spark.io.compression.codec", "zstd")

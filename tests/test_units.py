@@ -339,11 +339,10 @@ def test_master_cores_and_wide_codec_threshold():
     assert _jvm_cores("local[32]") >= _WIDE_CODEC_CORES
 
 
-def test_wide_codec_env_override(monkeypatch):
-    """DX_WIDE_CODEC=on/off overrides the width decision (A/B switch)."""
+def test_wide_codec_decided_by_jvm_width():
+    """The zstd default follows the per-JVM width alone."""
     from dx.session import _use_wide_codec
 
-    monkeypatch.delenv("DX_WIDE_CODEC", raising=False)
     assert _use_wide_codec("local[32]") is True
     assert _use_wide_codec("local[8]") is False
     # 32 total cores as 4-core executor JVMs stays stock (measured:
@@ -351,10 +350,6 @@ def test_wide_codec_env_override(monkeypatch):
     assert _use_wide_codec("local-cluster[8,4,6144]") is False
     assert _use_wide_codec("local-cluster[2,16,6144]") is True
     assert _use_wide_codec("spark://host:7077") is False  # unknown width
-    monkeypatch.setenv("DX_WIDE_CODEC", "on")
-    assert _use_wide_codec("local[8]") is True
-    monkeypatch.setenv("DX_WIDE_CODEC", "off")
-    assert _use_wide_codec("local[32]") is False
 
 
 def test_jdbc_roundtrip_requires_single_jvm_master():
