@@ -4,11 +4,10 @@ ABSENT in the reference (DataX has no relational operators, SURVEY.md
 §2.7); mandated by BASELINE.json:6: per (repo, path) keep only the
 highest-LSN event in a batch, collapsing I/U/D sequences.
 
-Three strategies, all exposed (tests assert equality). The replay
-engine runs ``join`` below its ``broadcast_key_limit`` and
-:func:`dedup_bucket_window` above it; ``window`` and ``maxby`` are
-library functions, checked by the ``cdc_dedup_window`` /
-``cdc_dedup_maxby`` queries and the unit equality test:
+The replay engine runs :func:`dedup_bucket_window` for every batch.
+The three :func:`dedup_max_lsn` strategies are library functions
+(tests assert their equality); ``window`` and ``maxby`` are also
+checked by the ``cdc_dedup_window`` / ``cdc_dedup_maxby`` queries:
 
 - ``window`` — the spec-literal form: ``row_number() OVER
   (PARTITION BY repo, path ORDER BY lsn DESC) = 1``. One full shuffle
@@ -20,13 +19,12 @@ library functions, checked by the ``cdc_dedup_window`` /
   every mapper instead of landing on one reducer — per-key skew is
   defused structurally, before salting (skew.py) is even needed.
   Still shuffles one full-payload row per (mapper, key).
-- ``join`` (engine small-batch path) — two-phase: aggregate only
-  ``(key, max(lsn))`` (a narrow shuffle of key+lsn, ~1% of payload
-  bytes for code content), then left-semi join the batch against the
-  winning (key, lsn) pairs. With the winner set broadcast (a CDC
-  batch's key set ≪ the table), the payload is NEVER shuffled at
-  dedup — its only shuffle is the final bucket-write repartition. At
-  10^10 events this halves total content bytes moved per batch.
+- ``join`` — two-phase: aggregate only ``(key, max(lsn))`` (a
+  narrow shuffle of key+lsn, ~1% of payload bytes for code content),
+  then left-semi join the batch against the winning (key, lsn) pairs.
+  With the winner set broadcast (a CDC batch's key set ≪ the table),
+  the payload is NEVER shuffled at dedup, but the winner set costs
+  its own aggregation job and broadcast.
 """
 
 from __future__ import annotations
@@ -50,8 +48,7 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
     """Keep only the max-LSN event per key; preserves input schema.
 
     ``winners`` lets the caller pass a precomputed/persisted
-    :func:`latest_keys` frame (the engine reuses it for dirty-bucket
-    planning and the MERGE anti-join).
+    :func:`latest_keys` frame for the ``join`` strategy.
     """
     if strategy == "window":
         w = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
@@ -75,8 +72,8 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
         # maxby/bucket-window all collapse it. dropDuplicates keeps the
         # strategies equivalent under duplicated input rows. Cost: one
         # extra shuffle of the already-collapsed batch (≤ |keys| rows,
-        # and this path only runs below broadcast_key_limit) — bounded,
-        # and correctness is not input-invariant-conditional.
+        # and a broadcastable winner set keeps it small) — bounded, and
+        # correctness is not input-invariant-conditional.
         return semi.dropDuplicates([*key, lsn_col])
     raise ValueError(f"unknown dedup strategy: {strategy}")
 
@@ -85,20 +82,23 @@ def dedup_bucket_window(df: DataFrame, bucket_col: str = "__bucket",
                         num_partitions: int | None = None,
                         key: list[str] = KEY, lsn_col: str = "lsn",
                         subtask_col: str | None = None) -> DataFrame:
-    """Single-shuffle large-batch dedup, fused with bucket routing.
+    """Single-shuffle dedup, fused with bucket routing (the engine's
+    path for every batch).
 
-    For batches too big to broadcast a winner set: repartition by the
-    storage bucket (each key lives in exactly one bucket), sort the
-    partition by (key, lsn desc), and keep the first row of each key
-    run via ``lag`` — a window PARTITIONED BY THE BUCKET, so Spark
-    reuses the repartition exchange instead of shuffling again by key.
+    Repartition by the storage bucket (each key lives in exactly one
+    bucket), sort the partition by (key, lsn desc), and keep the first
+    row of each key run via ``lag`` — a window PARTITIONED BY THE
+    BUCKET, so Spark reuses the repartition exchange instead of
+    shuffling again by key.
     Compared to the maxby aggregation this needs no reduce-side hash
     of payload rows, has no per-key skew point (the partition key is
     the uniform bucket hash), leaves the data partitioned exactly as
     the bucket write wants it (the write's repartition collapses into
     this one — ONE payload shuffle end-to-end), and emits rows sorted
     by key, which compresses better in parquet and pre-sorts future
-    merge reads. ``df`` must already carry ``bucket_col``.
+    merge reads. ``df`` must already carry ``bucket_col``. An event row
+    redelivered within one batch (same key AND same lsn) sorts next to
+    its twin, which the first-of-run filter drops.
 
     ``subtask_col`` (a key-deterministic sub-bucket id, see
     LakeTable.with_subtask) joins the partitioning so one bucket

@@ -12,18 +12,20 @@ Per batch (SURVEY.md §3.4):
   2. events = changelog.filter(W < lsn ≤ W+Δ)                    [X1]
      — Catalyst pushes the range predicate to the parquet scan
   3. split at DDL boundaries; ALTER TABLE per DDL event          [X4]
-  4. per sub-range: max-LSN dedup [X2] — one path per batch size:
-     small (≤ broadcast_key_limit events): broadcast semi-join on
-     the narrow (key, max lsn) winner set — payload shuffles ONCE
-     (the bucket write); large: bucket-window dedup fused with the
-     write partitioning — still exactly one payload shuffle
-  5. normalize content + sha256, materialize evolved columns     [X7]
-  6. skew [X6] is structural on both paths: the bucket-hash write
-     spreads a hot repo's paths, and on the large path the (bucket,
-     subtask) split keeps one hot bucket from straggling the stage
+  4. per sub-range: one narrow lineage aggregation — its rows give
+     the event count, and none means a metadata-only watermark commit
+  5. max-LSN dedup [X2] by bucket window: the batch repartitions by
+     its storage bucket and keeps each key's first row in
+     (key, lsn desc) order — exactly one payload shuffle, which the
+     bucket write reuses; normalize content + sha256 and materialize
+     evolved columns in the same stage                            [X7]
+  6. skew [X6] is structural: the bucket-hash shuffle spreads a hot
+     repo's paths, and a batch wider than broadcast_key_limit LSNs
+     also splits each bucket by a (bucket, subtask) fan-out so one
+     hot bucket can't straggle the stage
   7. MERGE into the lake table [X3], merge-on-read: append
      per-bucket delta files + tombstones (one file per dirty bucket
-     on the small path), auto-compact at depth ≥ compact_threshold
+     without the fan-out), auto-compact at depth ≥ compact_threshold
   8. snapshot commit = atomic pointer swap; manifest is derived  [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 
@@ -43,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dx import manifest as mf
-from dx.dedup import dedup_bucket_window, dedup_max_lsn, latest_keys
+from dx.dedup import dedup_bucket_window
 from dx.lake import LakeTable
 from dx.transforms import content_sha_bin, normalize_content
 
@@ -91,6 +93,15 @@ class BatchMetrics:
 
 
 class ReplayEngine:
+    """Replays a changelog into a lake table in bounded LSN batches.
+
+    ``broadcast_key_limit`` only chooses the write fan-out: a batch
+    whose LSN range is wider than it dedups and writes by (bucket,
+    subtask) cells; any other batch by bucket alone, one delta file per
+    dirty bucket. Every batch takes the same bucket-window dedup; the
+    name is historical.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -167,35 +178,29 @@ class ReplayEngine:
         ]
         return sel
 
-    def _prepare_changes_bucketed(self, events: DataFrame) -> DataFrame:
-        """Large-batch path: bucket-window dedup (dedup.py) — ONE
-        payload shuffle, fused with the write's bucket routing (the
-        write's repartition reuses this exchange), no winner broadcast,
-        no reduce-side payload hash. The shuffle is keyed by
-        (bucket, subtask) at WRITE_TASK_MULT×cores partitions so one
-        hot/slow bucket can't straggle a cores-wide stage."""
-        shuffle_n = self.table.write_partitions(True)
-        data = self.table.with_subtask(
-            events.withColumn("__bucket", self.table.bucket_expr())
-        )
+    def _dedup_changes(self, events: DataFrame, fanout: bool) -> DataFrame:
+        """Bucket-window dedup (dedup.py) + payload transforms → the
+        exact frame lake.merge expects. ONE payload shuffle, fused with
+        the write's bucket routing: the dedup repartitions at the
+        write's own partitioning, so the write's repartition reuses
+        this exchange.
+
+        ``fanout`` picks the write fan-out. Without it the shuffle is
+        keyed by the bucket alone at ``write_partitions(False)``, so a
+        small batch lands one delta file per dirty bucket. With it the
+        shuffle is keyed by (bucket, subtask) at WRITE_TASK_MULT×cores
+        partitions, so one hot/slow bucket can't straggle a large
+        batch's cores-wide stage."""
+        data = events.withColumn("__bucket", self.table.bucket_expr())
+        cols = [F.col("__bucket")]
+        if fanout:
+            data = self.table.with_subtask(data)
+            cols.append(F.col("__subtask"))
         deduped = dedup_bucket_window(
-            data, num_partitions=shuffle_n, subtask_col="__subtask"
+            data, num_partitions=self.table.write_partitions(fanout),
+            subtask_col="__subtask" if fanout else None,
         )
-        return deduped.select(
-            *self._transform_sel(), F.col("__bucket"), F.col("__subtask")
-        )
-
-    def _prepare_changes(self, events: DataFrame, winners: DataFrame) -> DataFrame:
-        """Small-batch path: dedup + payload transforms + evolved-column
-        materialization → the exact frame lake.merge expects.
-
-        ``winners`` is the cached (repo, path, lsn) winner set: the
-        payload is filtered by a broadcast semi-join and flows to the
-        bucket write with exactly one shuffle total (the write
-        repartition, keyed by the bucket hash, which also spreads a
-        hot repo's paths — X6 needs no salt column here)."""
-        deduped = dedup_max_lsn(events, winners=winners)
-        return deduped.select(*self._transform_sel())
+        return deduped.select(*self._transform_sel(), *cols)
 
     # ------------------------------------------------------------ run loop
     def run_batch(self, lo: int, hi: int, crash_after_commit: bool = False) -> list[BatchMetrics]:
@@ -257,74 +262,42 @@ class ReplayEngine:
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, None, 0, 0.0, 0.0, skipped=True)
             self._emit(m)
             return m
-        # NO persist of the payload frame: caching would materialize
-        # every column, while the planning aggregations are narrow
-        # (2-3 small columns) — parquet column pruning + the lsn range
-        # pushdown make re-scans far cheaper than full-row caching
-        # (measured 5-10× on multi-GB batches).
         events = window.filter(
             (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
         )
-        # Empty-segment fast path: a narrow isEmpty probe (lsn column
-        # only — pruning + the pushed LSN range make it footer-cheap)
-        # routes empty/sparse windows to a METADATA-ONLY watermark
-        # advance instead of a full merge pipeline (Spark write job +
-        # empty data/<sid> dir + data-shaped snapshot per empty
-        # segment). Non-empty segments pay one take(1) job, ~ms.
-        if events.select("lsn").isEmpty():
+        # The narrow lineage aggregation runs first: its rows give the
+        # exact event count, and no rows means an empty window, which
+        # takes a METADATA-ONLY watermark advance (no write job, no
+        # data/<sid> dir, no data-shaped snapshot). The write scans the
+        # window again rather than caching it: this scan reads two
+        # narrow columns, and caching would materialize the payload.
+        lineage = self._collect_lineage(events)
+        if not lineage:
             sid = self.table.checkpoint_watermark(batch_id, hi)
             dt = time.monotonic() - t0
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, sid, 0, dt, 0.0)
             self._emit(m)
             return m
-        # The lineage aggregation runs CONCURRENTLY with the merge
-        # write (its own thread submits the Spark job; FIFO interleaves
-        # the small agg with the big write) instead of serially ahead
-        # of it — the rows are only needed at snapshot-commit time, so
-        # merge() takes a callable it resolves after the write. Path
-        # choice can't wait for the exact count, so it uses the LSN
-        # range width — an upper bound that equals n_events on dense
-        # changelogs (gaps only make a small batch take the bucketed
-        # path, never the reverse at meaningful scale).
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        lineage_fut = pool.submit(self._collect_lineage, events)
-        size_bound = hi - lo
-        winners = n_keys = None
-        try:
-            if size_bound > self.broadcast_key_limit:
-                # huge batch: building a broadcast hash of the winner
-                # set would serialize the driver — take the
-                # single-shuffle bucket-window path instead.
-                changes = self._prepare_changes_bucketed(events)
-            else:
-                # the narrow winner set (key + lsn) drives dedup and the
-                # change count — the payload frame is evaluated once,
-                # in the write.
-                winners = latest_keys(events).persist()
-                n_keys = winners.count()
-                changes = self._prepare_changes(events, winners)
-            sid = self.table.merge(
-                changes,
-                batch_id=batch_id,
-                watermark_hi=hi,
-                lineage=lineage_fut.result,
-                crash_after_commit=crash_after_commit,
-                change_rows=n_keys,
-                mode="mor",
-            )
-        finally:
-            if winners is not None:
-                winners.unpersist()
-            pool.shutdown(wait=False)
-        lineage_rows = lineage_fut.result()
-        n_events = sum(r["row_count"] for r in lineage_rows)
+        # The LSN range width only picks the write fan-out: it is an
+        # upper bound that equals the event count on dense changelogs,
+        # so gaps can only send a small batch to the fan-out path.
+        changes = self._dedup_changes(
+            events, fanout=hi - lo > self.broadcast_key_limit
+        )
+        sid = self.table.merge(
+            changes,
+            batch_id=batch_id,
+            watermark_hi=hi,
+            lineage=lineage,
+            crash_after_commit=crash_after_commit,
+            mode="mor",
+        )
+        n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
         applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)
         m = BatchMetrics(
             batch_id, lo + 1, hi, int(n_events), int(applied), sid, 0, dt,
-            round(n_events / dt, 2) if dt > 0 else 0.0, lineage=lineage_rows,
+            round(n_events / dt, 2) if dt > 0 else 0.0, lineage=lineage,
         )
         self._emit(m)
         return m

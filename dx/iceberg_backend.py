@@ -230,7 +230,7 @@ class IcebergTable:
         ``change_rows`` are planning hints the Iceberg MERGE does not
         need (its engine prunes files by partition + column stats).
         The payload-bearing source frame is never broadcast: multi-KB
-        ``content`` per row, up to broadcast_key_limit rows, can blow
+        ``content`` per row over a whole batch can blow
         the broadcast size limit or OOM the driver.
         ``mode`` is fixed at table level (write.merge.mode property) —
         per-batch override would be an ALTER, deliberately not done

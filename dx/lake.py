@@ -110,13 +110,6 @@ class CommitConflict(RuntimeError):
     not atomically with it: reliable for one writer process only."""
 
 
-def _resolve_lineage(lineage) -> list[dict]:
-    """Lineage may be a list OR a zero-arg callable (a Future.result):
-    the engine overlaps the lineage aggregation with the merge write
-    and the rows are only needed at snapshot-commit time."""
-    return (lineage() if callable(lineage) else lineage) or []
-
-
 # Recent-batch-id window carried in every snapshot (defense-in-depth
 # idempotence membership). The PRIMARY guard is the monotone watermark
 # (apply advances it to lsn_hi, so any applied batch fails the
@@ -955,7 +948,7 @@ class LakeTable:
             change_rows = (keys if keys is not None else key_set).count()
         snap = self._child(
             meta, batch_id,
-            lineage=[],  # resolved after the write (may be a Future)
+            lineage=lineage or [],
             watermark=max(int(meta["watermark"]), int(watermark_hi)),
             row_count=None,  # exact count maintained lazily; see read().count()
             merge_stats={
@@ -983,7 +976,6 @@ class LakeTable:
             meta.get("file_stats", {}), self._collect_file_stats(new_files),
             files, snap["deltas"],
         )
-        snap["lineage"] = _resolve_lineage(lineage)
         self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
         if crash_after_commit:
             raise RuntimeError("injected crash after commit point (T3b)")
@@ -1007,18 +999,18 @@ class LakeTable:
         cols = self.columns()
         snap = self._child(
             meta, batch_id,
-            lineage=[],  # resolved after the write (may be a Future)
+            lineage=lineage or [],
             watermark=max(int(meta["watermark"]), int(watermark_hi)),
             row_count=None,
         )
         sid = snap["snapshot_id"]
 
-        # a caller may pre-bucket/pre-subtask (engine's bucket-window
-        # dedup); re-adding would mint fresh attributes and defeat the
-        # exchange reuse that makes that path one-shuffle. Any other
-        # frame is a small batch: bucket only, no subtask, so the write
-        # lands ONE delta file per dirty bucket — every later read
-        # opens each delta file, so files, not rows, set read cost.
+        # a caller may pre-bucket (the engine's bucket-window dedup);
+        # re-adding would mint fresh attributes and defeat the exchange
+        # reuse that makes that path one-shuffle. A frame without
+        # __subtask is written by bucket only, so the write lands ONE
+        # delta file per dirty bucket — every later read opens each
+        # delta file, so files, not rows, set read cost.
         data = (
             changes if "__bucket" in changes.columns
             else changes.withColumn("__bucket", self.bucket_expr())
@@ -1041,7 +1033,6 @@ class LakeTable:
 
         if change_rows is None:
             change_rows = int(obs.get["rows"]) if new_files else 0
-        snap["lineage"] = _resolve_lineage(lineage)
         snap["deltas"] = deltas
         snap["file_stats"] = self._rebuild_file_stats(
             meta.get("file_stats", {}), self._collect_file_stats(new_files),

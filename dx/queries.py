@@ -20,7 +20,9 @@ Determinism contract with the oracle (value-hash equality):
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import shutil
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,6 +45,20 @@ def query(name: str, oracle: str | None = None):
             ORACLE_SQL[name] = oracle
         return fn
     return deco
+
+
+@contextmanager
+def _scratch(name: str) -> Iterator[str]:
+    """A fresh ``.tmp/<name>_<pid>`` directory, removed on exit. A query
+    that stages a store in it must return an evaluated frame
+    (``localCheckpoint``), since the store is gone once it returns."""
+    path = os.path.abspath(os.path.join(".tmp", f"{name}_{os.getpid()}"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 CENTS = lambda c: F.floor(c * 100).cast("long")  # noqa: E731 — exact money path
@@ -1288,37 +1304,34 @@ def dx_jdbc_roundtrip(spark, sf_dir):
     Registered past the driver's 50-slot window (VERDICT r4 #3);
     tests/test_oracle_gate.py hash-verifies it per commit. Runs only
     under a single-JVM ``local[N]`` master (``_require_single_jvm``)."""
-    import shutil
-
     from dx.sources import jdbc_reader_options, jdbc_writer_options
 
     _require_single_jvm(spark.sparkContext.master)
 
-    scratch = os.path.abspath(os.path.join(".tmp", f"jdbc_q_{os.getpid()}"))
-    shutil.rmtree(scratch, ignore_errors=True)
-    # pin derby.log into the scratch (read once at Derby boot)
-    spark.sparkContext._jvm.java.lang.System.setProperty(
-        "derby.system.home", scratch
-    )
-    url = f"jdbc:derby:{scratch}/db;create=true"
-    cols = ["o_orderkey", "o_custkey", "o_totalprice"]
-    staged = (
-        _t(spark, sf_dir, "orders")
-        .select(*cols)
-        .where(F.col("o_orderkey") <= 4096)
-        .coalesce(1)  # one embedded-DB connection; the slice is ~1k rows
-    )
-    plan = jdbc_writer_options(url, "orders_probe", cols, "truncate")
-    staged.write.format("jdbc").options(**plan["options"]).mode(
-        plan["mode"]
-    ).save()
-    opts = jdbc_reader_options(
-        url,
-        table="orders_probe",
-        columns=[f'"{c}"' for c in cols],
-        where='"o_orderkey" <= 512',
-    )
-    return spark.read.format("jdbc").options(**opts).load()
+    with _scratch("jdbc_q") as scratch:
+        # pin derby.log into the scratch (read once at Derby boot)
+        spark.sparkContext._jvm.java.lang.System.setProperty(
+            "derby.system.home", scratch
+        )
+        url = f"jdbc:derby:{scratch}/db;create=true"
+        cols = ["o_orderkey", "o_custkey", "o_totalprice"]
+        staged = (
+            _t(spark, sf_dir, "orders")
+            .select(*cols)
+            .where(F.col("o_orderkey") <= 4096)
+            .coalesce(1)  # one embedded-DB connection; the slice is ~1k rows
+        )
+        plan = jdbc_writer_options(url, "orders_probe", cols, "truncate")
+        staged.write.format("jdbc").options(**plan["options"]).mode(
+            plan["mode"]
+        ).save()
+        opts = jdbc_reader_options(
+            url,
+            table="orders_probe",
+            columns=[f'"{c}"' for c in cols],
+            where='"o_orderkey" <= 512',
+        )
+        return spark.read.format("jdbc").options(**opts).load().localCheckpoint()
 
 
 @query(
@@ -1341,30 +1354,26 @@ def dx_kv_range_scan(spark, sf_dir):
     parquet; the hash proves the connector is value-faithful.
     Registered past the driver's 50-slot window (VERDICT r4 #3);
     tests/test_oracle_gate.py hash-verifies it per commit."""
-    import shutil
-
     from dx.kv import read_kv, stage_kv
 
-    scratch = os.path.abspath(os.path.join(".tmp", f"kv_q_{os.getpid()}"))
-    shutil.rmtree(scratch, ignore_errors=True)
-    os.makedirs(scratch)
-    db = os.path.join(scratch, "docs.db")
-    pdf = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "n_chars")
-        .toPandas()  # fixture staging only; production scans the live store
-    )
-    stage_kv(db, "documents", pdf, key_col="doc_id")
-    return read_kv(
-        spark,
-        db,
-        table="documents",
-        key_col="doc_id",
-        columns=["doc_id", "lang", "n_chars"],
-        key_range=(100, 400),
-        where="n_chars >= 200",
-        n_splits=8,
-    )
+    with _scratch("kv_q") as scratch:
+        db = os.path.join(scratch, "docs.db")
+        pdf = (
+            _t(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "n_chars")
+            .toPandas()  # fixture staging only; production scans the live store
+        )
+        stage_kv(db, "documents", pdf, key_col="doc_id")
+        return read_kv(
+            spark,
+            db,
+            table="documents",
+            key_col="doc_id",
+            columns=["doc_id", "lang", "n_chars"],
+            key_range=(100, 400),
+            where="n_chars >= 200",
+            n_splits=8,
+        ).localCheckpoint()
 
 
 @query(
@@ -1395,32 +1404,28 @@ def dx_kv_multiversion(spark, sf_dir):
     identical window + unpivot on the parquet. Registered past the
     driver's 50-slot window; tests/test_oracle_gate.py verifies per
     commit."""
-    import shutil
-
     from dx.kv import read_kv_versions, stage_kv
 
-    scratch = os.path.abspath(os.path.join(".tmp", f"kvmv_q_{os.getpid()}"))
-    shutil.rmtree(scratch, ignore_errors=True)
-    os.makedirs(scratch)
-    db = os.path.join(scratch, "cells.db")
-    pdf = (
-        _t(spark, sf_dir, "events")
-        .select("user_id", "event_id", "event_type", "props")
-        .where(F.col("user_id") < 100)
-        .toPandas()  # fixture staging only; production scans the live store
-    )
-    stage_kv(db, "cells", pdf, key_col=("user_id", "event_id"))
-    return read_kv_versions(
-        spark,
-        db,
-        "cells",
-        key_col="user_id",
-        version_col="event_id",
-        columns=["event_type", "props"],
-        max_versions=2,
-        key_range=(10, 60),
-        n_splits=4,
-    )
+    with _scratch("kvmv_q") as scratch:
+        db = os.path.join(scratch, "cells.db")
+        pdf = (
+            _t(spark, sf_dir, "events")
+            .select("user_id", "event_id", "event_type", "props")
+            .where(F.col("user_id") < 100)
+            .toPandas()  # fixture staging only; production scans the live store
+        )
+        stage_kv(db, "cells", pdf, key_col=("user_id", "event_id"))
+        return read_kv_versions(
+            spark,
+            db,
+            "cells",
+            key_col="user_id",
+            version_col="event_id",
+            columns=["event_type", "props"],
+            max_versions=2,
+            key_range=(10, 60),
+            n_splits=4,
+        ).localCheckpoint()
 
 
 @query("cdc_skew_approx")  # rows-only: HLL estimates are engine-specific

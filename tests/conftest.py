@@ -26,3 +26,24 @@ def spark():
         },
     )
     yield s
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """Count the Spark jobs a zero-arg callable launches, through a job
+    group: ``jobs_of(fn) -> int``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"probe-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -134,22 +134,7 @@ def test_small_mor_batch_writes_one_delta_file_per_bucket(spark, tmp_path):
         before = {b: len(fl) for b, fl in deltas.items()}
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_deep_mor_point_read_is_two_jobs(spark, tmp_path):
+def test_deep_mor_point_read_is_two_jobs(spark, tmp_path, jobs_of):
     """A point read of a depth-7 merge-on-read table is the bucket-id
     job plus one reconcile job: no footer-schema job, no file-listing
     job, no shuffle stage for a result of at most one row."""
@@ -166,7 +151,7 @@ def test_deep_mor_point_read_is_two_jobs(spark, tmp_path):
     assert max(table.delta_depth().values()) >= 7
     for path, want in [("k/00905", "v4005"), ("k/00910", None), ("k/99999", None)]:
         out = []
-        assert _jobs_of(spark, lambda: out.extend(
+        assert jobs_of(lambda: out.extend(
             table.read_point("repo-k", path).collect())) <= 2
         assert [r["content"] for r in out] == ([want] if want else [])
 

@@ -105,7 +105,7 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     engine.run(max_batches=1)
     lo, head = table.watermark(), int(changelog["lsn"].max())
     events = log.filter((F.col("lsn") > lo) & (F.col("op") != "DDL"))
-    table.merge(engine._prepare_changes_bucketed(events), batch_id="cow-tail",
+    table.merge(engine._dedup_changes(events, fanout=True), batch_id="cow-tail",
                 watermark_hi=head, keys=None, mode="cow")
 
     assert calls == [], f"unexpected persist() of {calls}"

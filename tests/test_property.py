@@ -55,8 +55,8 @@ def test_any_config_converges_to_oracle(spark, tmp_path_factory, case):
         table,
         changelog_from_pandas(spark, delivered),
         delta=case["delta"],
-        # 0 sends every batch down the bucket-window path; the default
-        # keeps these batches on the broadcast winner-set join
+        # every batch takes bucket-window dedup; 0 adds the (bucket,
+        # subtask) write fan-out, the default writes by bucket alone
         **({"broadcast_key_limit": 0} if case["large_batch"] else {}),
     ).run()
 

@@ -278,7 +278,7 @@ def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path):
     eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
                        broadcast_key_limit=0)
     events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
-    changes = eng._prepare_changes_bucketed(events)
+    changes = eng._dedup_changes(events, fanout=True)
     stored = table._stored_select(
         changes.withColumn("_op", F.col("op")), table.columns(), include_op=True
     ).repartition(table.write_partitions(True), "__bucket", "__subtask")
@@ -287,11 +287,39 @@ def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path):
     assert "__subtask" in plan
 
 
-def test_empty_segment_metadata_only_commit(spark, tmp_path):
+def test_small_batch_write_reuses_the_dedup_exchange(spark, tmp_path, monkeypatch):
+    """Plan-shape guard for the small path: the frame the bucket write
+    saves has exactly ONE Exchange, keyed by the bucket alone (no
+    ``__subtask``), so each dirty bucket gets one delta file and the
+    payload shuffles once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kw):
+        written.append(self._df)
+        return parquet(self, path, *args, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    seed_df = gen_seed_table(2, 10, seed=3)
+    chg = gen_changelog(seed_df, n_events=300, seed=3)
+    table = LakeTable.create(spark, str(tmp_path / "small"), n_buckets=8)
+    seed_lake(spark, table, seed_df)
+    written.clear()  # the seed write
+    ReplayEngine(spark, table, changelog_from_pandas(spark, chg)).run_batch(0, 150)
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(__bucket" in plan and "__subtask" not in plan, plan
+
+
+def test_empty_segment_metadata_only_commit(spark, tmp_path, jobs_of):
     """An empty LSN window must advance the watermark with a
-    METADATA-ONLY commit (ADVICE r2, dx/engine.py): no Spark write job,
-    no data/<sid> directory, no data-bearing-shaped snapshot — while a
-    later replay over the real events still converges."""
+    METADATA-ONLY commit (ADVICE r2, dx/engine.py): one Spark job (the
+    lineage collect), no write job, no data/<sid> directory, no
+    data-bearing-shaped snapshot — while a later replay over the real
+    events still converges."""
     import os as _os
 
     seed_df = gen_seed_table(n_repos=2, paths_per_repo=6, seed=3)
@@ -301,9 +329,11 @@ def test_empty_segment_metadata_only_commit(spark, tmp_path):
     head = int(pdf["lsn"].max())
     eng = ReplayEngine(spark, table, changelog_from_pandas(spark, pdf),
                        delta=10_000)
+    eng.ddl_events()  # once per engine, not per batch
 
     # window strictly past the changelog head: zero events
-    metrics = eng.run_batch(head, head + 500)
+    metrics = []
+    assert jobs_of(lambda: metrics.extend(eng.run_batch(head, head + 500))) == 1
     assert len(metrics) == 1 and metrics[0].events == 0
     sid = metrics[0].snapshot_id
     assert sid is not None

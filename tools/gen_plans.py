@@ -70,7 +70,7 @@ def main() -> int:
     eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
                        broadcast_key_limit=0)
     events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
-    changes = eng._prepare_changes_bucketed(events)
+    changes = eng._dedup_changes(events, fanout=True)
     stored = table._stored_select(
         changes.withColumn("_op", F.col("op")), table.columns(), include_op=True
     ).repartition(table.write_partitions(True), "__bucket", "__subtask")
@@ -78,7 +78,7 @@ def main() -> int:
     n_ex = p2.count("Exchange")
     sections.append((
         f"Large-batch dedup + bucket write: exactly {n_ex} payload shuffle",
-        "`_prepare_changes_bucketed` fuses max-LSN dedup with the "
+        "`_dedup_changes(..., fanout=True)` fuses max-LSN dedup with the "
         "write's (bucket, subtask) fan-out partitioning; the write-side "
         "repartition collapses into the dedup's exchange (Exchange "
         "count must be 1).",
