@@ -44,12 +44,8 @@ def latest_keys(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn") -> Da
 
 
 def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
-                  strategy: str = "join", winners: DataFrame | None = None) -> DataFrame:
-    """Keep only the max-LSN event per key; preserves input schema.
-
-    ``winners`` lets the caller pass a precomputed/persisted
-    :func:`latest_keys` frame for the ``join`` strategy.
-    """
+                  strategy: str = "join") -> DataFrame:
+    """Keep only the max-LSN event per key; preserves input schema."""
     if strategy == "window":
         w = Window.partitionBy(*key).orderBy(F.col(lsn_col).desc())
         return (
@@ -64,7 +60,7 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
         )
         return agg.select(*key, *[F.col(f"__top.{c}").alias(c) for c in payload])
     if strategy == "join":
-        w = winners if winners is not None else latest_keys(df, key, lsn_col)
+        w = latest_keys(df, key, lsn_col)
         semi = df.join(F.broadcast(w), on=[*key, lsn_col], how="left_semi")
         # A redelivered event ROW (same key AND same lsn appearing twice
         # in one batch — e.g. an at-least-once shipper landing a chunk

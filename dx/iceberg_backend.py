@@ -18,7 +18,7 @@ created with:
 Surface parity: every method below matches the signature and column
 contract of ``dx.lake.LakeTable`` **as ReplayEngine actually invokes
 it** (``merge(changes, batch_id=, watermark_hi=, lineage=,
-crash_after_commit=, change_rows=, mode=)``,
+crash_after_commit=, mode=)``,
 ``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
 ``checkpoint_watermark()``, ``delta_depth()``, ``compact(buckets)``,
 ``meta()``, ``bucket_expr()``) — tests/test_units.py asserts the
@@ -216,7 +216,6 @@ class IcebergTable:
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
         keys: DataFrame | None = None,
-        change_rows: int | None = None,
         mode: str = "mor",
         update_mode: str = "full",
     ) -> str:
@@ -226,9 +225,9 @@ class IcebergTable:
         ``changes`` is the engine's prepared frame: max-LSN deduped
         (X2), columns = logical schema + ``op`` + ``_content_sha`` +
         ``_lsn`` (+ optional ``__bucket`` planning column, dropped —
-        Iceberg routes rows via its own bucket transform). ``keys`` /
-        ``change_rows`` are planning hints the Iceberg MERGE does not
-        need (its engine prunes files by partition + column stats).
+        Iceberg routes rows via its own bucket transform). ``keys`` is a
+        planning hint the Iceberg MERGE does not need (its engine prunes
+        files by partition + column stats).
         The payload-bearing source frame is never broadcast: multi-KB
         ``content`` per row over a whole batch can blow
         the broadcast size limit or OOM the driver.
@@ -237,7 +236,7 @@ class IcebergTable:
         mid-stream. ``crash_after_commit`` is a sandbox test hook; a
         real commit cannot inject a crash, so it is ignored.
         """
-        del keys, change_rows, mode, crash_after_commit  # planning hints / test hooks
+        del keys, mode, crash_after_commit  # planning hint / test hooks
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         src = changes.drop("__bucket") if "__bucket" in changes.columns else changes

@@ -801,7 +801,6 @@ class LakeTable:
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
         keys: DataFrame | None = None,
-        change_rows: int | None = None,
         mode: str = "cow",
         update_mode: str = "full",
     ) -> str:
@@ -856,7 +855,7 @@ class LakeTable:
         if mode == "mor":
             return self._merge_mor(
                 changes, batch_id, watermark_hi, lineage=lineage,
-                crash_after_commit=crash_after_commit, change_rows=change_rows,
+                crash_after_commit=crash_after_commit,
             )
         meta = self.meta()
         cols = self.columns()
@@ -943,9 +942,8 @@ class LakeTable:
             F.col("__bucket"),
         ).unionByName(upserts)
 
-        if change_rows is None:
-            # narrow count (key columns only) — never a payload pass
-            change_rows = (keys if keys is not None else key_set).count()
+        # narrow count (key columns only) — never a payload pass
+        change_rows = (keys if keys is not None else key_set).count()
         snap = self._child(
             meta, batch_id,
             lineage=lineage or [],
@@ -988,7 +986,6 @@ class LakeTable:
         watermark_hi: int,
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
-        change_rows: int | None = None,
     ) -> str:
         """Merge-on-read apply: append the batch's deduped change rows
         (D rows become ``_op='D'`` tombstones) as per-bucket delta
@@ -1023,16 +1020,14 @@ class LakeTable:
         # parquet-footer read job.
         from pyspark.sql import Observation
 
-        obs = Observation() if change_rows is None else None
-        if obs is not None:
-            stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
+        obs = Observation()
+        stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
         new_files = self._write_buckets(stored, sid)
         deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
         for b, fl in new_files.items():
             deltas.setdefault(b, []).extend(fl)
 
-        if change_rows is None:
-            change_rows = int(obs.get["rows"]) if new_files else 0
+        change_rows = int(obs.get["rows"]) if new_files else 0
         snap["deltas"] = deltas
         snap["file_stats"] = self._rebuild_file_stats(
             meta.get("file_stats", {}), self._collect_file_stats(new_files),
