@@ -215,19 +215,17 @@ class IcebergTable:
         watermark_hi: int,
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
-        keys: DataFrame | None = None,
         mode: str = "mor",
         update_mode: str = "full",
     ) -> str:
-        """LakeTable.merge (X3): the literal MERGE INTO the sandbox
-        rewrites as anti-join ∪ upserts / delta files.
+        """LakeTable.merge (X3): the literal MERGE INTO that LakeTable
+        writes as delta files (plus a compaction of the dirty buckets
+        for ``cow``).
 
         ``changes`` is the engine's prepared frame: max-LSN deduped
         (X2), columns = logical schema + ``op`` + ``_content_sha`` +
         ``_lsn`` (+ optional ``__bucket`` planning column, dropped —
-        Iceberg routes rows via its own bucket transform). ``keys`` is a
-        planning hint the Iceberg MERGE does not need (its engine prunes
-        files by partition + column stats).
+        Iceberg routes rows via its own bucket transform).
         The payload-bearing source frame is never broadcast: multi-KB
         ``content`` per row over a whole batch can blow
         the broadcast size limit or OOM the driver.
@@ -236,7 +234,7 @@ class IcebergTable:
         mid-stream. ``crash_after_commit`` is a sandbox test hook; a
         real commit cannot inject a crash, so it is ignored.
         """
-        del keys, mode, crash_after_commit  # planning hint / test hooks
+        del mode, crash_after_commit  # table property / test hook
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         src = changes.drop("__bucket") if "__bucket" in changes.columns else changes

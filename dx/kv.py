@@ -82,27 +82,31 @@ def kv_splits(
     key_col: str,
     n_splits: int,
     key_range: tuple | None = None,
+    where: str | None = None,
 ) -> list[tuple]:
     """Exact-quantile key-range boundaries: [lo, hi) per split, hi=None
     for the last (†hbase11xreader auto-split; quantiles instead of
     lexicographic midpoints so skewed keys still balance).
 
-    The splits balance RAW rows in the key range: ``read_kv``'s
-    ``where`` filter is not applied here, so a filter that is more
-    selective in one part of the key space leaves some tasks with
-    fewer surviving rows than others."""
+    The count and the boundary probes apply the same verbatim
+    ``where`` filter as the scan, so the splits balance the rows that
+    SURVIVE it, however unevenly it selects across the key space."""
     if key_col not in _columns(db_path, table):
         # checked, not left to the store: sqlite reads a quoted name
         # that matches no column as a string literal
         raise ValueError(f"unknown kv columns: [{key_col!r}]")
     key, tbl = _q(key_col), _q(table)
     lo_bound, hi_bound = key_range or (None, None)
-    pred, args = "", []
+    conds, args = [], []
     if lo_bound is not None:
-        pred, args = f" WHERE {key} >= ?", [lo_bound]
+        conds.append(f"{key} >= ?")
+        args.append(lo_bound)
     if hi_bound is not None:
-        pred += (" AND" if pred else " WHERE") + f" {key} < ?"
+        conds.append(f"{key} < ?")
         args.append(hi_bound)
+    if where:
+        conds.append(f"({where})")
+    pred = " WHERE " + " AND ".join(conds) if conds else ""
     with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
         n_rows = conn.execute(
             f"SELECT count(*) FROM {tbl}{pred}", args
@@ -151,7 +155,7 @@ def read_kv(
             dtypes[c] = pd_t
     schema = T.StructType(fields)
 
-    splits = kv_splits(db_path, table, key_col, n_splits, key_range)
+    splits = kv_splits(db_path, table, key_col, n_splits, key_range, where)
     sel = ", ".join(_q(c) for c in cols)
     key, tbl = _q(key_col), _q(table)
 

@@ -16,11 +16,10 @@ iceberg.apache.org/spec/):
   183 kept). A table assumes ONE writer process at a time.
 - Data is hash-bucketed by ``pmod(hash(repo, path), n_buckets)``
   (Spark's Murmur3 ``F.hash`` — deterministic across sessions, so
-  bucket routing is stable between snapshots). A MERGE rewrites ONLY
-  the buckets containing changed keys (copy-on-write at bucket/file
-  granularity) and carries every clean bucket's files forward by
-  reference — at 100 TB a batch touching 0.1% of keys reads+writes
-  ~0.1-1% of the table, never all of it.
+  bucket routing is stable between snapshots). A MERGE writes ONLY
+  the buckets containing changed keys and carries every clean
+  bucket's files forward by reference — at 100 TB a batch touching
+  0.1% of keys reads+writes ~0.1-1% of the table, never all of it.
 - Schema evolution uses Iceberg-style **field ids**: a column's
   physical parquet name is ``{name}__fid{id}`` (base columns keep
   plain names, fids 1-5). ``drop`` then re-``add`` of the same name
@@ -31,27 +30,25 @@ Scale notes (10^10 rows / 1000 executors):
 - Snapshot metadata holds one entry per bucket (choose ``n_buckets``
   so a bucket ≈ 0.5-1 GB; metadata stays KB-MB). Real Iceberg splits
   this into manifest files/lists — same information, two levels.
-- The cow MERGE anti-join broadcasts the changed-key set (a CDC
-  batch's keys ≪ the table); only dirty-bucket rows participate.
-- Two merge modes, mirroring Iceberg v1/v2. ``ReplayEngine`` always
-  writes ``mor``; ``cow`` is the path of direct ``merge()`` callers
-  (the default mode) and the only one that takes
-  ``update_mode='partial'`` (the ``cdc_partial_update`` query):
-  * ``cow`` (copy-on-write): dirty buckets are rewritten (anti-join
-    survivors ∪ upserts). Zero read amplification; write-amplified
-    when changes spread across many buckets.
-  * ``mor`` (merge-on-read): a batch appends only its own deduped
-    change rows (incl. ``_op='D'`` tombstones) as per-bucket *delta
-    files*; readers reconcile base ∪ deltas by max ``_lsn`` per key
-    and drop tombstones — Iceberg v2 equality-delete semantics with
-    the delete expressed as a newer row version. ``compact()`` folds
-    deltas back into the base (== the cow rewrite). For a CDC stream
-    building or hammering a table, mor makes batch cost O(batch),
-    not O(touched buckets' size). A small batch (one that arrives
-    without ``__bucket``) writes ONE delta file per dirty bucket, so
-    a reader pays per layer, not per write task; the (bucket,
-    subtask) write fan-out is kept for large pre-bucketed batches,
-    ``seed``, ``compact()`` and the cow rewrite.
+- One merge write path with two modes, mirroring Iceberg v1/v2.
+  Every merge appends the batch's deduped change rows (incl.
+  ``_op='D'`` tombstones) as per-bucket *delta files*; readers
+  reconcile base ∪ deltas by max ``_lsn`` per key and drop
+  tombstones — Iceberg v2 equality-delete semantics with the delete
+  expressed as a newer row version. ``compact()`` folds deltas back
+  into the base (Iceberg's ``rewrite_data_files``).
+  * ``mor`` (merge-on-read) stops there: batch cost is O(batch), not
+    O(touched buckets' size). ``ReplayEngine`` always writes ``mor``.
+  * ``cow`` (copy-on-write, the default of direct ``merge()``
+    callers) then compacts the buckets the append dirtied — zero
+    read amplification, two snapshots per merge. It is the only mode
+    that takes ``update_mode='partial'`` (the ``cdc_partial_update``
+    query).
+
+  A small batch (one that arrives without ``__bucket``) writes ONE
+  delta file per dirty bucket, so a reader pays per layer, not per
+  write task; the (bucket, subtask) write fan-out is kept for large
+  pre-bucketed batches, ``seed`` and ``compact()``.
 - Readers take the physical schema from the snapshot's column specs
   (stored names + types), never from file footers: a file written
   before a column existed reads it as null, a dropped column's
@@ -119,14 +116,15 @@ class CommitConflict(RuntimeError):
 APPLIED_BATCH_CAP = 4096
 
 # Write fan-out for large writes (the engine's bucket-window batches,
-# seed, compact() and the cow rewrite): a bucket is sub-split into
-# SUBTASK_SPREAD cells and a bucket write runs WRITE_TASK_MULT ×
-# shuffle-partitions tasks, so one slow/large bucket can't serialize a
-# stage whose task count equals the core count (the measured straggler
-# term of the 8→32 scaling pair). Cells are key-deterministic
-# (hash(path)), so dedup windows over (bucket, subtask) still see
-# whole keys. Small merge-on-read batches skip the fan-out: every
-# later read opens their delta files, so they write one per bucket.
+# seed, and compact(), which also ends every cow merge): a bucket is
+# sub-split into SUBTASK_SPREAD cells and a bucket write runs
+# WRITE_TASK_MULT × shuffle-partitions tasks, so one slow/large bucket
+# can't serialize a stage whose task count equals the core count (the
+# measured straggler term of the 8→32 scaling pair). Cells are
+# key-deterministic (hash(path)), so dedup windows over (bucket,
+# subtask) still see whole keys. Small merge-on-read batches skip the
+# fan-out: every later read opens their delta files, so they write one
+# per bucket.
 SUBTASK_SPREAD = 8
 WRITE_TASK_MULT = 4
 
@@ -800,7 +798,6 @@ class LakeTable:
         watermark_hi: int,
         lineage: list[dict] | None = None,
         crash_after_commit: bool = False,
-        keys: DataFrame | None = None,
         mode: str = "cow",
         update_mode: str = "full",
     ) -> str:
@@ -812,172 +809,110 @@ class LakeTable:
         matched ∧ op∈{I,U} → UPDATE; not-matched ∧ op∈{I,U} → INSERT;
         matched ∧ op=D → DELETE; not-matched ∧ D → no-op.
 
-        Physical plan: dirty buckets = distinct bucket ids of changes
-        (collect of ≤ n_buckets ints); only those buckets' files are
-        read; untouched rows survive via an anti-join on the broadcast
-        changed-key set; clean buckets carry
-        forward by file reference — zero IO.
+        Every merge is the merge-on-read append (:meth:`_merge_mor`).
+        ``mode='cow'`` then folds the buckets whose delta list the
+        append changed with :meth:`compact` — Iceberg's own cow result,
+        a delta write followed by ``rewrite_data_files``; clean buckets
+        keep their files and deltas by reference. A cow merge therefore
+        commits TWO snapshots, the delta commit and then the
+        compaction. A crash between the two leaves a correct
+        merge-on-read table whose watermark has already advanced, so
+        replay skips the batch and the next compaction folds it.
+        Returns the head snapshot id: the compaction's, or the
+        append's when there was nothing to fold.
 
         ``crash_after_commit`` is a test hook (T3b): raises right
-        after the atomic pointer swap to simulate dying before any
-        post-commit bookkeeping; recovery must converge.
+        after the delta commit to simulate dying before any
+        post-commit step; recovery must converge.
 
-        ``update_mode='partial'`` (X10, CoW only): change rows carry
-        NULL for columns the event did not touch; on matched keys each
-        column keeps its stored value unless the change provides one
-        (``coalesce(change, old)``), except rows flagged ``__reset``
-        (a mid-batch delete preceded them — see dedup.fold_partial),
-        which never inherit stored values. Contract: ``changes`` is
-        per-key folded (fold_partial) and ``_content_sha`` is NULL
-        exactly when ``content`` is NULL, so the sha always pairs with
-        whichever content value survives.
-
-        ``keys`` (optional): the deduped change-key set as a *small*
-        DataFrame with columns KEY. When given, dirty-bucket planning,
-        the anti-join, and the change count all run against it — the
-        full ``changes`` frame (which carries payload content) is then
-        evaluated exactly ONCE, in the bucket write. When absent, the
-        planning frames are derived as NARROW projections of
-        ``changes`` (key + bucket columns only — Catalyst prunes the
-        payload out of those re-scans); the payload is still never
-        persisted and still materializes exactly once, in the write.
-        Full-frame persist() here was measured 5-10× slower on multi-GB
-        batches (defeats column pruning, thrashes GC) — see the module
-        lesson; the narrow re-scan is the 100 TB shape.
+        ``update_mode='partial'`` (X10, cow only): change rows carry
+        NULL for columns the event did not touch; see
+        :meth:`_partial_images` for how they become full row images.
         """
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"unknown merge mode: {mode}")
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         if update_mode == "partial" and mode == "mor":
-            # MoR read-side reconcile is a max-LSN row pick; folding
-            # column-level partials at read time would push the fold
-            # into every reader. Partial updates take the CoW path.
+            # partial rows become full images against the stored state
+            # at merge time (_partial_images); only the cow path, the
+            # one direct callers use, offers that — the engine's mor
+            # batches always carry full rows.
             raise ValueError("update_mode='partial' requires mode='cow'")
-        if mode == "mor":
-            return self._merge_mor(
-                changes, batch_id, watermark_hi, lineage=lineage,
-                crash_after_commit=crash_after_commit,
-            )
-        meta = self.meta()
-        cols = self.columns()
+        # only cow reads the delta map before the append: mor keeps its
+        # one metadata read per batch
+        before = self.meta().get("deltas", {}) if mode == "cow" else None
+        if update_mode == "partial":
+            changes = self._partial_images(changes)
+        sid = self._merge_mor(
+            changes, batch_id, watermark_hi, lineage=lineage,
+            crash_after_commit=crash_after_commit,
+        )
+        if before is None:
+            return sid
+        after = self.meta(refresh=False)["deltas"]
+        dirty = [b for b, fl in after.items() if fl != before.get(b)]
+        return self.compact(dirty) or sid
 
+    def _partial_images(self, changes: DataFrame) -> DataFrame:
+        """Full row images of a folded partial-update batch (X10).
+
+        On matched keys each column keeps its stored value unless the
+        change provides one (``coalesce(change, old)``), except rows
+        flagged ``__reset`` (a mid-batch delete preceded them — see
+        dedup.fold_partial), which never inherit stored values;
+        ``_lsn`` is always the fold's. Contract: ``changes`` is per-key
+        folded (fold_partial) and ``_content_sha`` is NULL exactly when
+        ``content`` is NULL, so the sha always pairs with whichever
+        content value survives. ``op='D'`` rows pass through as
+        tombstones.
+
+        Stored state is read only where the batch can hit it: the
+        dirty buckets, with files pruned by the snapshot's per-file
+        key bounds against the batch's key box, semi-joined down to the
+        batch's broadcast key set (exactly ``_bucket_state``'s
+        key_bounds contract)."""
+        cols = self.columns()
         if "__bucket" not in changes.columns:
             changes = changes.withColumn("__bucket", self.bucket_expr())
-        if keys is None:
-            key_set = changes.select(*KEY)  # narrow: payload pruned
-            bucket_src = changes.select("__bucket")
-        else:
-            key_set = keys.select(*KEY)
-            bucket_src = key_set.select(self.bucket_expr().alias("__bucket"))
         dirty = sorted(
-            r[0] for r in bucket_src.distinct().collect()
+            str(r[0]) for r in changes.select("__bucket").distinct().collect()
         )
-        dirty_s = [str(b) for b in dirty]
-        old = self._bucket_state(dirty_s, cols).withColumn(
-            "__bucket", self.bucket_expr()
-        )
-
-        key_set = F.broadcast(key_set)
-        survivors = old.join(key_set, on=KEY, how="left_anti")
-        if update_mode == "partial":
-            # Matched rows need the stored values to coalesce into.
-            # old is pruned to the batch's keys FIRST (the same
-            # broadcast key set the anti-join uses, so the big stored
-            # side never shuffles); the then-tiny hit set joins the
-            # folded changes. Two pruned scans of the dirty buckets
-            # beat one scan + a full shuffle of their state.
-            # The hit-side scan additionally skips FILES via the
-            # snapshot's per-file key bounds (one tiny agg over the
-            # key set — VERDICT r4 #4): only files whose (repo, path)
-            # ranges intersect the batch's key box are opened; the
-            # semi-join below restricts to in-bounds keys, which is
-            # exactly _bucket_state's key_bounds contract. survivors
-            # stays unpruned — the anti-join must see EVERY stored row
-            # to carry it forward.
-            kb = key_set.agg(
-                F.min("repo"), F.max("repo"), F.min("path"), F.max("path")
-            ).collect()[0]
-            old_for_hits = (
-                self._bucket_state(
-                    dirty_s, cols,
-                    key_bounds=(kb[0], kb[1], kb[2], kb[3]),
-                ).withColumn("__bucket", self.bucket_expr())
-                if kb[0] is not None else old
-            )
-            reset = (F.col("__reset") if "__reset" in changes.columns
-                     else F.lit(False))
-            ch = changes.filter(F.col("op") != "D")
-            old_hit = old_for_hits.join(key_set, on=KEY, how="left_semi").select(
+        keys = changes.select(*KEY)
+        kb = keys.agg(
+            F.min("repo"), F.max("repo"), F.min("path"), F.max("path")
+        ).collect()[0]
+        old_hit = (
+            self._bucket_state(dirty, cols,
+                               key_bounds=tuple(kb) if kb[0] is not None else None)
+            .join(F.broadcast(keys), on=KEY, how="left_semi")
+            .select(
                 *KEY,
                 *[F.col(c.name).alias(f"__old_{c.name}")
                   for c in cols if c.name not in KEY],
                 *[F.col(n).alias(f"__old_{n}") for n, _ in SYSTEM_COLUMNS],
             )
-            j = ch.join(old_hit, on=KEY, how="left")
-            sel = [F.col(k) for k in KEY]
-            for c in cols:
-                if c.name in KEY:
-                    continue
-                merged = F.when(reset, F.col(c.name)).otherwise(
-                    F.coalesce(F.col(c.name), F.col(f"__old_{c.name}"))
-                )
-                sel.append(merged.alias(c.name))
-            for n, _t in SYSTEM_COLUMNS:
-                if n == "_lsn":
-                    sel.append(F.col("_lsn"))  # always the fold's LSN
-                    continue
-                merged = F.when(reset, F.col(n)).otherwise(
-                    F.coalesce(F.col(n), F.col(f"__old_{n}"))
-                )
-                sel.append(merged.alias(n))
-            upserts = j.select(*sel, F.col("__bucket"))
-        else:
-            upserts = changes.filter(F.col("op") != "D").select(
-                *[F.col(c.name) for c in cols],
-                *[F.col(n) for n, _ in SYSTEM_COLUMNS],
-                F.col("__bucket"),
-            )
-        unioned = survivors.select(
+        )
+        reset = (F.col("__reset") if "__reset" in changes.columns
+                 else F.lit(False))
+        sel = [F.col(k) for k in KEY]
+        for name in [c.name for c in cols if c.name not in KEY] + [
+            n for n, _ in SYSTEM_COLUMNS if n != "_lsn"
+        ]:
+            sel.append(F.when(reset, F.col(name)).otherwise(
+                F.coalesce(F.col(name), F.col(f"__old_{name}"))
+            ).alias(name))
+        images = (
+            changes.filter(F.col("op") != "D")
+            .join(old_hit, on=KEY, how="left")
+            .select(*sel, "_lsn", "op", "__bucket")
+        )
+        tombstones = changes.filter(F.col("op") == "D").select(
             *[F.col(c.name) for c in cols],
             *[F.col(n) for n, _ in SYSTEM_COLUMNS],
-            F.col("__bucket"),
-        ).unionByName(upserts)
-
-        # narrow count (key columns only) — never a payload pass
-        change_rows = (keys if keys is not None else key_set).count()
-        snap = self._child(
-            meta, batch_id,
-            lineage=lineage or [],
-            watermark=max(int(meta["watermark"]), int(watermark_hi)),
-            row_count=None,  # exact count maintained lazily; see read().count()
-            merge_stats={
-                "dirty_buckets": len(dirty),
-                "total_buckets": self.n_buckets,
-                "change_rows": int(change_rows),
-                "mode": "cow",
-            },
+            "op", "__bucket",
         )
-        sid = snap["snapshot_id"]
-        new_files = self._write_buckets(
-            self._stored_select(self.with_subtask(unioned), cols), sid,
-            num_write_partitions=max(
-                1, min(len(dirty) * SUBTASK_SPREAD, self.write_partitions(True))
-            ),
-        )
-        files = {b: fl for b, fl in meta["files"].items() if b not in dirty_s}
-        for b in dirty_s:
-            files[b] = new_files.get(b, [])  # bucket may be emptied by deletes
-        snap["files"] = files
-        snap["deltas"] = {
-            b: fl for b, fl in meta.get("deltas", {}).items() if b not in dirty_s
-        }  # dirty buckets' deltas are folded into the rewrite
-        snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), self._collect_file_stats(new_files),
-            files, snap["deltas"],
-        )
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
-        if crash_after_commit:
-            raise RuntimeError("injected crash after commit point (T3b)")
-        return sid
+        return images.unionByName(tombstones)
 
     def _merge_mor(
         self,

@@ -74,6 +74,28 @@ def test_kv_skewed_keys_still_balance(spark, tmp_path):
     assert len(splits) == 4 and n == 250  # perfectly even despite the skew
 
 
+def test_kv_splits_balance_rows_surviving_where(spark, kv_db):
+    """A filter that keeps only the upper half of the key space must
+    not leave the lower splits empty: the count and boundary probes
+    apply ``where``, so the splits balance the rows that survive it."""
+    where = "size >= 250"  # size = k / 2: keeps k in [500, 1000)
+    surviving = range(500, 1000)
+    splits = kv_splits(kv_db, "files", "k", 4, where=where)
+    counts = [
+        sum(1 for k in surviving
+            if (lo is None or k >= lo) and (hi is None or k < hi))
+        for lo, hi in splits
+    ]
+    assert len(splits) == 4  # unique keys: no boundary merges
+    assert all(abs(c - len(surviving) / 4) <= 1 for c in counts), counts
+    df = read_kv(spark, kv_db, table="files", key_col="k", columns=["k"],
+                 where=where, n_splits=4)
+    per_task = sorted(
+        r["count"] for r in df.groupBy(F.spark_partition_id()).count().collect()
+    )
+    assert per_task == [125, 125, 125, 125]
+
+
 def test_kv_key_range_and_verbatim_where(spark, kv_db):
     df = read_kv(
         spark, kv_db, table="files", key_col="k",

@@ -5,8 +5,8 @@
   the HEAD only);
 - expire_snapshots GC bounds metadata/data growth while keeping the
   retained window time-travelable and replay convergent;
-- neither the large-batch replay nor a cow merge without a key set
-  persists the payload frame (the measured 5-10× anti-pattern).
+- neither the large-batch replay nor a cow merge persists the payload
+  frame (the measured 5-10× anti-pattern).
 """
 
 from __future__ import annotations
@@ -39,6 +39,20 @@ def test_o1_metadata_reads_per_batch(spark, tmp_path):
 
     # the recent-batch window is carried in the head snapshot itself
     assert "b999" in table.applied_batch_ids()
+
+
+def test_mor_merge_reads_metadata_once(spark, tmp_path):
+    """A merge-on-read merge costs exactly one snapshot-file read: only
+    a cow merge reads the delta map before its append."""
+    table = LakeTable.create(spark, str(tmp_path / "mor1"), n_buckets=4)
+    changes = spark.createDataFrame(
+        [("r", "a", "c1", "py", "v1", 1, "U")],
+        "repo string, path string, commit string, lang string, "
+        "content string, _lsn long, op string",
+    ).withColumn("_content_sha", F.unhex(F.sha2(F.col("content"), 256)))
+    table.meta_file_reads = 0
+    table.merge(changes, batch_id="b1", watermark_hi=1, mode="mor")
+    assert table.meta_file_reads == 1
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
@@ -81,11 +95,10 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     """broadcast_key_limit=0 forces the (bucket, subtask) write
-    fan-out; a cow merge with keys=None used to persist() the full
-    payload on it (VERDICT r1 'what's wrong' #2). Now NO
-    DataFrame.persist happens on the replay or on a direct no-keys cow
-    merge of its bucket-window frame, and the result still matches the
-    oracle."""
+    fan-out; a cow merge used to persist() the full payload on it
+    (VERDICT r1 'what's wrong' #2). NO DataFrame.persist happens on the
+    replay or on a direct cow merge (delta append + compaction) of its
+    bucket-window frame, and the result still matches the oracle."""
     calls: list[str] = []
     orig = psd.DataFrame.persist
 
@@ -107,7 +120,7 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     lo, head = table.watermark(), int(changelog["lsn"].max())
     events = log.filter((F.col("lsn") > lo) & (F.col("op") != "DDL"))
     table.merge(engine._dedup_changes(events, fanout=True), batch_id="cow-tail",
-                watermark_hi=head, keys=None, mode="cow")
+                watermark_hi=head, mode="cow")
 
     assert calls == [], f"unexpected persist() of {calls}"
     assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \

@@ -45,13 +45,19 @@ def canon(df) -> tuple[int, list[str], str]:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:]) if len(sys.argv) > 2 else (
-        set(sys.argv[1:2]) - {sf_dir} or None
-    )
+    only = set(sys.argv[1:]) - {sf_dir}
+
+    import __spark_entry__ as entry
+
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # checked before Spark starts: a mistyped name must not "pass"
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
+    selected = {n: fn for n, fn in qs.items() if not only or n in only}
 
     import duckdb
 
-    import __spark_entry__ as entry
     from dx.session import get_spark
 
     spark = get_spark("check-entry", master="local[8]", shuffle_partitions=8,
@@ -62,11 +68,8 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name, fn in selected.items():
         try:
             sdf = fn(spark, sf_dir)
             s_n, s_cols, s_h = canon(sdf)
@@ -97,7 +100,7 @@ def main():
             print(f"✗ {name}: VALUE HASH mismatch ({s_n} rows)")
         else:
             print(f"✓ {name}: {s_n} rows, hash match")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok")
+    print(f"\n{len(selected) - len(failures)}/{len(selected)} ok")
     if failures:
         sys.exit(1)
 
