@@ -16,7 +16,10 @@ iceberg.apache.org/spec/):
   183 kept). A table assumes ONE writer process at a time.
 - Data is hash-bucketed by ``pmod(hash(repo, path), n_buckets)``
   (Spark's Murmur3 ``F.hash`` — deterministic across sessions, so
-  bucket routing is stable between snapshots). A MERGE writes ONLY
+  bucket routing is stable between snapshots). Writers evaluate it in
+  Spark; a point read evaluates the same hash in Python
+  (``spark_hash``), checked against ``F.hash`` once per process, so a
+  lookup never needs a Spark job to find its bucket. A MERGE writes ONLY
   the buckets containing changed keys and carries every clean
   bucket's files forward by reference — at 100 TB a batch touching
   0.1% of keys reads+writes ~0.1-1% of the table, never all of it.
@@ -63,6 +66,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import time
 import uuid
 from dataclasses import asdict, dataclass
@@ -100,6 +104,86 @@ class ColumnSpec:
         if self.fid <= len(BASE_COLUMNS) or self.name.startswith("_"):
             return self.name
         return f"{self.name}__fid{self.fid}"
+
+
+def _physical_columns(columns: list[ColumnSpec],
+                      include_op: bool = False) -> list[tuple[str, str]]:
+    """(stored name, type) of every column a data file may hold."""
+    physical = [(c.stored_name, c.type) for c in columns] + SYSTEM_COLUMNS
+    if include_op:
+        physical.append(("_op", "string"))
+    return physical
+
+
+def _ddl(physical: list[tuple[str, str]]) -> str:
+    return ", ".join("`{}` {}".format(n.replace("`", "``"), t) for n, t in physical)
+
+
+# Spark's ``hash()`` is Murmur3_x86_32 (seed 42) chained across its
+# arguments: each non-null argument is hashed with the previous result
+# as its seed. Strings go through ``hashUnsafeBytes`` — whole 4-byte
+# little-endian words, then each tail byte as a SIGNED int (not the
+# canonical Murmur3 tail), then the length finalizer.
+_M32 = 0xFFFFFFFF
+_HASH_SEED = 42
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix_h1(h1: int, k1: int) -> int:
+    k1 = _rotl32((k1 * 0xCC9E2D51) & _M32, 15)
+    h1 = _rotl32(h1 ^ ((k1 * 0x1B873593) & _M32), 13)
+    return (h1 * 5 + 0xE6546B64) & _M32
+
+
+def spark_hash(*values: str) -> int:
+    """``F.hash(*values)`` for non-null strings, evaluated in Python
+    (signed 32-bit, like Spark's)."""
+    h1 = _HASH_SEED
+    for v in values:
+        data = v.encode("utf-8")
+        aligned = len(data) - len(data) % 4
+        for (word,) in struct.iter_unpack("<I", data[:aligned]):
+            h1 = _mix_h1(h1, word)
+        for b in data[aligned:]:
+            h1 = _mix_h1(h1, (b - 256 if b > 127 else b) & _M32)
+        h1 ^= len(data)
+        h1 ^= h1 >> 16
+        h1 = (h1 * 0x85EBCA6B) & _M32
+        h1 ^= h1 >> 13
+        h1 = (h1 * 0xC2B2AE35) & _M32
+        h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 & 0x80000000 else h1
+
+
+# Keys covering the port's edge cases: empty strings, every length mod
+# 4, multi-byte UTF-8 tails (negative signed bytes) and 4-byte emoji.
+_HASH_CHECK_KEYS = [
+    ("", ""), ("a", "bc"), ("repo", "src/main.py"),
+    ("ünï", "çødé/ñ"), ("😀", "x/😀y"), ("org/name-1", "dir/a.txt2"),
+]
+_hash_port_checked = False
+
+
+def _check_hash_port(spark: SparkSession) -> None:
+    """Once per process: compare ``spark_hash`` with ``F.hash`` on
+    ``_HASH_CHECK_KEYS`` in one 1-row job; raise on any mismatch."""
+    global _hash_port_checked
+    if _hash_port_checked:
+        return
+    row = spark.range(1).select(
+        *[F.hash(F.lit(r), F.lit(p)) for r, p in _HASH_CHECK_KEYS]
+    ).collect()[0]
+    bad = [(k, spark_hash(*k), want)
+           for k, want in zip(_HASH_CHECK_KEYS, row) if spark_hash(*k) != want]
+    if bad:
+        raise RuntimeError(
+            f"spark_hash disagrees with Spark's hash() on {bad} "
+            "(key, port, Spark): point reads would pick the wrong bucket"
+        )
+    _hash_port_checked = True
 
 
 class CommitConflict(RuntimeError):
@@ -316,12 +400,7 @@ class LakeTable:
         physically; base files read as 'U'), so base and delta files
         can share one read.
         """
-        physical = [(c.stored_name, c.type) for c in columns] + SYSTEM_COLUMNS
-        if include_op:
-            physical.append(("_op", "string"))
-        ddl = ", ".join(
-            "`{}` {}".format(n.replace("`", "``"), t) for n, t in physical
-        )
+        ddl = _ddl(_physical_columns(columns, include_op))
         df = (self.spark.read.schema(ddl).parquet(*files) if files
               else self.spark.createDataFrame([], ddl))
         sel = [F.col(c.stored_name).alias(c.name) for c in columns]
@@ -384,16 +463,14 @@ class LakeTable:
         return df
 
     def _bucket_of(self, repo: str, path: str) -> int:
-        """Bucket id of one key — evaluated through the SAME Spark
-        hash expression the writers use (one 1-row local job; a
-        driver-side reimplementation of Murmur3 would be a silent-skew
-        bug waiting for a Spark version bump)."""
-        row = (
-            self.spark.range(1)
-            .select(self.bucket_expr(F.lit(repo), F.lit(path)).alias("b"))
-            .collect()
-        )
-        return int(row[0]["b"])
+        """Bucket id of one key, computed on the driver: ``spark_hash``
+        reproduces the writers' ``bucket_expr`` bit for bit, and Python's
+        ``%`` with a positive divisor is Spark's ``pmod``. The first call
+        in a process checks the port against ``F.hash`` once
+        (``_check_hash_port``), so a Spark version that changes the hash
+        fails loudly instead of routing lookups to the wrong bucket."""
+        _check_hash_port(self.spark)
+        return spark_hash(repo, path) % self.n_buckets
 
     def read_point(self, repo: str, path: str, snapshot_id: str | None = None,
                    include_system: bool = False) -> DataFrame:
@@ -405,11 +482,19 @@ class LakeTable:
         accumulates one delta file per batch, and a point read that
         scans them all is O(batches).
 
-        Reconcile is one stage: the newest version of one key is a
-        top-1 by ``_lsn`` (TakeOrderedAndProject — no exchange),
-        dropped if it is a tombstone. With no delta file left after
-        pruning, the base holds at most one row per key and a plain
-        filter suffices."""
+        No Spark job runs: the bucket id is computed in Python, the
+        surviving files are read with one ``pyarrow.dataset`` scan under
+        the snapshot's physical schema (the ``_read_files`` contract: a
+        column a file predates reads as null, a dropped column is never
+        selected) with the key filter pushed down to the row groups, and
+        the newest version by ``_lsn`` wins unless it is a tombstone
+        (base files carry no ``_op``; null means a base row). The result
+        is an Arrow-backed local relation with ``read()``'s schema, so
+        its ``collect()`` launches no job either."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DataType, StructField, StructType
+
         if snapshot_id is None:
             meta = self.meta()
             cols = self.columns()
@@ -417,27 +502,28 @@ class LakeTable:
             meta = self.snapshot_meta(snapshot_id)
             cols = [ColumnSpec(**c) for c in meta["columns"]]
         pf = self._point_files(meta, str(self._bucket_of(repo, path)), repo, path)
-        is_key = (F.col("repo") == repo) & (F.col("path") == path)
-        if not pf["deltas_pruned"]:
-            df = self._read_files(pf["base_pruned"], cols).filter(is_key)
-        else:
-            df = (
-                self._read_files(pf["base_pruned"] + pf["deltas_pruned"], cols,
-                                 include_op=True)
-                .filter(is_key)
-                .orderBy(F.col("_lsn").desc())
-                .limit(1)
-                .filter(F.col("_op") != "D")
-                .drop("_op")
-            )
-        if not include_system:
-            df = df.drop(*[n for n, _ in SYSTEM_COLUMNS])
-        return df
+        physical = _physical_columns(cols, include_op=True)
+        schema = DataType.fromDDL(_ddl(physical))
+        found = ds.dataset(
+            pf["base_pruned"] + pf["deltas_pruned"],
+            schema=to_arrow_schema(schema), format="parquet",
+        ).to_table(filter=(ds.field("repo") == repo) & (ds.field("path") == path))
+        if found.num_rows:
+            lsns = found.column("_lsn").to_pylist()
+            found = found.slice(max(range(len(lsns)), key=lsns.__getitem__), 1)
+            if found.column("_op")[0].as_py() == "D":
+                found = found.slice(0, 0)
+        names = [c.name for c in cols]
+        if include_system:
+            names += [n for n, _ in SYSTEM_COLUMNS]
+        fields = [StructField(name, f.dataType) for name, f in zip(names, schema.fields)]
+        found = found.select(list(range(len(names)))).rename_columns(names)
+        return self.spark.createDataFrame(found, StructType(fields))
 
     def point_files(self, repo: str, path: str) -> dict:
         """Pruning decision for a point key (observability + test
         surface): which of the key's bucket's files survive the
-        stats-based skip."""
+        stats-based skip. Metadata only — no Spark job."""
         meta = self.meta()
         return self._point_files(meta, str(self._bucket_of(repo, path)), repo, path)
 
@@ -457,7 +543,9 @@ class LakeTable:
     def snapshot_meta(self, snapshot_id: str) -> dict:
         """Metadata of a committed snapshot (raises if GC-expired)."""
         with open(self._snap_path(snapshot_id)) as f:
-            return json.load(f)
+            meta = json.load(f)
+        self.meta_file_reads += 1
+        return meta
 
     def changes(self, from_snapshot: str,
                 to_snapshot: str | None = None) -> DataFrame:

@@ -134,10 +134,13 @@ def test_small_mor_batch_writes_one_delta_file_per_bucket(spark, tmp_path):
         before = {b: len(fl) for b, fl in deltas.items()}
 
 
-def test_deep_mor_point_read_is_two_jobs(spark, tmp_path, jobs_of):
-    """A point read of a depth-7 merge-on-read table is the bucket-id
-    job plus one reconcile job: no footer-schema job, no file-listing
-    job, no shuffle stage for a result of at most one row."""
+def test_deep_mor_point_read_launches_no_job(spark, tmp_path, jobs_of):
+    """A point read of a depth-7 merge-on-read table runs no Spark job
+    at all — live, tombstoned and absent keys alike, at the head and as
+    of a snapshot, and so does ``point_files()``: the bucket id is
+    hashed in Python, the pruned files are read with pyarrow, and the
+    result is a local relation. Only the first lookup in a process
+    pays the one-row hash-port check, run here up front."""
     table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
     for i in range(7):
         # overlapping key ranges: every layer rewrites half the last
@@ -148,12 +151,20 @@ def test_deep_mor_point_read_is_two_jobs(spark, tmp_path, jobs_of):
         ]
         table.merge(_changes(spark, rows), batch_id=f"b{i + 1}",
                     watermark_hi=1000 * (i + 1) + 999, mode="mor")
+        if i == 2:
+            mid = table.meta()["snapshot_id"]
     assert max(table.delta_depth().values()) >= 7
+    table.point_files("repo-k", "k/00905")          # one-time hash check
     for path, want in [("k/00905", "v4005"), ("k/00910", None), ("k/99999", None)]:
         out = []
         assert jobs_of(lambda: out.extend(
-            table.read_point("repo-k", path).collect())) <= 2
+            table.read_point("repo-k", path).collect())) == 0
         assert [r["content"] for r in out] == ([want] if want else [])
+    old = []
+    assert jobs_of(lambda: old.extend(
+        table.read_point("repo-k", "k/00905", snapshot_id=mid).collect())) == 0
+    assert [r["content"] for r in old] == ["v3305"]
+    assert jobs_of(lambda: table.point_files("repo-k", "k/00905")) == 0
 
 
 def _evolving_changes(spark, rows, **cols):
@@ -236,3 +247,34 @@ def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
     assert_point_equals_scan()
     assert point("e/0001")["stars"] is None
     assert point("e/0006")["stars"] == "new-6"
+
+
+def test_point_read_of_bigint_column_matches_scan(spark, tmp_path):
+    """A non-string evolved column (``bigint``) reads back through the
+    Arrow point path with the scan's value AND type: for a file written
+    before the column existed (null) and one written after it. The
+    point result's schema equals ``read()``'s, with and without the
+    system columns, so a type-mapping slip cannot pass as equal dicts."""
+    table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2)
+    r = "repo-n"
+    table.merge(_changes(spark, _batch("n", 10, lsn0=100)),
+                batch_id="b1", watermark_hi=199, mode="mor")
+    table.alter("add_column", "n", "bigint", batch_id="ddl1", at_lsn=200)
+    table.merge(
+        _changes(spark, [(r, "n/0003", "u3", 301, "U"), (r, "n/0011", "u11", 302, "U")])
+        .withColumn("n", F.when(F.col("path") == "n/0003", F.lit(3 << 40))
+                    .otherwise(F.lit(-7)).cast("bigint")),
+        batch_id="b2", watermark_hi=399, mode="mor",
+    )
+    for include_system in (True, False):
+        full = table.read(include_system=include_system)
+        for path, want in [("n/0001", None), ("n/0003", 3 << 40), ("n/0011", -7)]:
+            point = table.read_point(r, path, include_system=include_system)
+            assert point.schema == full.schema
+            rows = point.collect()
+            scanned = full.filter(
+                (F.col("repo") == r) & (F.col("path") == path)).collect()
+            assert [x.asDict() for x in rows] == [x.asDict() for x in scanned]
+            assert len(rows) == 1 and rows[0]["n"] == want
+        assert table.read_point(r, "n/9999", include_system=include_system
+                                ).schema == full.schema

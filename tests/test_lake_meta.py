@@ -55,6 +55,23 @@ def test_mor_merge_reads_metadata_once(spark, tmp_path):
     assert table.meta_file_reads == 1
 
 
+def test_snapshot_reads_are_counted(spark, tmp_path):
+    """Opening a snapshot by id counts as a metadata read like
+    ``meta()``: a time-travel point read costs 1, ``changes(a, b)``
+    costs 2."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    a = table.meta()["snapshot_id"]
+    table.checkpoint_watermark("b1", 1)
+    b = table.meta()["snapshot_id"]
+    table.read_point("repo", "path")                 # one-time hash check
+    table.meta_file_reads = 0
+    table.read_point("repo", "path", snapshot_id=a).collect()
+    assert table.meta_file_reads == 1
+    table.meta_file_reads = 0
+    table.changes(a, b)
+    assert table.meta_file_reads == 2
+
+
 def test_expire_snapshots_gc(spark, tmp_path):
     seed_df = gen_seed_table(n_repos=2, paths_per_repo=12, seed=7)
     changelog = gen_changelog(seed_df, n_events=400, seed=7)
