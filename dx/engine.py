@@ -25,8 +25,10 @@ Per batch (SURVEY.md §3.4):
      hot bucket can't straggle the stage
   7. MERGE into the lake table [X3], merge-on-read: append
      per-bucket delta files + tombstones (one file per dirty bucket
-     without the fan-out), auto-compact at depth ≥ compact_threshold
-  8. snapshot commit = atomic pointer swap; manifest is derived  [X5]
+     without the fan-out) in ONE snapshot commit; auto-compact at
+     depth ≥ compact_threshold
+  8. snapshot commit = pointer swap, atomic for readers with one
+     writer process (not a compare-and-swap); manifest is derived [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 
 Crash-resume: every step before 8 is side-effect-free on committed
@@ -289,9 +291,11 @@ class ReplayEngine:
             batch_id=batch_id,
             watermark_hi=hi,
             lineage=lineage,
-            crash_after_commit=crash_after_commit,
-            mode="mor",
         )
+        if crash_after_commit:
+            # merge's one commit is its last step: dying here is dying
+            # right after the commit point, before any bookkeeping
+            raise RuntimeError("injected crash after commit point (T3b)")
         n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
         applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)

@@ -16,10 +16,9 @@ created with:
       dx/main.py ...
 
 Surface parity: every method below matches the signature and column
-contract of ``dx.lake.LakeTable`` **as ReplayEngine actually invokes
-it** (``merge(changes, batch_id=, watermark_hi=, lineage=,
-crash_after_commit=, mode=)``,
-``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
+contract of ``dx.lake.LakeTable`` (``merge(changes, batch_id,
+watermark_hi, lineage=None, update_mode="full")``, one commit per
+call on both backends; ``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
 ``checkpoint_watermark()``, ``delta_depth()``, ``compact(buckets)``,
 ``meta()``, ``bucket_expr()``) — tests/test_units.py asserts the
 signatures stay compatible, so a cluster deployment cannot fail on a
@@ -35,7 +34,8 @@ Semantics mapping (each method notes its sandbox equivalent):
 - ``write.distribution-mode=hash`` + ``bucket(N, repo, path)``
   partitioning reproduces the pmod(hash(repo,path), N) bucket routing.
 - merge-on-read delete files (``write.merge.mode=merge-on-read``)
-  correspond to LakeTable's ``mor`` delta files + tombstones.
+  correspond to LakeTable's delta files + tombstones; LakeTable's
+  ``compact()`` is ``rewrite_data_files``.
 - batch_id / watermark / lineage ride in **snapshot summary
   properties**: Iceberg stamps any session conf prefixed
   ``snapshot-property.`` into the commit summary, which is the exact
@@ -214,13 +214,10 @@ class IcebergTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        crash_after_commit: bool = False,
-        mode: str = "mor",
         update_mode: str = "full",
     ) -> str:
         """LakeTable.merge (X3): the literal MERGE INTO that LakeTable
-        writes as delta files (plus a compaction of the dirty buckets
-        for ``cow``).
+        writes as delta files in one commit.
 
         ``changes`` is the engine's prepared frame: max-LSN deduped
         (X2), columns = logical schema + ``op`` + ``_content_sha`` +
@@ -229,12 +226,9 @@ class IcebergTable:
         The payload-bearing source frame is never broadcast: multi-KB
         ``content`` per row over a whole batch can blow
         the broadcast size limit or OOM the driver.
-        ``mode`` is fixed at table level (write.merge.mode property) —
-        per-batch override would be an ALTER, deliberately not done
-        mid-stream. ``crash_after_commit`` is a sandbox test hook; a
-        real commit cannot inject a crash, so it is ignored.
+        Copy-on-write vs merge-on-read is fixed per table (the
+        write.merge.mode property), not per batch.
         """
-        del mode, crash_after_commit  # table property / test hook
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
         src = changes.drop("__bucket") if "__bucket" in changes.columns else changes

@@ -33,20 +33,15 @@ Scale notes (10^10 rows / 1000 executors):
 - Snapshot metadata holds one entry per bucket (choose ``n_buckets``
   so a bucket ≈ 0.5-1 GB; metadata stays KB-MB). Real Iceberg splits
   this into manifest files/lists — same information, two levels.
-- One merge write path with two modes, mirroring Iceberg v1/v2.
-  Every merge appends the batch's deduped change rows (incl.
-  ``_op='D'`` tombstones) as per-bucket *delta files*; readers
-  reconcile base ∪ deltas by max ``_lsn`` per key and drop
-  tombstones — Iceberg v2 equality-delete semantics with the delete
-  expressed as a newer row version. ``compact()`` folds deltas back
-  into the base (Iceberg's ``rewrite_data_files``).
-  * ``mor`` (merge-on-read) stops there: batch cost is O(batch), not
-    O(touched buckets' size). ``ReplayEngine`` always writes ``mor``.
-  * ``cow`` (copy-on-write, the default of direct ``merge()``
-    callers) then compacts the buckets the append dirtied — zero
-    read amplification, two snapshots per merge. It is the only mode
-    that takes ``update_mode='partial'`` (the ``cdc_partial_update``
-    query).
+- One merge write path, Iceberg v2 merge-on-read. Every merge appends
+  the batch's deduped change rows (incl. ``_op='D'`` tombstones) as
+  per-bucket *delta files* and commits ONE snapshot, so batch cost is
+  O(batch), not O(touched buckets' size); readers reconcile base ∪
+  deltas by max ``_lsn`` per key and drop tombstones — Iceberg v2
+  equality-delete semantics with the delete expressed as a newer row
+  version. ``compact()`` folds deltas back into the base (Iceberg's
+  ``rewrite_data_files``); a caller that wants the copy-on-write
+  result calls it after the merge, as a second commit.
 
   A small batch (one that arrives without ``__bucket``) writes ONE
   delta file per dirty bucket, so a reader pays per layer, not per
@@ -66,6 +61,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import struct
 import time
 import uuid
@@ -199,9 +195,9 @@ class CommitConflict(RuntimeError):
 # and keeps snapshot JSON O(1) regardless of run length.
 APPLIED_BATCH_CAP = 4096
 
-# Write fan-out for large writes (the engine's bucket-window batches,
-# seed, and compact(), which also ends every cow merge): a bucket is
-# sub-split into SUBTASK_SPREAD cells and a bucket write runs
+# Write fan-out for large writes (the engine's wide bucket-window
+# batches, seed, and compact()): a bucket is sub-split into
+# SUBTASK_SPREAD cells and a bucket write runs
 # WRITE_TASK_MULT × shuffle-partitions tasks, so one slow/large bucket
 # can't serialize a stage whose task count equals the core count (the
 # measured straggler term of the 8→32 scaling pair). Cells are
@@ -215,6 +211,15 @@ WRITE_TASK_MULT = 4
 
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
+        # the commit is an os.replace, and file discovery, footer stats,
+        # point reads and GC go through the local filesystem: a URI root
+        # (Hadoop also writes file:/x with one slash) would split
+        # metadata (cwd-relative) from data (Spark's URI)
+        if "://" in root or re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", root):
+            raise ValueError(
+                f"LakeTable needs a local filesystem root, got {root!r}; "
+                "use dx.iceberg_backend.IcebergTable for object stores"
+            )
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
@@ -668,17 +673,11 @@ class LakeTable:
     # ---------------------------------------------------------------- write
     def _write_buckets(self, df: DataFrame, snapshot_id: str,
                        num_write_partitions: int | None = None) -> dict[str, list[str]]:
-        """Write df (with __bucket col) partitioned by bucket; return files map.
-
-        Committed-file discovery is scheme-aware: a plain posix root
-        uses ``os.listdir`` (no extra Spark job on the hot path); any
-        URI-schemed root (s3a://, hdfs://, ...) goes through
-        :meth:`_committed_files_spark`, which derives the list from the
-        write job's committed output via Spark's FileIndex +
-        ``input_file_name`` — never a driver-side posix listing (which
-        would not even parse such a root). Both return the identical
-        {bucket: sorted files} map (equivalence is pytest-asserted).
-        """
+        """Write df (with __bucket col) partitioned by bucket; return the
+        {bucket: sorted files} map of the committed output, found by
+        listing it (no extra Spark job; safe because Spark's committer
+        has moved committed files into place and removed its _temporary
+        dir by the time write() returns)."""
         out_dir = os.path.join(self.root, "data", snapshot_id)
         has_sub = "__subtask" in df.columns
         shuffle_n = num_write_partitions or self.write_partitions(has_sub)
@@ -691,15 +690,6 @@ class LakeTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        if "://" in self.root:
-            return self._committed_files_spark(out_dir)
-        return self._committed_files_listing(out_dir)
-
-    @staticmethod
-    def _committed_files_listing(out_dir: str) -> dict[str, list[str]]:
-        """Posix-root discovery: direct directory listing (safe here —
-        Spark's committer has already moved committed files into place
-        and removed its _temporary dir by the time write() returns)."""
         files: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if not entry.startswith("__bucket="):
@@ -709,38 +699,6 @@ class LakeTable:
             files[b] = sorted(
                 os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
             )
-        return files
-
-    def _committed_files_spark(self, out_dir: str) -> dict[str, list[str]]:
-        """Store-agnostic discovery: one zero-data-column Spark job over
-        the committed output. ``input_file_name`` per row group comes
-        from Spark's FileIndex (Hadoop FS view — the same view reads
-        will use), which filters uncommitted/_temporary artifacts; no
-        data columns are decoded, so the job reads footers only. The
-        bucket id is parsed from the partition path segment, keeping
-        the returned map byte-identical in shape to the posix listing
-        (paths are stored in Spark's canonical form for the scheme)."""
-        from urllib.parse import unquote, urlparse
-
-        rows = (
-            self.spark.read.parquet(out_dir)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        files: dict[str, list[str]] = {}
-        for uri in sorted(r["f"] for r in rows):
-            seg = next(
-                s for s in uri.split("/") if s.startswith("__bucket=")
-            )
-            b = unquote(seg.split("=", 1)[1])
-            parsed = urlparse(uri)
-            # local-scheme URIs normalize to plain paths so the two
-            # discovery strategies (and stored snapshot metadata)
-            # compare equal; remote schemes keep the full URI, which
-            # spark.read.parquet(*files) consumes as-is.
-            path = unquote(parsed.path) if parsed.scheme == "file" else uri
-            files.setdefault(b, []).append(path)
         return files
 
     # ------------------------------------------------- key-level file skipping
@@ -761,13 +719,7 @@ class LakeTable:
         truncate (a truncated max can under-state the range).
 
         Driver-side footer reads are bounded by the batch's file
-        count (dirty_buckets × fan-out) — fine on a posix root. A
-        URI-schemed root returns {} here: at cluster scale these
-        bounds come from the distributed write job itself (the
-        _committed_files_spark shape) or the writer's own stats, not
-        a driver loop over remote footers."""
-        if "://" in self.root:
-            return {}
+        count (dirty_buckets × fan-out) on the local root."""
         import pyarrow.parquet as pq
 
         out: dict[str, list[str]] = {}
@@ -857,7 +809,7 @@ class LakeTable:
 
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
         """Initial full load (all buckets written once). Row count is
-        observed DURING the write action (the _merge_mor Observation
+        observed DURING the write action (merge's Observation
         shape) — a full initial load is the one batch that touches
         every byte, so a read-back counting pass would double it."""
         from pyspark.sql import Observation
@@ -885,8 +837,6 @@ class LakeTable:
         batch_id: str,
         watermark_hi: int,
         lineage: list[dict] | None = None,
-        crash_after_commit: bool = False,
-        mode: str = "cow",
         update_mode: str = "full",
     ) -> str:
         """MERGE INTO equivalent: last-writer-wins upsert + delete (X3).
@@ -897,50 +847,71 @@ class LakeTable:
         matched ∧ op∈{I,U} → UPDATE; not-matched ∧ op∈{I,U} → INSERT;
         matched ∧ op=D → DELETE; not-matched ∧ D → no-op.
 
-        Every merge is the merge-on-read append (:meth:`_merge_mor`).
-        ``mode='cow'`` then folds the buckets whose delta list the
-        append changed with :meth:`compact` — Iceberg's own cow result,
-        a delta write followed by ``rewrite_data_files``; clean buckets
-        keep their files and deltas by reference. A cow merge therefore
-        commits TWO snapshots, the delta commit and then the
-        compaction. A crash between the two leaves a correct
-        merge-on-read table whose watermark has already advanced, so
-        replay skips the batch and the next compaction folds it.
-        Returns the head snapshot id: the compaction's, or the
-        append's when there was nothing to fold.
+        Merge-on-read: the batch's rows (D rows become ``_op='D'``
+        tombstones) are appended as per-bucket delta files, and the
+        merge commits exactly ONE snapshot, as its last step; the
+        returned id is that snapshot's. No existing file is read for a
+        full-row batch — its cost is O(batch). Readers reconcile via
+        :meth:`_bucket_state`; :meth:`compact` folds deltas into the
+        base.
 
-        ``crash_after_commit`` is a test hook (T3b): raises right
-        after the delta commit to simulate dying before any
-        post-commit step; recovery must converge.
-
-        ``update_mode='partial'`` (X10, cow only): change rows carry
-        NULL for columns the event did not touch; see
-        :meth:`_partial_images` for how they become full row images.
+        ``update_mode='partial'`` (X10): change rows carry NULL for
+        columns the event did not touch; :meth:`_partial_images` turns
+        them into full row images, which take the same append.
         """
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown merge mode: {mode}")
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
-        if update_mode == "partial" and mode == "mor":
-            # partial rows become full images against the stored state
-            # at merge time (_partial_images); only the cow path, the
-            # one direct callers use, offers that — the engine's mor
-            # batches always carry full rows.
-            raise ValueError("update_mode='partial' requires mode='cow'")
-        # only cow reads the delta map before the append: mor keeps its
-        # one metadata read per batch
-        before = self.meta().get("deltas", {}) if mode == "cow" else None
+        meta = self.meta()
+        cols = self.columns()
         if update_mode == "partial":
             changes = self._partial_images(changes)
-        sid = self._merge_mor(
-            changes, batch_id, watermark_hi, lineage=lineage,
-            crash_after_commit=crash_after_commit,
+        snap = self._child(
+            meta, batch_id,
+            lineage=lineage or [],
+            watermark=max(int(meta["watermark"]), int(watermark_hi)),
+            row_count=None,
         )
-        if before is None:
-            return sid
-        after = self.meta(refresh=False)["deltas"]
-        dirty = [b for b, fl in after.items() if fl != before.get(b)]
-        return self.compact(dirty) or sid
+        sid = snap["snapshot_id"]
+
+        # a caller may pre-bucket (the engine's bucket-window dedup);
+        # re-adding would mint fresh attributes and defeat the exchange
+        # reuse that makes that path one-shuffle. A frame without
+        # __subtask is written by bucket only, so the write lands ONE
+        # delta file per dirty bucket — every later read opens each
+        # delta file, so files, not rows, set read cost.
+        data = (
+            changes if "__bucket" in changes.columns
+            else changes.withColumn("__bucket", self.bucket_expr())
+        )
+        stored = self._stored_select(
+            data.withColumn("_op", F.col("op")), cols, include_op=True
+        )
+        # count the written rows DURING the write action (Observation:
+        # an accumulator evaluated inline) — no second pass, not even a
+        # parquet-footer read job.
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
+        new_files = self._write_buckets(stored, sid)
+        deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
+        for b, fl in new_files.items():
+            deltas.setdefault(b, []).extend(fl)
+
+        change_rows = int(obs.get["rows"]) if new_files else 0
+        snap["deltas"] = deltas
+        snap["file_stats"] = self._rebuild_file_stats(
+            meta.get("file_stats", {}), self._collect_file_stats(new_files),
+            meta["files"], deltas,
+        )
+        snap["merge_stats"] = {
+            "dirty_buckets": len(new_files),
+            "total_buckets": self.n_buckets,
+            "change_rows": change_rows,
+            "mode": "mor",
+        }
+        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        return sid
 
     def _partial_images(self, changes: DataFrame) -> DataFrame:
         """Full row images of a folded partial-update batch (X10).
@@ -1001,71 +972,6 @@ class LakeTable:
             "op", "__bucket",
         )
         return images.unionByName(tombstones)
-
-    def _merge_mor(
-        self,
-        changes: DataFrame,
-        batch_id: str,
-        watermark_hi: int,
-        lineage: list[dict] | None = None,
-        crash_after_commit: bool = False,
-    ) -> str:
-        """Merge-on-read apply: append the batch's deduped change rows
-        (D rows become ``_op='D'`` tombstones) as per-bucket delta
-        files. No existing file is read — batch cost is O(batch).
-        Readers reconcile via :meth:`_bucket_state`; :meth:`compact`
-        folds deltas into the base."""
-        meta = self.meta()
-        cols = self.columns()
-        snap = self._child(
-            meta, batch_id,
-            lineage=lineage or [],
-            watermark=max(int(meta["watermark"]), int(watermark_hi)),
-            row_count=None,
-        )
-        sid = snap["snapshot_id"]
-
-        # a caller may pre-bucket (the engine's bucket-window dedup);
-        # re-adding would mint fresh attributes and defeat the exchange
-        # reuse that makes that path one-shuffle. A frame without
-        # __subtask is written by bucket only, so the write lands ONE
-        # delta file per dirty bucket — every later read opens each
-        # delta file, so files, not rows, set read cost.
-        data = (
-            changes if "__bucket" in changes.columns
-            else changes.withColumn("__bucket", self.bucket_expr())
-        )
-        stored = self._stored_select(
-            data.withColumn("_op", F.col("op")), cols, include_op=True
-        )
-        # count the written rows DURING the write action (Observation:
-        # an accumulator evaluated inline) — no second pass, not even a
-        # parquet-footer read job.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
-        new_files = self._write_buckets(stored, sid)
-        deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
-        for b, fl in new_files.items():
-            deltas.setdefault(b, []).extend(fl)
-
-        change_rows = int(obs.get["rows"]) if new_files else 0
-        snap["deltas"] = deltas
-        snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), self._collect_file_stats(new_files),
-            meta["files"], deltas,
-        )
-        snap["merge_stats"] = {
-            "dirty_buckets": len(new_files),
-            "total_buckets": self.n_buckets,
-            "change_rows": int(change_rows),
-            "mode": "mor",
-        }
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
-        if crash_after_commit:
-            raise RuntimeError("injected crash after commit point (T3b)")
-        return sid
 
     def delta_depth(self) -> dict[str, int]:
         """Outstanding delta BATCHES per bucket (compaction signal) —
@@ -1141,8 +1047,11 @@ class LakeTable:
         writer's files exist before its pointer swap and would look
         unreferenced, so only files older than the age threshold are
         eligible (Iceberg's orphan-file age rule; pass 0 only when no
-        writer can be active).
+        writer can be active). ``keep_last`` below 1 raises: it would
+        expire the head itself and every file it references.
         """
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1 (the head), got {keep_last}")
         now = time.time()
         chain = self.snapshot_chain()
         keep, drop = chain[:keep_last], chain[keep_last:]

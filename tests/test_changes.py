@@ -89,20 +89,23 @@ def test_changes_default_to_head_and_self_diff_empty(seeded):
 
 
 def test_changes_prunes_untouched_buckets(seeded, spark):
-    """Manifest-diff pruning: buckets with identical file lists never
-    reach the join — the scan covers only changed buckets' files."""
+    """Manifest-diff pruning: buckets whose base AND delta file lists
+    are identical never reach the join — the scan covers only changed
+    buckets' files."""
     table, s1, s2 = seeded
     old_meta = table.snapshot_meta(s1)
     new_meta = table.snapshot_meta(s2)
-    changed = {
-        b for b in set(old_meta["files"]) | set(new_meta["files"])
-        if old_meta["files"].get(b, []) != new_meta["files"].get(b, [])
-    }
-    assert changed != set(new_meta["files"]), "fixture must leave a clean bucket"
+
+    def lists(meta, b):
+        return meta["files"].get(b, []), meta["deltas"].get(b, [])
+
+    buckets = {b for m in (old_meta, new_meta) for b in (*m["files"], *m["deltas"])}
+    clean = {b for b in buckets if lists(old_meta, b) == lists(new_meta, b)}
+    assert clean, "fixture must leave a clean bucket"
     plan = table.changes(s1, s2)._jdf.queryExecution().executedPlan().toString()
-    for b, files in old_meta["files"].items():
-        if b not in changed:
-            for f in files:
+    for b in clean:
+        for fl in lists(old_meta, b):
+            for f in fl:
                 assert f.rsplit("/", 1)[-1] not in plan
 
 

@@ -71,17 +71,17 @@ def test_time_travel_reads_historical_snapshot(spark, tmp_path):
 
 
 def test_cow_and_mor_converge_identically(spark, tmp_path):
-    """Both LakeTable.merge modes, driven directly over the same
-    Δ-windows of deduped changes, reach the oracle state. The engine
-    writes only mor; cow (the same delta append, then compact() of the
-    dirtied buckets) stays the direct-merge / partial-update path."""
+    """Plain merges (merge-on-read) and merges each followed by
+    compact() (the copy-on-write result), driven directly over the same
+    Δ-windows of deduped changes, both reach the oracle state; the
+    compacted variant ends with no delta outstanding."""
     seed_df = gen_seed_table(n_repos=4, paths_per_repo=20, seed=33)
     chg = gen_changelog(seed_df, n_events=1_500, seed=33)
     log = changelog_from_pandas(spark, chg).filter(F.col("op") != "DDL")
     head = int(chg["lsn"].max())
     expected = state_hash(replay(seed_df, chg))
-    for mode in ("cow", "mor"):
-        table = LakeTable.create(spark, str(tmp_path / f"m_{mode}"), n_buckets=8)
+    for fold in (False, True):
+        table = LakeTable.create(spark, str(tmp_path / f"m_{fold}"), n_buckets=8)
         seed_lake(spark, table, seed_df)
         for lo in range(0, head, 300):
             hi = min(lo + 300, head)
@@ -93,10 +93,12 @@ def test_cow_and_mor_converge_identically(spark, tmp_path):
                 F.col("lsn").alias("_lsn"),
                 "op",
             )
-            table.merge(changes, batch_id=f"b{lo + 1}-{hi}", watermark_hi=hi,
-                        mode=mode)
+            table.merge(changes, batch_id=f"b{lo + 1}-{hi}", watermark_hi=hi)
+            if fold:
+                table.compact()
+        assert (table.delta_depth() == {}) == fold
         actual = spark_state_to_pandas(table.read(include_system=True))
-        assert state_hash(actual) == expected, mode
+        assert state_hash(actual) == expected, fold
 
 
 def _rows(spark, rows):
@@ -114,15 +116,17 @@ def _rows(spark, rows):
 
 
 def test_cow_merge_on_mixed_table(spark, tmp_path):
-    """A cow merge into a table that already holds mor deltas folds
-    only the bucket its append dirtied (not every bucket, as a plain
-    compact() would), and a partial cow merge takes the untouched
-    columns from the key's newest version, which lives in a delta."""
+    """On a table that already holds deltas, a full and then a partial
+    merge each commit exactly one snapshot (parent = the previous head,
+    batch_id = the merge's) that only appends deltas, and the partial
+    merge takes the untouched columns from the key's newest version,
+    which lives in a delta; compact() then folds every bucket without
+    changing the state."""
     table = LakeTable.create(spark, str(tmp_path / "mixed"), n_buckets=4)
     paths = [f"p{i}" for i in range(12)]
     table.seed(_rows(spark, [(p, "c1", "py", f"v-{p}", 1, "U") for p in paths]))
     table.merge(_rows(spark, [(p, "c2", "rs", f"w-{p}", 2, "U") for p in paths]),
-                batch_id="b2", watermark_hi=2, mode="mor")
+                batch_id="b2", watermark_hi=2)
     bucket = {
         r["path"]: str(r["b"])
         for r in spark.createDataFrame([("r", p) for p in paths],
@@ -131,35 +135,40 @@ def test_cow_merge_on_mixed_table(spark, tmp_path):
     }
     k1 = paths[0]
     k2 = next(p for p in paths if bucket[p] != bucket[k1])
-    before = table.meta()
-    assert len(before["deltas"]) >= 2  # several buckets carry deltas
+    assert len(table.meta()["deltas"]) >= 2  # several buckets carry deltas
 
-    sid = table.merge(_rows(spark, [(k1, "c3", "go", "x3", 3, "U")]),
-                      batch_id="b3", watermark_hi=3)
-    after = table.meta()
-    b1 = bucket[k1]
-    assert sid == after["snapshot_id"]
-    # two commits: the delta append, then the compaction of its bucket
-    assert table.snapshot_meta(after["parent_id"])["batch_id"] == "b3"
-    assert after["files"][b1] != before["files"][b1]
-    assert b1 not in after["deltas"]
-    for b in (set(before["files"]) | set(before["deltas"])) - {b1}:
-        assert after["files"].get(b) == before["files"].get(b), b
-        assert after["deltas"].get(b) == before["deltas"].get(b), b
-    assert after["watermark"] == 3
+    merges = [
+        ("b3", 3, "full", k1, _rows(spark, [(k1, "c3", "go", "x3", 3, "U")])),
+        ("b4", 4, "partial", k2, _rows(spark, [(k2, None, None, "w4", 4, "U")])
+         .withColumn("__reset", F.lit(False))),
+    ]
+    for batch_id, hi, update_mode, key, changes in merges:
+        before = table.meta()
+        sid = table.merge(changes, batch_id=batch_id, watermark_hi=hi,
+                          update_mode=update_mode)
+        after = table.meta()
+        assert sid == after["snapshot_id"]
+        assert after["parent_id"] == before["snapshot_id"], update_mode
+        assert after["batch_id"] == batch_id
+        assert after["watermark"] == hi
+        assert after["files"] == before["files"]  # nothing folded
+        b = bucket[key]
+        grown = {g for g, fl in after["deltas"].items()
+                 if fl != before["deltas"].get(g)}
+        assert grown == {b}, update_mode
+        assert after["deltas"][b][:len(before["deltas"][b])] == before["deltas"][b]
 
-    table.merge(
-        _rows(spark, [(k2, None, None, "w4", 4, "U")])
-        .withColumn("__reset", F.lit(False)),
-        batch_id="b4", watermark_hi=4, update_mode="partial",
-    )
     state = {r["path"]: r for r in table.read(include_system=True).collect()}
     assert (state[k2]["commit"], state[k2]["lang"], state[k2]["content"],
             state[k2]["_lsn"]) == ("c2", "rs", "w4", 4)
     assert (state[k1]["commit"], state[k1]["content"]) == ("c3", "x3")
     assert all(state[p]["content"] == f"w-{p}"
                for p in paths if p not in (k1, k2))
-    assert bucket[k2] not in table.meta()["deltas"]
+
+    table.compact()
+    assert table.delta_depth() == {}
+    assert {r["path"]: r for r in
+            table.read(include_system=True).collect()} == state
 
 
 def test_replay_resumes_over_compacted_chain(spark, tmp_path):

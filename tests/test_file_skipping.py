@@ -38,7 +38,7 @@ def _build(spark, tmp_path, name="lake"):
     for i, prefix in enumerate(["aaa", "bbb", "ccc"]):
         table.merge(
             _changes(spark, _batch(prefix, 30, lsn0=100 * (i + 1))),
-            batch_id=f"b{i + 1}", watermark_hi=100 * (i + 1) + 99, mode="mor",
+            batch_id=f"b{i + 1}", watermark_hi=100 * (i + 1) + 99,
         )
     return table
 
@@ -80,11 +80,11 @@ def test_point_read_reconciles_across_surviving_files(spark, tmp_path):
     # the one-key file) and the max-LSN reconcile must still win
     table.merge(
         _changes(spark, [("repo-aaa", "aaa/0005", "v999", 999, "U")]),
-        batch_id="b4", watermark_hi=999, mode="mor",
+        batch_id="b4", watermark_hi=999,
     )
     table.merge(
         _changes(spark, [("repo-aaa", "aaa/0007", "", 1000, "D")]),
-        batch_id="b5", watermark_hi=1000, mode="mor",
+        batch_id="b5", watermark_hi=1000,
     )
     updated = table.read_point("repo-aaa", "aaa/0005").collect()
     assert len(updated) == 1 and updated[0]["content"] == "v999"
@@ -107,7 +107,7 @@ def test_time_travel_point_read_uses_old_bounds(spark, tmp_path):
     sid = table.meta()["snapshot_id"]
     table.merge(
         _changes(spark, [("repo-aaa", "aaa/0005", "v999", 999, "U")]),
-        batch_id="b4", watermark_hi=999, mode="mor",
+        batch_id="b4", watermark_hi=999,
     )
     old = table.read_point("repo-aaa", "aaa/0005", snapshot_id=sid).collect()
     assert len(old) == 1 and old[0]["content"] == "v105"
@@ -127,7 +127,7 @@ def test_small_mor_batch_writes_one_delta_file_per_bucket(spark, tmp_path):
             for r in changes.select(table.bucket_expr()).distinct().collect()
         }
         table.merge(changes, batch_id=f"b{i + 1}",
-                    watermark_hi=1000 * (i + 1) + 999, mode="mor")
+                    watermark_hi=1000 * (i + 1) + 999)
         deltas = table.meta()["deltas"]
         added = {b: len(fl) - before.get(b, 0) for b, fl in deltas.items()}
         assert {b: n for b, n in added.items() if n} == {b: 1 for b in dirty}
@@ -150,7 +150,7 @@ def test_deep_mor_point_read_launches_no_job(spark, tmp_path, jobs_of):
             for r, p, c, lsn, _ in _batch("k", 600, lsn0=1000 * (i + 1))
         ]
         table.merge(_changes(spark, rows), batch_id=f"b{i + 1}",
-                    watermark_hi=1000 * (i + 1) + 999, mode="mor")
+                    watermark_hi=1000 * (i + 1) + 999)
         if i == 2:
             mid = table.meta()["snapshot_id"]
     assert max(table.delta_depth().values()) >= 7
@@ -185,7 +185,7 @@ def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
     table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2)
     r = "repo-e"
     table.merge(_changes(spark, _batch("e", 20, lsn0=100)),
-                batch_id="b1", watermark_hi=199, mode="mor")
+                batch_id="b1", watermark_hi=199)
     table.alter("add_column", "stars", batch_id="ddl1", at_lsn=200)
     table.alter("add_column", "license", batch_id="ddl2", at_lsn=201)
     table.merge(
@@ -196,7 +196,7 @@ def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
             stars={"e/0001": "old-1", "e/0003": "old-3"},
             license={"e/0001": "mit", "e/0003": "bsd"},
         ),
-        batch_id="b2", watermark_hi=399, mode="mor",
+        batch_id="b2", watermark_hi=399,
     )
     mid = table.meta()["snapshot_id"]
     table.alter("drop_column", "stars", batch_id="ddl3", at_lsn=400)
@@ -204,7 +204,7 @@ def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
         _evolving_changes(spark, [(r, "e/0004", "", 501, "D"),
                                   (r, "e/0005", "u5", 502, "U")],
                           license={"e/0005": "gpl"}),
-        batch_id="b3", watermark_hi=599, mode="mor",
+        batch_id="b3", watermark_hi=599,
     )
     table.alter("add_column", "stars", batch_id="ddl4", at_lsn=600)
     table.merge(
@@ -212,7 +212,7 @@ def test_point_read_equals_scan_across_schema_evolution(spark, tmp_path):
                                   (r, "e/0006", "u6", 702, "U")],
                           stars={"e/0003": "new-3", "e/0006": "new-6"},
                           license={"e/0003": "bsd", "e/0006": "apache"}),
-        batch_id="b4", watermark_hi=799, mode="mor",
+        batch_id="b4", watermark_hi=799,
     )
     keys = [(r, f"e/{i:04d}") for i in range(7)]
     keys += [(r, "e/9999"), ("repo-x", "e/0001")]  # never existed
@@ -258,13 +258,13 @@ def test_point_read_of_bigint_column_matches_scan(spark, tmp_path):
     table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=2)
     r = "repo-n"
     table.merge(_changes(spark, _batch("n", 10, lsn0=100)),
-                batch_id="b1", watermark_hi=199, mode="mor")
+                batch_id="b1", watermark_hi=199)
     table.alter("add_column", "n", "bigint", batch_id="ddl1", at_lsn=200)
     table.merge(
         _changes(spark, [(r, "n/0003", "u3", 301, "U"), (r, "n/0011", "u11", 302, "U")])
         .withColumn("n", F.when(F.col("path") == "n/0003", F.lit(3 << 40))
                     .otherwise(F.lit(-7)).cast("bigint")),
-        batch_id="b2", watermark_hi=399, mode="mor",
+        batch_id="b2", watermark_hi=399,
     )
     for include_system in (True, False):
         full = table.read(include_system=include_system)

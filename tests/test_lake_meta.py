@@ -5,8 +5,9 @@
   the HEAD only);
 - expire_snapshots GC bounds metadata/data growth while keeping the
   retained window time-travelable and replay convergent;
-- neither the large-batch replay nor a cow merge persists the payload
-  frame (the measured 5-10× anti-pattern).
+- neither the large-batch replay nor a merge + compact() persists the
+  payload frame (the measured 5-10× anti-pattern);
+- a URI root and ``keep_last < 1`` are refused before they touch disk.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.dataframe as psd
+import pytest
 from pyspark.sql import functions as F
 
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
@@ -42,8 +44,7 @@ def test_o1_metadata_reads_per_batch(spark, tmp_path):
 
 
 def test_mor_merge_reads_metadata_once(spark, tmp_path):
-    """A merge-on-read merge costs exactly one snapshot-file read: only
-    a cow merge reads the delta map before its append."""
+    """A merge costs exactly one snapshot-file read."""
     table = LakeTable.create(spark, str(tmp_path / "mor1"), n_buckets=4)
     changes = spark.createDataFrame(
         [("r", "a", "c1", "py", "v1", 1, "U")],
@@ -51,7 +52,7 @@ def test_mor_merge_reads_metadata_once(spark, tmp_path):
         "content string, _lsn long, op string",
     ).withColumn("_content_sha", F.unhex(F.sha2(F.col("content"), 256)))
     table.meta_file_reads = 0
-    table.merge(changes, batch_id="b1", watermark_hi=1, mode="mor")
+    table.merge(changes, batch_id="b1", watermark_hi=1)
     assert table.meta_file_reads == 1
 
 
@@ -114,8 +115,9 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     """broadcast_key_limit=0 forces the (bucket, subtask) write
     fan-out; a cow merge used to persist() the full payload on it
     (VERDICT r1 'what's wrong' #2). NO DataFrame.persist happens on the
-    replay or on a direct cow merge (delta append + compaction) of its
-    bucket-window frame, and the result still matches the oracle."""
+    replay or on a direct merge of its bucket-window frame followed by
+    compact() (the copy-on-write result), and the result still matches
+    the oracle."""
     calls: list[str] = []
     orig = psd.DataFrame.persist
 
@@ -137,7 +139,8 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     lo, head = table.watermark(), int(changelog["lsn"].max())
     events = log.filter((F.col("lsn") > lo) & (F.col("op") != "DDL"))
     table.merge(engine._dedup_changes(events, fanout=True), batch_id="cow-tail",
-                watermark_hi=head, mode="cow")
+                watermark_hi=head)
+    table.compact()
 
     assert calls == [], f"unexpected persist() of {calls}"
     assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
@@ -176,17 +179,32 @@ def test_expire_snapshots_survives_root_respelling(spark, tmp_path):
     ) == want
 
 
-def test_committed_file_discovery_strategies_agree(spark, tmp_path):
-    """VERDICT r2 #7: the store-agnostic Spark-job discovery returns
-    the identical {bucket: sorted files} map as the posix listing, so
-    pointing the backend at a URI-schemed root only changes HOW the
-    committed list is obtained, not what it contains."""
-    table = LakeTable.create(spark, str(tmp_path / "disc"), n_buckets=4)
-    seed_df = gen_seed_table(n_repos=2, paths_per_repo=10, seed=9)
-    seed_lake(spark, table, seed_df)
-    sid = table.meta()["snapshot_id"]
-    out_dir = os.path.join(table.root, "data", sid)
-    via_listing = table._committed_files_listing(out_dir)
-    via_spark = table._committed_files_spark(out_dir)
-    assert via_listing  # non-trivial fixture
-    assert via_spark == via_listing
+def test_uri_roots_are_refused(spark, tmp_path):
+    """LakeTable commits with os.replace and discovers, stats and GCs
+    files on the local filesystem, so a URI root raises before any
+    directory exists — even ``file://``, whose metadata would land
+    under a cwd-relative ``file:/...`` dir and its data at the real
+    path."""
+    for scheme in ("file://", "file:", "s3a://bucket"):
+        root = f"{scheme}{tmp_path}/uri/tbl"
+        with pytest.raises(ValueError, match="IcebergTable"):
+            LakeTable.create(spark, root, n_buckets=4)
+        with pytest.raises(ValueError, match="IcebergTable"):
+            LakeTable.load(spark, root)
+        assert not (tmp_path / "uri").exists()
+        assert not os.path.exists(scheme.split("/")[0])  # cwd-relative dir
+
+
+def test_expire_snapshots_keeps_the_head(spark, tmp_path):
+    """keep_last=0 would expire the head snapshot and every live data
+    file: it raises, and the head still reads the same state."""
+    table = LakeTable.create(spark, str(tmp_path / "keep0"), n_buckets=4)
+    seed_lake(spark, table, gen_seed_table(n_repos=2, paths_per_repo=8, seed=5))
+    want = state_hash(spark_state_to_pandas(table.read(include_system=True)))
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            table.expire_snapshots(keep_last=keep_last, min_age_s=0)
+    reloaded = LakeTable.load(spark, table.root)
+    assert state_hash(
+        spark_state_to_pandas(reloaded.read(include_system=True))
+    ) == want

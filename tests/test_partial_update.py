@@ -8,7 +8,6 @@ stored value; a delete strictly resets the row.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from dx.dedup import fold_partial
 from dx.lake import LakeTable
@@ -133,22 +132,3 @@ def test_partial_fold_batch_split_invariance(spark, tmp_path):
         assert s1[("r", "k")][col] == s2[("r", "k")][col], col
     assert (s1[("r", "k")]["commit"], s1[("r", "k")]["lang"],
             s1[("r", "k")]["content"]) == ("c5", "go", None)
-
-
-def test_partial_requires_cow(spark, tmp_path):
-    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    df = fold_partial(_events(spark, [(1, "U", "r", "a", "c", "py", "v")]))
-    with pytest.raises(ValueError, match="requires mode='cow'"):
-        _apply_partial_mor(table, df)
-
-
-def _apply_partial_mor(table, df):
-    changes = df.select(
-        "repo", "path", "commit", "lang", "content",
-        F.unhex(F.sha2(F.coalesce(F.col("content"), F.lit("")), 256))
-        .alias("_content_sha"),
-        F.col("lsn").alias("_lsn"),
-        "op", "__reset",
-    )
-    return table.merge(changes, batch_id="b1", watermark_hi=1,
-                       mode="mor", update_mode="partial")
