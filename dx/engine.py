@@ -27,8 +27,9 @@ Per batch (SURVEY.md §3.4):
      per-bucket delta files + tombstones (one file per dirty bucket
      without the fan-out) in ONE snapshot commit; auto-compact at
      depth ≥ compact_threshold
-  8. snapshot commit = pointer swap, atomic for readers with one
-     writer process (not a compare-and-swap); manifest is derived [X5]
+  8. snapshot commit = link of the next sequence-numbered snapshot
+     file, a compare-and-swap (a losing writer gets CommitConflict);
+     manifest is derived [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 
 Crash-resume: every step before 8 is side-effect-free on committed
@@ -205,7 +206,7 @@ class ReplayEngine:
         return deduped.select(*self._transform_sel(), *cols)
 
     # ------------------------------------------------------------ run loop
-    def run_batch(self, lo: int, hi: int, crash_after_commit: bool = False) -> list[BatchMetrics]:
+    def run_batch(self, lo: int, hi: int) -> list[BatchMetrics]:
         """Apply events with lsn ∈ (lo, hi], splitting at DDL boundaries."""
         out: list[BatchMetrics] = []
         window = self.changelog.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
@@ -219,7 +220,7 @@ class ReplayEngine:
         # segments[i] covers (a, b]; ddls[i] sits between segment i and i+1
         for i, (a, b) in enumerate(segments):
             if b > a:
-                out.append(self._apply_segment(a, b, window, crash_after_commit))
+                out.append(self._apply_segment(a, b, window))
             if i < len(ddls):
                 out.append(self._apply_ddl(ddls[i]))
         return out
@@ -256,8 +257,7 @@ class ReplayEngine:
             .collect()
         ]
 
-    def _apply_segment(self, lo: int, hi: int, window: DataFrame,
-                       crash_after_commit: bool = False) -> BatchMetrics:
+    def _apply_segment(self, lo: int, hi: int, window: DataFrame) -> BatchMetrics:
         t0 = time.monotonic()
         batch_id = f"b{lo + 1}-{hi}"
         if mf.already_applied(self.table, batch_id, hi):
@@ -292,10 +292,6 @@ class ReplayEngine:
             watermark_hi=hi,
             lineage=lineage,
         )
-        if crash_after_commit:
-            # merge's one commit is its last step: dying here is dying
-            # right after the commit point, before any bookkeeping
-            raise RuntimeError("injected crash after commit point (T3b)")
         n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
         applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)
@@ -306,13 +302,12 @@ class ReplayEngine:
         self._emit(m)
         return m
 
-    def run(self, max_batches: int | None = None,
-            crash_after_batch: int | None = None) -> list[BatchMetrics]:
+    def run(self, max_batches: int | None = None) -> list[BatchMetrics]:
         """Replay from the table's current watermark to the changelog head.
 
-        ``crash_after_batch=k`` injects a crash after the k-th batch's
-        commit point (T3b); a fresh engine over the same table resumes
-        and converges.
+        A crash anywhere leaves the table at its last commit; a fresh
+        engine over the same table resumes from its watermark and
+        converges (T3b).
         """
         out: list[BatchMetrics] = []
         head = self.max_lsn()
@@ -324,8 +319,7 @@ class ReplayEngine:
             if max_batches is not None and n >= max_batches:
                 break
             hi = min(w + self.delta, head)
-            crash = crash_after_batch is not None and n == crash_after_batch
-            out.extend(self.run_batch(w, hi, crash_after_commit=crash))
+            out.extend(self.run_batch(w, hi))
             if self.compact_threshold:
                 deep = [
                     b for b, d in self.table.delta_depth().items()

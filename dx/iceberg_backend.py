@@ -29,8 +29,10 @@ MERGE SQL below binds ``c._lsn`` accordingly.
 Semantics mapping (each method notes its sandbox equivalent):
 
 - table layout = Iceberg's own metadata/manifest tree; LakeTable's
-  per-bucket files map + pointer swap is the file-system model of the
-  same commit protocol (optimistic snapshot swap).
+  per-bucket files map + link-if-absent of the next sequence-numbered
+  snapshot file is the file-system model of the same commit protocol
+  (Iceberg's rename-if-absent metadata swap: optimistic, a losing
+  writer gets ``CommitConflict``).
 - ``write.distribution-mode=hash`` + ``bucket(N, repo, path)``
   partitioning reproduces the pmod(hash(repo,path), N) bucket routing.
 - merge-on-read delete files (``write.merge.mode=merge-on-read``)

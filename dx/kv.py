@@ -40,7 +40,7 @@ refused; only ``where`` is interpolated verbatim.
 from __future__ import annotations
 
 import sqlite3
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +76,20 @@ def _columns(db_path: str, table: str) -> dict[str, str]:
     return {row[1]: (row[2] or "TEXT").upper() for row in info}
 
 
+def _key_filter(key: str, lo, hi, where: str | None) -> tuple[str, list]:
+    """`` WHERE`` clause bounding the quoted ``key`` to [lo, hi) (a
+    None/NA bound is open) plus the verbatim ``where``, and its bound
+    args; empty when there is nothing to filter."""
+    conds, args = [], []
+    for op, v in ((">=", lo), ("<", hi)):
+        if not pd.isna(v):
+            conds.append(f"{key} {op} ?")
+            args.append(v.item() if hasattr(v, "item") else v)
+    if where:
+        conds.append(f"({where})")
+    return (" WHERE " + " AND ".join(conds) if conds else ""), args
+
+
 def kv_splits(
     db_path: str,
     table: str,
@@ -97,16 +111,7 @@ def kv_splits(
         raise ValueError(f"unknown kv columns: [{key_col!r}]")
     key, tbl = _q(key_col), _q(table)
     lo_bound, hi_bound = key_range or (None, None)
-    conds, args = [], []
-    if lo_bound is not None:
-        conds.append(f"{key} >= ?")
-        args.append(lo_bound)
-    if hi_bound is not None:
-        conds.append(f"{key} < ?")
-        args.append(hi_bound)
-    if where:
-        conds.append(f"({where})")
-    pred = " WHERE " + " AND ".join(conds) if conds else ""
+    pred, args = _key_filter(key, lo_bound, hi_bound, where)
     with sqlite3.connect(f"file:{db_path}?mode=ro", uri=True) as conn:
         n_rows = conn.execute(
             f"SELECT count(*) FROM {tbl}{pred}", args
@@ -123,6 +128,51 @@ def kv_splits(
                 bounds.append(row[0])  # dedupe: repeated keys merge splits
     bounds.append(hi_bound)
     return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
+
+
+def _range_scan(
+    spark: SparkSession,
+    db_path: str,
+    table: str,
+    key_col: str,
+    key_type: T.DataType,
+    schema: T.StructType,
+    query: Callable[[str], str],
+    shape: Callable[[list], pd.DataFrame],
+    n_splits: int,
+    key_range: tuple | None,
+    batch_rows: int,
+    where: str | None = None,
+) -> DataFrame:
+    """One task per ``kv_splits`` key range, each opening its own
+    read-only store connection: it runs ``query(filter)``, where
+    ``filter`` is the ``_key_filter`` clause of its range and
+    ``where``, and yields ``shape(rows)`` per ``batch_rows`` fetch."""
+    splits = kv_splits(db_path, table, key_col, n_splits, key_range, where)
+    key = _q(key_col)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        conn = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
+        try:
+            for ranges in batches:
+                for lo, hi in zip(ranges["lo"], ranges["hi"]):
+                    filt, args = _key_filter(key, lo, hi, where)
+                    cur = conn.execute(query(filt), args)
+                    while rows := cur.fetchmany(batch_rows):
+                        yield shape(rows)
+        finally:
+            conn.close()
+
+    # one range per task: a two-column ranges frame, typed as the key
+    # column, range-partitioned on lo so each split lands in its own
+    # partition
+    ranges_schema = T.StructType(
+        [T.StructField("lo", key_type, True), T.StructField("hi", key_type, True)]
+    )
+    ranges_df = spark.createDataFrame(splits, ranges_schema)
+    if len(splits) > 1:
+        ranges_df = ranges_df.repartitionByRange(len(splits), F.col("lo"))
+    return ranges_df.mapInPandas(scan, schema)
 
 
 def read_kv(
@@ -153,51 +203,21 @@ def read_kv(
         fields.append(T.StructField(c, spark_t, True))
         if pd_t:
             dtypes[c] = pd_t
-    schema = T.StructType(fields)
-
-    splits = kv_splits(db_path, table, key_col, n_splits, key_range, where)
     sel = ", ".join(_q(c) for c in cols)
-    key, tbl = _q(key_col), _q(table)
+    tbl = _q(table)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        conn = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
-        try:
-            for ranges in batches:
-                for lo, hi in zip(ranges["lo"], ranges["hi"]):
-                    pred, args = [], []
-                    if not pd.isna(lo):
-                        pred.append(f"{key} >= ?")
-                        args.append(lo.item() if hasattr(lo, "item") else lo)
-                    if not pd.isna(hi):
-                        pred.append(f"{key} < ?")
-                        args.append(hi.item() if hasattr(hi, "item") else hi)
-                    if where:
-                        pred.append(f"({where})")
-                    stmt = f"SELECT {sel} FROM {tbl}"
-                    if pred:
-                        stmt += " WHERE " + " AND ".join(pred)
-                    cur = conn.execute(stmt, args)
-                    while True:
-                        rows = cur.fetchmany(batch_rows)
-                        if not rows:
-                            break
-                        pdf = pd.DataFrame.from_records(rows, columns=cols)
-                        yield pdf.astype(dtypes) if dtypes else pdf
-        finally:
-            conn.close()
+    def shape(rows: list) -> pd.DataFrame:
+        pdf = pd.DataFrame.from_records(rows, columns=cols)
+        return pdf.astype(dtypes) if dtypes else pdf
 
-    # one range per task: a two-column ranges frame, range-partitioned
-    # on lo so each split lands in its own partition
-    # typed from the catalog, not the projection: ``columns`` may leave
-    # the key out
-    lo_t = _TYPES.get(decl[key_col], (T.StringType(), None))[0]
-    ranges_schema = T.StructType(
-        [T.StructField("lo", lo_t, True), T.StructField("hi", lo_t, True)]
+    # the key is typed from the catalog, not the projection: ``columns``
+    # may leave it out
+    return _range_scan(
+        spark, db_path, table, key_col,
+        _TYPES.get(decl[key_col], (T.StringType(), None))[0],
+        T.StructType(fields), lambda filt: f"SELECT {sel} FROM {tbl}{filt}",
+        shape, n_splits, key_range, batch_rows, where,
     )
-    ranges_df = spark.createDataFrame(splits, ranges_schema)
-    if len(splits) > 1:
-        ranges_df = ranges_df.repartitionByRange(len(splits), F.col("lo"))
-    return ranges_df.mapInPandas(scan, schema)
 
 
 def read_kv_versions(
@@ -235,62 +255,35 @@ def read_kv_versions(
             T.StructField("value", T.StringType(), True),
         ]
     )
-    splits = kv_splits(db_path, table, key_col, n_splits, key_range)
     sel = ", ".join(_q(c) for c in [key_col, version_col, *columns])
     key, tbl = _q(key_col), _q(table)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        conn = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
-        try:
-            for ranges in batches:
-                for lo, hi in zip(ranges["lo"], ranges["hi"]):
-                    pred, args = [], []
-                    if not pd.isna(lo):
-                        pred.append(f"{key} >= ?")
-                        args.append(lo.item() if hasattr(lo, "item") else lo)
-                    if not pd.isna(hi):
-                        pred.append(f"{key} < ?")
-                        args.append(hi.item() if hasattr(hi, "item") else hi)
-                    inner = f"SELECT {sel}, row_number() OVER (PARTITION BY " \
-                            f"{key} ORDER BY {_q(version_col)} DESC) AS _rn " \
-                            f"FROM {tbl}"
-                    if pred:
-                        inner += " WHERE " + " AND ".join(pred)
-                    cur = conn.execute(
-                        f"SELECT {sel} FROM ({inner}) WHERE _rn <= ?",
-                        args + [max_versions],
-                    )
-                    while True:
-                        rows = cur.fetchmany(batch_rows)
-                        if not rows:
-                            break
-                        wide = pd.DataFrame.from_records(
-                            rows, columns=[key_col, version_col, *columns]
-                        )
-                        tall = wide.melt(
-                            id_vars=[key_col, version_col],
-                            value_vars=columns,
-                            var_name="cell",
-                            value_name="value",
-                        ).rename(columns={version_col: "version"})
-                        tall["value"] = tall["value"].map(
-                            lambda v: None if pd.isna(v) else str(v)
-                        )
-                        if key_pd:
-                            tall[key_col] = tall[key_col].astype(key_pd)
-                        if ver_pd:
-                            tall["version"] = tall["version"].astype(ver_pd)
-                        yield tall
-        finally:
-            conn.close()
+    def query(filt: str) -> str:
+        inner = (f"SELECT {sel}, row_number() OVER (PARTITION BY {key} "
+                 f"ORDER BY {_q(version_col)} DESC) AS _rn FROM {tbl}{filt}")
+        return f"SELECT {sel} FROM ({inner}) WHERE _rn <= {int(max_versions)}"
 
-    ranges_schema = T.StructType(
-        [T.StructField("lo", key_t, True), T.StructField("hi", key_t, True)]
-    )
-    ranges_df = spark.createDataFrame(splits, ranges_schema)
-    if len(splits) > 1:
-        ranges_df = ranges_df.repartitionByRange(len(splits), F.col("lo"))
-    return ranges_df.mapInPandas(scan, schema)
+    def shape(rows: list) -> pd.DataFrame:
+        wide = pd.DataFrame.from_records(
+            rows, columns=[key_col, version_col, *columns]
+        )
+        tall = wide.melt(
+            id_vars=[key_col, version_col],
+            value_vars=columns,
+            var_name="cell",
+            value_name="value",
+        ).rename(columns={version_col: "version"})
+        tall["value"] = tall["value"].map(
+            lambda v: None if pd.isna(v) else str(v)
+        )
+        if key_pd:
+            tall[key_col] = tall[key_col].astype(key_pd)
+        if ver_pd:
+            tall["version"] = tall["version"].astype(ver_pd)
+        return tall
+
+    return _range_scan(spark, db_path, table, key_col, key_t, schema, query,
+                       shape, n_splits, key_range, batch_rows)
 
 
 def stage_kv(

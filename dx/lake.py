@@ -2,18 +2,25 @@
 
 Sandbox has no iceberg-spark-runtime jars (SURVEY.md §0.2), so this
 module implements the Iceberg semantics the north_rule needs —
-snapshot isolation, atomic commit (one writer process), MERGE
-upsert, ALTER TABLE schema evolution with field-ids — behind the
-same interface ``iceberg_backend.py`` exposes for real clusters.
-Design mirrors public Iceberg concepts (spec at
-iceberg.apache.org/spec/):
+snapshot isolation, compare-and-swap commits, MERGE upsert, ALTER
+TABLE schema evolution with field-ids — behind the same interface
+``iceberg_backend.py`` exposes for real clusters. Design mirrors
+public Iceberg concepts (spec at iceberg.apache.org/spec/):
 
 - A table = immutable parquet data files + a chain of snapshot JSON
-  metadata; the *commit point* is a pointer swap (``os.replace``),
-  atomic for readers. It is NOT a compare-and-swap: the parent check
-  is a separate read, so racing writer processes can both pass it and
-  lose commits silently (8 processes × 200 commits: 1,077 reported,
-  183 kept). A table assumes ONE writer process at a time.
+  metadata, one file per commit. Snapshot ids are sequence numbers
+  (the child of ``s<n>`` is ``s<n+1>``) and the head is the highest
+  one present. The *commit point* is ``os.link`` of the fsynced
+  snapshot JSON to ``snapshots/s<n+1>.json``, which fails atomically
+  if that name is taken: a compare-and-swap on the parent, like
+  Delta's put-if-absent log or Iceberg's rename-if-absent metadata
+  swap. Racing writers (threads or processes) derive the same id;
+  exactly one wins and every loser gets ``CommitConflict``.
+- Durability: the snapshot file is fsynced, its directory is not. A
+  host crash can lose the newest commit's name, but never leaves a
+  torn head (a snapshot is complete before it has a name), and replay
+  from the watermark redoes the batch. Spark's parquet data files are
+  not fsynced.
 - Data is hash-bucketed by ``pmod(hash(repo, path), n_buckets)``
   (Spark's Murmur3 ``F.hash`` — deterministic across sessions, so
   bucket routing is stable between snapshots). Writers evaluate it in
@@ -62,6 +69,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import struct
 import time
 import uuid
@@ -183,8 +191,9 @@ def _check_hash_port(spark: SparkSession) -> None:
 
 
 class CommitConflict(RuntimeError):
-    """Pointer moved between plan and commit. Checked before the swap,
-    not atomically with it: reliable for one writer process only."""
+    """Another writer committed first: the planned snapshot's sequence
+    number was taken between plan and commit (the commit's ``os.link``
+    found the name present). Re-plan from the new head."""
 
 
 # Recent-batch-id window carried in every snapshot (defense-in-depth
@@ -194,6 +203,9 @@ class CommitConflict(RuntimeError):
 # pathological redeliveries, so a bounded recent window is sufficient
 # and keeps snapshot JSON O(1) regardless of run length.
 APPLIED_BATCH_CAP = 4096
+
+# A committed snapshot's file name; commit temp files never match it.
+_SNAP_NAME = re.compile(r"s(\d+)\.json")
 
 # Write fan-out for large writes (the engine's wide bucket-window
 # batches, seed, and compact()): a bucket is sub-split into
@@ -211,7 +223,7 @@ WRITE_TASK_MULT = 4
 
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
-        # the commit is an os.replace, and file discovery, footer stats,
+        # the commit is an os.link, and file discovery, footer stats,
         # point reads and GC go through the local filesystem: a URI root
         # (Hadoop also writes file:/x with one slash) would split
         # metadata (cwd-relative) from data (Spark's URI)
@@ -224,15 +236,13 @@ class LakeTable:
         self.root = root
         self.n_buckets = n_buckets
         self._meta_cache: dict | None = None
+        # sequence number of the newest snapshot this handle has seen
+        self._head: int | None = None
         # instrumentation: snapshot-JSON file opens (tests assert the
         # per-batch metadata cost stays O(1) as the chain grows)
         self.meta_file_reads = 0
 
     # ------------------------------------------------------------------ paths
-    @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, "_pointer.json")
-
     def _snap_path(self, snapshot_id: str) -> str:
         return os.path.join(self.root, "snapshots", f"{snapshot_id}.json")
 
@@ -240,7 +250,10 @@ class LakeTable:
     @classmethod
     def create(cls, spark: SparkSession, root: str, n_buckets: int = 32) -> "LakeTable":
         t = cls(spark, root, n_buckets)
-        os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
+        try:
+            os.makedirs(os.path.join(root, "snapshots"))
+        except FileExistsError:
+            raise CommitConflict(f"a table already exists at {root}") from None
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         cols = [ColumnSpec(n, ty, i + 1) for i, (n, ty) in enumerate(BASE_COLUMNS)]
         snap = {
@@ -259,7 +272,7 @@ class LakeTable:
             "row_count": 0,
             "applied_at": time.time(),
         }
-        t._write_snapshot(snap, expected_parent=None)
+        t._commit(snap)
         return t
 
     @classmethod
@@ -270,11 +283,25 @@ class LakeTable:
         return t
 
     # ------------------------------------------------------------- metadata
+    def _head_seq(self) -> int:
+        """Sequence number of the head snapshot. A handle's first call
+        lists ``snapshots/`` once (and again if GC expired the last head
+        it saw); later calls probe ``s<n+1>.json`` forward from that
+        head, O(1) per commit in between."""
+        if self._head is None or not os.path.exists(self._snap_path(f"s{self._head}")):
+            snap_dir = os.path.join(self.root, "snapshots")
+            names = os.listdir(snap_dir) if os.path.isdir(snap_dir) else []
+            seqs = [int(m[1]) for m in map(_SNAP_NAME.fullmatch, names) if m]
+            if not seqs:
+                raise FileNotFoundError(f"no lake table at {self.root}")
+            self._head = max(seqs)
+        while os.path.exists(self._snap_path(f"s{self._head + 1}")):
+            self._head += 1
+        return self._head
+
     def meta(self, refresh: bool = True) -> dict:
         if refresh or self._meta_cache is None:
-            with open(self._pointer_path) as f:
-                sid = json.load(f)["snapshot_id"]
-            with open(self._snap_path(sid)) as f:
+            with open(self._snap_path(f"s{self._head_seq()}")) as f:
                 self._meta_cache = json.load(f)
             self.meta_file_reads += 1
         return self._meta_cache
@@ -327,15 +354,16 @@ class LakeTable:
         return set(self.meta().get("applied_batches", []))
 
     def _child(self, meta: dict, batch_id: str | None, **overrides) -> dict:
-        """Common child-snapshot construction: fresh id, parent link,
-        applied-batch window append (capped), commit timestamp."""
+        """Common child-snapshot construction: the parent's sequence
+        number + 1, parent link, applied-batch window append (capped),
+        commit timestamp."""
         applied = list(meta.get("applied_batches", []))
         if batch_id:
             applied.append(batch_id)
             applied = applied[-APPLIED_BATCH_CAP:]
         return {
             **meta,
-            "snapshot_id": f"s{uuid.uuid4().hex[:12]}",
+            "snapshot_id": f"s{int(meta['snapshot_id'][1:]) + 1}",
             "parent_id": meta["snapshot_id"],
             "batch_id": batch_id,
             "applied_batches": applied,
@@ -343,30 +371,28 @@ class LakeTable:
             **overrides,
         }
 
-    def _write_snapshot(self, snap: dict, expected_parent: str | None) -> None:
-        """Write snapshot json then swap the pointer.
-
-        If the pointer no longer names ``expected_parent``, the plan is
-        stale — raise, caller replans. Read-compare then ``os.replace``
-        is two steps, not a compare-and-swap, so this assumes a single
-        writer process (module docstring). The pointer swap is the
-        commit point; a crash before it leaves only orphan
-        data/metadata files (ignored by readers, GC-able).
-        """
-        if expected_parent is not None or os.path.exists(self._pointer_path):
-            with open(self._pointer_path) as f:
-                current = json.load(f)["snapshot_id"]
-            if current != expected_parent:
-                raise CommitConflict(f"pointer at {current}, expected {expected_parent}")
-        path = self._snap_path(snap["snapshot_id"])
-        with open(path + ".tmp", "w") as f:
-            json.dump(snap, f)
-        os.replace(path + ".tmp", path)
-        tmp = self._pointer_path + f".tmp.{uuid.uuid4().hex[:8]}"
+    def _commit(self, snap: dict) -> None:
+        """Write the snapshot JSON to a temp file, fsync it, and link it
+        to its sequence-numbered name: the link is the commit point and
+        fails atomically if another writer took that number first
+        (``CommitConflict``; the caller re-plans). A crash before it
+        leaves only orphan data files (GC-able) and a temp file, which
+        readers ignore."""
+        sid = snap["snapshot_id"]
+        path = self._snap_path(sid)
+        tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as f:
-            json.dump({"snapshot_id": snap["snapshot_id"]}, f)
-        os.replace(tmp, self._pointer_path)  # ← commit point
+            json.dump(snap, f)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, path)  # ← commit point
+        except FileExistsError:
+            raise CommitConflict(f"{sid} was committed by another writer") from None
+        finally:
+            os.remove(tmp)
         self._meta_cache = snap
+        self._head = int(sid[1:])
 
     # ----------------------------------------------------------------- read
     def bucket_expr(self, repo=None, path=None):
@@ -656,7 +682,7 @@ class LakeTable:
             lineage=[],
             watermark=max(meta["watermark"], at_lsn or 0),
         )
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        self._commit(snap)
         return snap["snapshot_id"]
 
     def checkpoint_watermark(self, batch_id: str, hi: int) -> str:
@@ -667,7 +693,7 @@ class LakeTable:
             lineage=[],
             watermark=max(int(meta["watermark"]), int(hi)),
         )
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        self._commit(snap)
         return snap["snapshot_id"]
 
     # ---------------------------------------------------------------- write
@@ -677,19 +703,17 @@ class LakeTable:
         {bucket: sorted files} map of the committed output, found by
         listing it (no extra Spark job; safe because Spark's committer
         has moved committed files into place and removed its _temporary
-        dir by the time write() returns)."""
-        out_dir = os.path.join(self.root, "data", snapshot_id)
+        dir by the time write() returns). The directory is
+        ``data/<snapshot_id>-<8 hex>``: racing writers plan the same
+        snapshot id, and must not write into each other's output."""
+        out_dir = os.path.join(self.root, "data", f"{snapshot_id}-{uuid.uuid4().hex[:8]}")
         has_sub = "__subtask" in df.columns
         shuffle_n = num_write_partitions or self.write_partitions(has_sub)
         parts = ["__bucket"] + (["__subtask"] if has_sub else [])
         out = df.repartition(shuffle_n, *parts)
         if has_sub:
             out = out.drop("__subtask")  # projection — partitioning kept
-        (
-            out.write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
+        out.write.partitionBy("__bucket").parquet(out_dir)
         files: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if not entry.startswith("__bucket="):
@@ -828,7 +852,7 @@ class LakeTable:
         snap["files"] = files
         snap["row_count"] = row_count
         snap["file_stats"] = self._collect_file_stats(files)
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        self._commit(snap)
         return sid
 
     def merge(
@@ -910,7 +934,7 @@ class LakeTable:
             "change_rows": change_rows,
             "mode": "mor",
         }
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        self._commit(snap)
         return sid
 
     def _partial_images(self, changes: DataFrame) -> DataFrame:
@@ -1029,7 +1053,7 @@ class LakeTable:
             meta.get("file_stats", {}), self._collect_file_stats(new_files),
             files, deltas,
         )
-        self._write_snapshot(snap, expected_parent=meta["snapshot_id"])
+        self._commit(snap)
         return sid
 
     def expire_snapshots(self, keep_last: int = 100,
@@ -1043,18 +1067,32 @@ class LakeTable:
         long-running stream accumulates one JSON per batch forever.
         The head snapshot and everything it references are never
         touched, and a crash mid-GC only leaves orphans for the next
-        pass. ``min_age_s`` guards in-flight writes: a CONCURRENT
-        writer's files exist before its pointer swap and would look
-        unreferenced, so only files older than the age threshold are
-        eligible (Iceberg's orphan-file age rule; pass 0 only when no
-        writer can be active). ``keep_last`` below 1 raises: it would
-        expire the head itself and every file it references.
+        pass. ``min_age_s`` guards in-flight writers, so only snapshot
+        JSON and data files older than it are removed (Iceberg's
+        orphan-file age rule; pass 0 only when no writer can be
+        active): a concurrent writer's data files exist before its
+        commit and would look unreferenced, and a writer that planned
+        on a parent whose child was expired would re-take that child's
+        number below the head and "commit" without an error. Snapshots
+        go oldest first, so the ones kept are always a contiguous run
+        up to the head. ``keep_last`` below 1 raises: it would expire
+        the head itself and every file it references.
         """
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1 (the head), got {keep_last}")
         now = time.time()
         chain = self.snapshot_chain()
-        keep, drop = chain[:keep_last], chain[keep_last:]
+        removed_meta = removed_data = 0
+        for s in reversed(chain[keep_last:]):
+            path = self._snap_path(s["snapshot_id"])
+            try:
+                if now - os.path.getmtime(path) < min_age_s:
+                    break
+                os.remove(path)
+            except FileNotFoundError:
+                pass  # removed by another GC
+            removed_meta += 1
+        keep = chain[:len(chain) - removed_meta]
         # Liveness is decided on REALPATHS: stored references carry
         # whatever root spelling the writing session used (relative
         # cwd, symlink, ...); a table opened for GC under a different
@@ -1066,13 +1104,6 @@ class LakeTable:
                 referenced.update(os.path.realpath(f) for f in fl)
             for fl in s.get("deltas", {}).values():
                 referenced.update(os.path.realpath(f) for f in fl)
-        removed_meta = removed_data = 0
-        for s in drop:
-            try:
-                os.remove(self._snap_path(s["snapshot_id"]))
-                removed_meta += 1
-            except FileNotFoundError:
-                pass
         data_root = os.path.join(self.root, "data")
         for snap_dir in os.listdir(data_root):
             d = os.path.join(data_root, snap_dir)
@@ -1088,10 +1119,10 @@ class LakeTable:
                         removed_data += 1
                 if not os.listdir(bd):
                     os.rmdir(bd)
-            if not any(e.startswith("__bucket=") for e in os.listdir(d)):
-                # only marker/_SUCCESS files left → whole snapshot dir is dead
-                for e in os.listdir(d):
-                    os.remove(os.path.join(d, e))
-                os.rmdir(d)
+            if (not any(e.startswith("__bucket=") for e in os.listdir(d))
+                    and now - os.path.getmtime(d) >= min_age_s):
+                # only marker/_SUCCESS files left, or a write that never
+                # committed (its _temporary dir) → the whole dir is dead
+                shutil.rmtree(d)
         return {"kept_snapshots": len(keep), "expired_snapshots": removed_meta,
                 "removed_data_files": removed_data}

@@ -126,10 +126,11 @@ def main(argv: list[str] | None = None) -> int:
         print(f"seeded {len(seed_df)} rows; changelog {args.events} events → {log_path}",
               file=sys.stderr)
     else:
-        if not os.path.exists(os.path.join(lake_root, "_pointer.json")):
-            print(f"error: no lake table at {lake_root} (run `demo` first)", file=sys.stderr)
+        try:
+            table = LakeTable.load(spark, lake_root)
+        except FileNotFoundError as e:
+            print(f"error: {e} (run `demo` first)", file=sys.stderr)
             return 2
-        table = LakeTable.load(spark, lake_root)
 
     log_df = spark.read.parquet(log_path)
     engine = ReplayEngine(

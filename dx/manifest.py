@@ -7,7 +7,8 @@ re-delivery, no dedup). This module closes that gap:
 The manifest is **derived state**: every committed snapshot embeds its
 batch_id, applied LSN watermark, and per-source-partition lineage rows
 (lake.py). The authoritative record is therefore the snapshot chain
-itself — committed atomically with the data by the pointer swap. A
+itself — committed atomically with the data by one snapshot-file
+link (a compare-and-swap on the sequence number, dx/lake.py). A
 crash *anywhere* (including "after snapshot commit, before manifest
 bookkeeping", T3b) cannot desynchronize data from manifest, because
 there is nothing to desynchronize: re-reading the chain reconstructs

@@ -6,11 +6,13 @@ final table state; applying an already-manifested batch is a no-op.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
 from dx.generator import gen_changelog, gen_seed_table
-from dx.lake import LakeTable
+from dx.lake import CommitConflict, LakeTable
 from tests.oracle import replay, spark_state_to_pandas, state_hash
 
 
@@ -63,8 +65,17 @@ def test_t3b_crash_resume_converges(spark, tmp_path, world):
     table = _fresh_table(spark, tmp_path, seed_df, "t3b")
     log_df = changelog_from_pandas(spark, changelog)
     eng = ReplayEngine(spark, table, log_df, delta=300)
+    real_merge, commits = table.merge, []
+
+    def merge_then_crash(*args, **kwargs):
+        commits.append(real_merge(*args, **kwargs))
+        if len(commits) == 2:
+            raise RuntimeError("injected crash after commit point (T3b)")
+        return commits[-1]
+
+    table.merge = merge_then_crash
     with pytest.raises(RuntimeError, match="injected crash"):
-        eng.run(crash_after_batch=1)
+        eng.run()
     w_mid = table.watermark()
     assert 0 < w_mid < 1_500  # partially applied
 
@@ -76,23 +87,29 @@ def test_t3b_crash_resume_converges(spark, tmp_path, world):
 
 
 def test_t3b_crash_before_commit_point(spark, tmp_path, world):
-    """Orphan snapshot files (written but never pointed at) are ignored:
-    simulate by failing the pointer swap via a conflicting writer."""
+    """A writer that dies before its commit point leaves only a temp
+    snapshot file, which readers ignore; a writer holding a stale
+    parent fails its link and leaves committed state untouched."""
     seed_df, changelog, expected = world
     table = _fresh_table(spark, tmp_path, seed_df, "t3c")
     log_df = changelog_from_pandas(spark, changelog)
     eng = ReplayEngine(spark, table, log_df, delta=300)
     eng.run(max_batches=2)
-    w = table.watermark()
+    meta = table.meta()
+    w = meta["watermark"]
 
-    # a writer holding a stale parent view must fail its pointer swap,
-    # leaving committed state untouched — optimistic concurrency
-    import dx.lake as lake_mod
+    # died between fsync and link: the next number's temp file exists
+    orphan = {**meta, "snapshot_id": f"s{int(meta['snapshot_id'][1:]) + 1}",
+              "watermark": 10**9}
+    with open(table._snap_path(orphan["snapshot_id"]) + ".0badf00d.tmp", "w") as f:
+        json.dump(orphan, f)
+    assert LakeTable.load(spark, table.root).watermark() == w
 
-    bogus = {**table.meta(), "snapshot_id": "s_orphan", "parent_id": "s_bogus_parent"}
-    with pytest.raises(lake_mod.CommitConflict):
-        table._write_snapshot(bogus, expected_parent="s_bogus_parent")
-    table._meta_cache = None
+    # planned against the parent of the head: its number is taken
+    stale = table._child(table.snapshot_meta(meta["parent_id"]), "stale",
+                         watermark=10**9)
+    with pytest.raises(CommitConflict, match=meta["snapshot_id"]):
+        table._commit(stale)
     assert table.watermark() == w  # untouched
 
     ReplayEngine(spark, LakeTable.load(spark, table.root), log_df, delta=300).run()

@@ -101,8 +101,9 @@ def test_merge_touches_only_dirty_buckets(spark, tmp_path):
 
 def test_cli_demo_then_replay_is_noop(spark, tmp_path, monkeypatch, capsys):
     """The CLI drives one replay path: ``demo`` seeds and replays,
-    a second ``replay`` applies nothing (exactly-once), and the removed
-    path flags are rejected by argparse."""
+    a second ``replay`` applies nothing (exactly-once), ``replay`` on a
+    workdir with no table exits 2, and the removed path flags are
+    rejected by argparse."""
     monkeypatch.setattr(dx.session, "get_spark", lambda *a, **k: spark)
     wd = str(tmp_path / "cli")
     assert main(["demo", "--workdir", wd, "--events", "600", "--delta", "200"]) == 0
@@ -113,6 +114,9 @@ def test_cli_demo_then_replay_is_noop(spark, tmp_path, monkeypatch, capsys):
     again = json.loads(capsys.readouterr().out)
     assert again["batches_applied"] == 0
     assert again["snapshot_id"] == demo["snapshot_id"]
+
+    assert main(["replay", "--workdir", str(tmp_path / "no_table")]) == 2
+    assert "no lake table" in capsys.readouterr().err
 
     with pytest.raises(SystemExit) as exc:
         main(["replay", "--workdir", wd, "--dedup", "maxby"])

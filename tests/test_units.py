@@ -212,8 +212,9 @@ def test_manifest_schema_and_watermarks(spark, tmp_path):
 
 
 def test_optimistic_commit_conflict(spark, tmp_path):
-    """Two writers racing on one table: the loser's pointer swap raises
-    CommitConflict instead of silently clobbering the winner."""
+    """Two writers racing on one table plan the same sequence number:
+    the loser's link raises CommitConflict instead of silently
+    clobbering the winner."""
     import pytest
 
     from dx.lake import CommitConflict, LakeTable
@@ -221,15 +222,12 @@ def test_optimistic_commit_conflict(spark, tmp_path):
     root = str(tmp_path / "conflict")
     t1 = LakeTable.create(spark, root, n_buckets=4)
     t2 = LakeTable.load(spark, root)
-    m1, m2 = t1.meta(), t2.meta()  # both planned against s0
-    t1.checkpoint_watermark("w1", 10)  # writer 1 commits first
-    snap = {
-        **m2, "snapshot_id": "sloser", "parent_id": m2["snapshot_id"],
-        "batch_id": "w2", "watermark": 20,
-    }
-    with pytest.raises(CommitConflict):
-        t2._write_snapshot(snap, expected_parent=m2["snapshot_id"])
-    assert t1.watermark() == 10  # winner's state intact
+    snap = t2._child(t2.meta(), "w2", watermark=20)  # planned against s0
+    assert snap["snapshot_id"] == "s1"
+    assert t1.checkpoint_watermark("w1", 10) == "s1"  # writer 1 commits first
+    with pytest.raises(CommitConflict, match="s1"):
+        t2._commit(snap)
+    assert t2.watermark() == t1.watermark() == 10  # winner's state intact
 
 
 def test_iceberg_backend_signature_parity():
