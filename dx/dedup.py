@@ -4,10 +4,13 @@ ABSENT in the reference (DataX has no relational operators, SURVEY.md
 §2.7); mandated by BASELINE.json:6: per (repo, path) keep only the
 highest-LSN event in a batch, collapsing I/U/D sequences.
 
-The replay engine runs :func:`dedup_bucket_window` for every batch.
-The three :func:`dedup_max_lsn` strategies are library functions
-(tests assert their equality); ``window`` and ``maxby`` are also
-checked by the ``cdc_dedup_window`` / ``cdc_dedup_maxby`` queries:
+The replay engine runs the ``window`` strategy of :func:`dedup_max_lsn`
+for every batch, over a frame already routed by the key hash
+(``LakeTable.route``), so the window adds no shuffle of its own and the
+bucket write reuses the same exchange. The other strategies are
+library functions (tests assert their equality); ``window`` and
+``maxby`` are also checked by the ``cdc_dedup_window`` /
+``cdc_dedup_maxby`` queries:
 
 - ``window`` — the spec-literal form: ``row_number() OVER
   (PARTITION BY repo, path ORDER BY lsn DESC) = 1``. One full shuffle
@@ -65,60 +68,13 @@ def dedup_max_lsn(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
         # A redelivered event ROW (same key AND same lsn appearing twice
         # in one batch — e.g. an at-least-once shipper landing a chunk
         # twice) would survive the semi-join in both copies; window/
-        # maxby/bucket-window all collapse it. dropDuplicates keeps the
+        # maxby both collapse it. dropDuplicates keeps the
         # strategies equivalent under duplicated input rows. Cost: one
         # extra shuffle of the already-collapsed batch (≤ |keys| rows,
         # and a broadcastable winner set keeps it small) — bounded, and
         # correctness is not input-invariant-conditional.
         return semi.dropDuplicates([*key, lsn_col])
     raise ValueError(f"unknown dedup strategy: {strategy}")
-
-
-def dedup_bucket_window(df: DataFrame, bucket_col: str = "__bucket",
-                        num_partitions: int | None = None,
-                        key: list[str] = KEY, lsn_col: str = "lsn",
-                        subtask_col: str | None = None) -> DataFrame:
-    """Single-shuffle dedup, fused with bucket routing (the engine's
-    path for every batch).
-
-    Repartition by the storage bucket (each key lives in exactly one
-    bucket), sort the partition by (key, lsn desc), and keep the first
-    row of each key run via ``lag`` — a window PARTITIONED BY THE
-    BUCKET, so Spark reuses the repartition exchange instead of
-    shuffling again by key.
-    Compared to the maxby aggregation this needs no reduce-side hash
-    of payload rows, has no per-key skew point (the partition key is
-    the uniform bucket hash), leaves the data partitioned exactly as
-    the bucket write wants it (the write's repartition collapses into
-    this one — ONE payload shuffle end-to-end), and emits rows sorted
-    by key, which compresses better in parquet and pre-sorts future
-    merge reads. ``df`` must already carry ``bucket_col``. An event row
-    redelivered within one batch (same key AND same lsn) sorts next to
-    its twin, which the first-of-run filter drops.
-
-    ``subtask_col`` (a key-deterministic sub-bucket id, see
-    LakeTable.with_subtask) joins the partitioning so one bucket
-    spreads over many tasks: with tasks == buckets, the slowest single
-    bucket gates the whole stage (measured straggler term in the 8→32
-    scaling pair); sub-splitting gives the scheduler 4×cores tasks to
-    balance. Keys stay whole within a cell, so the first-of-run filter
-    is unaffected.
-    """
-    parts = [F.col(bucket_col)] + ([F.col(subtask_col)] if subtask_col else [])
-    data = (
-        df.repartition(num_partitions, *parts) if num_partitions
-        else df.repartition(*parts)
-    )
-    w = Window.partitionBy(*parts).orderBy(
-        *[F.col(k) for k in key], F.col(lsn_col).desc()
-    )
-    prev = [F.lag(k).over(w).alias(f"__prev_{i}") for i, k in enumerate(key)]
-    data = data.select("*", *prev)
-    first_of_run = F.lit(False)
-    for i, k in enumerate(key):
-        c = F.col(f"__prev_{i}")
-        first_of_run = first_of_run | c.isNull() | (c != F.col(k))
-    return data.filter(first_of_run).drop(*[f"__prev_{i}" for i in range(len(key))])
 
 
 def fold_partial(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
@@ -151,7 +107,7 @@ def fold_partial(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
     reserved = {*key, lsn_col, "op"}
     if value_cols is None:
         # Inferred default excludes engine/system helper columns
-        # (underscore-prefixed: __bucket, __subtask, _lsn, …) and the
+        # (underscore-prefixed: __bucket, _lsn, …) and the
         # replay frame's bookkeeping fields — folding those as payload
         # would silently corrupt them. A payload column that really
         # starts with "_" must be passed via value_cols explicitly.

@@ -14,19 +14,18 @@ Per batch (SURVEY.md §3.4):
   3. split at DDL boundaries; ALTER TABLE per DDL event          [X4]
   4. per sub-range: one narrow lineage aggregation — its rows give
      the event count, and none means a metadata-only watermark commit
-  5. max-LSN dedup [X2] by bucket window: the batch repartitions by
-     its storage bucket and keeps each key's first row in
-     (key, lsn desc) order — exactly one payload shuffle, which the
-     bucket write reuses; normalize content + sha256 and materialize
-     evolved columns in the same stage                            [X7]
-  6. skew [X6] is structural: the bucket-hash shuffle spreads a hot
-     repo's paths, and a batch wider than broadcast_key_limit LSNs
-     also splits each bucket by a (bucket, subtask) fan-out so one
-     hot bucket can't straggle the stage
-  7. MERGE into the lake table [X3], merge-on-read: append
-     per-bucket delta files + tombstones (one file per dirty bucket
-     without the fan-out) in ONE snapshot commit; auto-compact at
-     depth ≥ compact_threshold
+  5. max-LSN dedup [X2]: the batch is routed by the key hash into
+     n_buckets partitions (LakeTable.route: partition i holds bucket
+     i) and ``row_number() OVER (PARTITION BY repo, path ORDER BY lsn
+     DESC) = 1`` reuses that exchange, as does the bucket write —
+     exactly one payload shuffle; normalize content + sha256 and
+     materialize evolved columns in the same stage                 [X7]
+  6. skew [X6] is structural: the key-hash shuffle spreads a hot
+     repo's paths over every bucket
+  7. MERGE into the lake table [X3], merge-on-read: append one delta
+     file per dirty bucket (tombstones included) in ONE snapshot
+     commit; auto-compact at depth ≥ compact_threshold. n_buckets
+     sets the write task count
   8. snapshot commit = link of the next sequence-numbered snapshot
      file, a compare-and-swap (a losing writer gets CommitConflict);
      manifest is derived [X5]
@@ -48,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dx import manifest as mf
-from dx.dedup import dedup_bucket_window
+from dx.dedup import dedup_max_lsn
 from dx.lake import LakeTable
 from dx.transforms import content_sha_bin, normalize_content
 
@@ -98,11 +97,10 @@ class BatchMetrics:
 class ReplayEngine:
     """Replays a changelog into a lake table in bounded LSN batches.
 
-    ``broadcast_key_limit`` only chooses the write fan-out: a batch
-    whose LSN range is wider than it dedups and writes by (bucket,
-    subtask) cells; any other batch by bucket alone, one delta file per
-    dirty bucket. Every batch takes the same bucket-window dedup; the
-    name is historical.
+    Every batch takes the same path: routed max-LSN window dedup, one
+    delta file per dirty bucket. ``broadcast_key_limit`` is ignored;
+    it stays in the signature only because the benchmark harness reads
+    its default to size its bulk batch.
     """
 
     def __init__(
@@ -121,7 +119,6 @@ class ReplayEngine:
         self.delta = delta
         self.metrics_path = metrics_path
         self.compact_threshold = compact_threshold
-        self.broadcast_key_limit = broadcast_key_limit
         self._max_lsn: int | None = None
         self._ddls: list | None = None
 
@@ -181,29 +178,14 @@ class ReplayEngine:
         ]
         return sel
 
-    def _dedup_changes(self, events: DataFrame, fanout: bool) -> DataFrame:
-        """Bucket-window dedup (dedup.py) + payload transforms → the
-        exact frame lake.merge expects. ONE payload shuffle, fused with
-        the write's bucket routing: the dedup repartitions at the
-        write's own partitioning, so the write's repartition reuses
-        this exchange.
-
-        ``fanout`` picks the write fan-out. Without it the shuffle is
-        keyed by the bucket alone at ``write_partitions(False)``, so a
-        small batch lands one delta file per dirty bucket. With it the
-        shuffle is keyed by (bucket, subtask) at WRITE_TASK_MULT×cores
-        partitions, so one hot/slow bucket can't straggle a large
-        batch's cores-wide stage."""
-        data = events.withColumn("__bucket", self.table.bucket_expr())
-        cols = [F.col("__bucket")]
-        if fanout:
-            data = self.table.with_subtask(data)
-            cols.append(F.col("__subtask"))
-        deduped = dedup_bucket_window(
-            data, num_partitions=self.table.write_partitions(fanout),
-            subtask_col="__subtask" if fanout else None,
-        )
-        return deduped.select(*self._transform_sel(), *cols)
+    def _dedup_changes(self, events: DataFrame) -> DataFrame:
+        """Max-LSN dedup (dedup.py's ``window`` strategy) + payload
+        transforms → the exact frame lake.merge expects. The batch is
+        routed first (``LakeTable.route``); the window keyed on (repo,
+        path) reuses that exchange, and so does the bucket write: ONE
+        payload shuffle, whose task i holds bucket i."""
+        deduped = dedup_max_lsn(self.table.route(events), strategy="window")
+        return deduped.select(*self._transform_sel())
 
     # ------------------------------------------------------------ run loop
     def run_batch(self, lo: int, hi: int) -> list[BatchMetrics]:
@@ -280,14 +262,8 @@ class ReplayEngine:
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, sid, 0, dt, 0.0)
             self._emit(m)
             return m
-        # The LSN range width only picks the write fan-out: it is an
-        # upper bound that equals the event count on dense changelogs,
-        # so gaps can only send a small batch to the fan-out path.
-        changes = self._dedup_changes(
-            events, fanout=hi - lo > self.broadcast_key_limit
-        )
         sid = self.table.merge(
-            changes,
+            self._dedup_changes(events),
             batch_id=batch_id,
             watermark_hi=hi,
             lineage=lineage,

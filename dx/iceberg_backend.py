@@ -20,7 +20,7 @@ contract of ``dx.lake.LakeTable`` (``merge(changes, batch_id,
 watermark_hi, lineage=None, update_mode="full")``, one commit per
 call on both backends; ``alter(..., batch_id=, at_lsn=)``, ``watermark()``,
 ``checkpoint_watermark()``, ``delta_depth()``, ``compact(buckets)``,
-``meta()``, ``bucket_expr()``) — tests/test_units.py asserts the
+``meta()``, ``bucket_expr()``, ``route()``) — tests/test_units.py asserts the
 signatures stay compatible, so a cluster deployment cannot fail on a
 TypeError that the sandbox never exercises. The change-frame column
 the engine emits is ``_lsn`` (dx/engine.py _transform_sel), and the
@@ -109,6 +109,12 @@ class IcebergTable:
         repo = repo if repo is not None else F.col("repo")
         path = path if path is not None else F.col("path")
         return F.pmod(F.hash(repo, path), F.lit(self.n_buckets))
+
+    def route(self, df: DataFrame) -> DataFrame:
+        """LakeTable.route — the engine's dedup shuffle by the key hash
+        into ``n_buckets`` partitions (Iceberg then routes the write by
+        its own ``write.distribution-mode=hash``)."""
+        return df.repartition(self.n_buckets, "repo", "path")
 
     # --------------------------------------------------------- metadata
     def meta(self, refresh: bool = True) -> dict:

@@ -50,10 +50,12 @@ Scale notes (10^10 rows / 1000 executors):
   ``rewrite_data_files``); a caller that wants the copy-on-write
   result calls it after the merge, as a second commit.
 
-  A small batch (one that arrives without ``__bucket``) writes ONE
-  delta file per dirty bucket, so a reader pays per layer, not per
-  write task; the (bucket, subtask) write fan-out is kept for large
-  pre-bucketed batches, ``seed`` and ``compact()``.
+  Every bucket write (merge, ``seed``, ``compact()``) has one layout:
+  ``route`` shuffles the rows by the key hash into ``n_buckets``
+  partitions, which is exactly the bucket id, so write task i holds
+  bucket i and lands ONE file in it (Iceberg's ``bucket(N)`` transform
+  as the write distribution). ``n_buckets`` sets the write task count,
+  and a reader pays per layer, not per write task.
 - Readers take the physical schema from the snapshot's column specs
   (stored names + types), never from file footers: a file written
   before a column existed reads it as null, a dropped column's
@@ -75,7 +77,7 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 BASE_COLUMNS = [
@@ -190,6 +192,17 @@ def _check_hash_port(spark: SparkSession) -> None:
     _hash_port_checked = True
 
 
+def _newest_live(df: DataFrame) -> DataFrame:
+    """Reconcile a base ∪ delta read (with ``_op``): each key's max-``_lsn``
+    row wins, and a winning tombstone drops the key."""
+    w = Window.partitionBy(*KEY).orderBy(F.col("_lsn").desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (F.col("_op") != "D"))
+        .drop("__rn", "_op")
+    )
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed first: the planned snapshot's sequence
     number was taken between plan and commit (the commit's ``os.link``
@@ -206,19 +219,6 @@ APPLIED_BATCH_CAP = 4096
 
 # A committed snapshot's file name; commit temp files never match it.
 _SNAP_NAME = re.compile(r"s(\d+)\.json")
-
-# Write fan-out for large writes (the engine's wide bucket-window
-# batches, seed, and compact()): a bucket is sub-split into
-# SUBTASK_SPREAD cells and a bucket write runs
-# WRITE_TASK_MULT × shuffle-partitions tasks, so one slow/large bucket
-# can't serialize a stage whose task count equals the core count (the
-# measured straggler term of the 8→32 scaling pair). Cells are
-# key-deterministic (hash(path)), so dedup windows over (bucket,
-# subtask) still see whole keys. Small merge-on-read batches skip the
-# fan-out: every later read opens their delta files, so they write one
-# per bucket.
-SUBTASK_SPREAD = 8
-WRITE_TASK_MULT = 4
 
 
 class LakeTable:
@@ -400,23 +400,13 @@ class LakeTable:
         path = path if path is not None else F.col("path")
         return F.pmod(F.hash(repo, path), F.lit(self.n_buckets))
 
-    def with_subtask(self, df: DataFrame) -> DataFrame:
-        """Attach the write fan-out cell id (``__subtask``): a second,
-        finer hash of the key so one bucket spreads over
-        ``SUBTASK_SPREAD`` write tasks. Key-deterministic — every row
-        of a (repo, path) lands in the same (bucket, subtask) cell."""
-        return df.withColumn(
-            "__subtask", F.pmod(F.hash(F.col("path")), F.lit(SUBTASK_SPREAD))
-        )
-
-    def write_partitions(self, fanout: bool) -> int:
-        """Shuffle-partition count for bucket writes — the SAME formula
-        the engine's fused dedup shuffle uses, so the write repartition
-        collapses into the dedup exchange (one payload shuffle)."""
-        conf = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        if fanout:
-            return conf * WRITE_TASK_MULT
-        return min(self.n_buckets, conf)
+    def route(self, df: DataFrame) -> DataFrame:
+        """Shuffle ``df`` by the key into ``n_buckets`` partitions: Spark's
+        hash partitioning is ``pmod(hash(repo, path), n)``, which is
+        :meth:`bucket_expr`, so partition i holds bucket i and only
+        bucket i. A window or write keyed on the same columns downstream
+        reuses this exchange."""
+        return df.repartition(self.n_buckets, *KEY)
 
     def _read_files(self, files: list[str], columns: list[ColumnSpec],
                     include_op: bool = False) -> DataFrame:
@@ -464,14 +454,8 @@ class LakeTable:
             delta_files = self._prune_files(delta_files, stats, key_bounds)
         if not delta_files:
             return self._read_files(base_files, cols)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*KEY).orderBy(F.col("_lsn").desc())
-        return (
+        return _newest_live(
             self._read_files(base_files + delta_files, cols, include_op=True)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (F.col("_op") != "D"))
-            .drop("__rn", "_op")
         )
 
     def read(self, include_system: bool = False,
@@ -697,9 +681,9 @@ class LakeTable:
         return snap["snapshot_id"]
 
     # ---------------------------------------------------------------- write
-    def _write_buckets(self, df: DataFrame, snapshot_id: str,
-                       num_write_partitions: int | None = None) -> dict[str, list[str]]:
-        """Write df (with __bucket col) partitioned by bucket; return the
+    def _write_buckets(self, df: DataFrame, snapshot_id: str) -> dict[str, list[str]]:
+        """Write df (with __bucket col) routed by :meth:`route`, so each
+        write task holds one bucket and lands one file; return the
         {bucket: sorted files} map of the committed output, found by
         listing it (no extra Spark job; safe because Spark's committer
         has moved committed files into place and removed its _temporary
@@ -707,13 +691,7 @@ class LakeTable:
         ``data/<snapshot_id>-<8 hex>``: racing writers plan the same
         snapshot id, and must not write into each other's output."""
         out_dir = os.path.join(self.root, "data", f"{snapshot_id}-{uuid.uuid4().hex[:8]}")
-        has_sub = "__subtask" in df.columns
-        shuffle_n = num_write_partitions or self.write_partitions(has_sub)
-        parts = ["__bucket"] + (["__subtask"] if has_sub else [])
-        out = df.repartition(shuffle_n, *parts)
-        if has_sub:
-            out = out.drop("__subtask")  # projection — partitioning kept
-        out.write.partitionBy("__bucket").parquet(out_dir)
+        self.route(df).write.partitionBy("__bucket").parquet(out_dir)
         files: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if not entry.startswith("__bucket="):
@@ -743,7 +721,7 @@ class LakeTable:
         truncate (a truncated max can under-state the range).
 
         Driver-side footer reads are bounded by the batch's file
-        count (dirty_buckets × fan-out) on the local root."""
+        count (one per dirty bucket) on the local root."""
         import pyarrow.parquet as pq
 
         out: dict[str, list[str]] = {}
@@ -827,8 +805,6 @@ class LakeTable:
         if include_op:
             sel.append(F.col("_op").cast("string").alias("_op"))
         sel.append(F.col("__bucket"))
-        if "__subtask" in df.columns:
-            sel.append(F.col("__subtask"))
         return df.select(*sel)
 
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
@@ -842,7 +818,7 @@ class LakeTable:
         cols = self.columns()
         snap = self._child(meta, batch_id, lineage=[])
         sid = snap["snapshot_id"]
-        data = self.with_subtask(df.withColumn("__bucket", self.bucket_expr()))
+        data = df.withColumn("__bucket", self.bucket_expr())
         obs = Observation()
         stored = self._stored_select(data, cols).observe(
             obs, F.count(F.lit(1)).alias("rows")
@@ -897,18 +873,12 @@ class LakeTable:
         )
         sid = snap["snapshot_id"]
 
-        # a caller may pre-bucket (the engine's bucket-window dedup);
-        # re-adding would mint fresh attributes and defeat the exchange
-        # reuse that makes that path one-shuffle. A frame without
-        # __subtask is written by bucket only, so the write lands ONE
-        # delta file per dirty bucket — every later read opens each
-        # delta file, so files, not rows, set read cost.
-        data = (
-            changes if "__bucket" in changes.columns
-            else changes.withColumn("__bucket", self.bucket_expr())
-        )
+        # the write lands ONE delta file per dirty bucket: every later
+        # read opens each delta file, so files, not rows, set read cost
         stored = self._stored_select(
-            data.withColumn("_op", F.col("op")), cols, include_op=True
+            changes.withColumn("__bucket", self.bucket_expr())
+            .withColumn("_op", F.col("op")),
+            cols, include_op=True,
         )
         # count the written rows DURING the write action (Observation:
         # an accumulator evaluated inline) — no second pass, not even a
@@ -956,10 +926,8 @@ class LakeTable:
         batch's broadcast key set (exactly ``_bucket_state``'s
         key_bounds contract)."""
         cols = self.columns()
-        if "__bucket" not in changes.columns:
-            changes = changes.withColumn("__bucket", self.bucket_expr())
         dirty = sorted(
-            str(r[0]) for r in changes.select("__bucket").distinct().collect()
+            str(r[0]) for r in changes.select(self.bucket_expr()).distinct().collect()
         )
         keys = changes.select(*KEY)
         kb = keys.agg(
@@ -988,19 +956,18 @@ class LakeTable:
         images = (
             changes.filter(F.col("op") != "D")
             .join(old_hit, on=KEY, how="left")
-            .select(*sel, "_lsn", "op", "__bucket")
+            .select(*sel, "_lsn", "op")
         )
         tombstones = changes.filter(F.col("op") == "D").select(
             *[F.col(c.name) for c in cols],
             *[F.col(n) for n, _ in SYSTEM_COLUMNS],
-            "op", "__bucket",
+            "op",
         )
         return images.unionByName(tombstones)
 
     def delta_depth(self) -> dict[str, int]:
         """Outstanding delta BATCHES per bucket (compaction signal) —
-        distinct writing snapshots, not raw file count: a fanned-out
-        write lands several files per bucket in one batch, and read
+        distinct write directories, not raw file count: read
         amplification scales with reconcile layers, not file handles."""
         out: dict[str, int] = {}
         for b, fl in self.meta().get("deltas", {}).items():
@@ -1032,16 +999,15 @@ class LakeTable:
         )
         sid = snap["snapshot_id"]
         snap["batch_id"] = batch_id or f"compact-{sid}"
-        state = self.with_subtask(
-            self._bucket_state(target, cols).withColumn(
-                "__bucket", self.bucket_expr()
-            )
-        )
+        # the read is routed, so the reconcile window and the bucket
+        # write share its one exchange: one base file per bucket
+        state = _newest_live(self.route(self._read_files(
+            [f for b in target for f in meta["files"].get(b, []) + meta["deltas"][b]],
+            cols, include_op=True,
+        )))
         new_files = self._write_buckets(
-            self._stored_select(state, cols), sid,
-            num_write_partitions=max(
-                1, min(len(target) * SUBTASK_SPREAD, self.write_partitions(True))
-            ),
+            self._stored_select(state.withColumn("__bucket", self.bucket_expr()), cols),
+            sid,
         )
         files = dict(meta["files"])
         deltas = {b: fl for b, fl in meta.get("deltas", {}).items() if b not in target}

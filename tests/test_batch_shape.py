@@ -1,7 +1,7 @@
 """Shape of one replay batch: how many Spark jobs it launches, what its
 write plan shuffles, and what it hands the lake table.
 
-A small batch is one lineage collect, one bucket-window dedup fused
+A small batch is one lineage collect, one max-LSN window dedup fused
 with the bucket write, and the snapshot commit. These tests pin its
 job count, the lineage argument ``merge`` receives, and the collapse
 of event rows redelivered within one batch. The write plan's shape and
@@ -69,8 +69,7 @@ def test_merge_receives_lineage_as_a_json_list(spark, tmp_path, world):
     assert sum(r["row_count"] for r in seen[0]) == m.events
 
 
-@pytest.mark.parametrize("limit", [None, 0], ids=["by-bucket", "fan-out"])
-def test_redelivered_event_rows_collapse(spark, tmp_path, world, limit):
+def test_redelivered_event_rows_collapse(spark, tmp_path, world):
     """An event row delivered twice within one batch (same key and
     same lsn) must apply once: each batch writes one row per key, and
     the replay reaches the state of the changelog without the copies.
@@ -80,11 +79,10 @@ def test_redelivered_event_rows_collapse(spark, tmp_path, world, limit):
     events = changelog[changelog["op"] != "DDL"]
     dup = pd.concat([changelog, events.iloc[::37]], ignore_index=True)
     assert len(dup) > len(changelog)
-    table = LakeTable.create(spark, str(tmp_path / f"dup{limit}"), n_buckets=4)
+    table = LakeTable.create(spark, str(tmp_path / "dup"), n_buckets=4)
     seed_lake(spark, table, seed_df)
-    kw = {} if limit is None else {"broadcast_key_limit": limit}
     metrics = ReplayEngine(
-        spark, table, changelog_from_pandas(spark, dup), delta=150, **kw
+        spark, table, changelog_from_pandas(spark, dup), delta=150
     ).run()
     for m in metrics:
         window = events[events["lsn"].between(m.lsn_lo, m.lsn_hi)]

@@ -45,6 +45,19 @@ def test_manual_compact_preserves_state(spark, tmp_path):
     assert table.compact() is None                  # nothing left to fold
 
 
+def test_compact_leaves_one_base_file_per_bucket(spark, tmp_path):
+    """``compact()`` writes each folded bucket as ONE base file (write
+    task i holds bucket i), so a later scan opens one file per bucket."""
+    _seed_df, _chg, table, engine = _setup(
+        spark, tmp_path, "one", compact_threshold=0
+    )
+    engine.run()
+    table.compact()
+    files = table.meta()["files"]
+    assert sorted(files, key=int) == [str(b) for b in range(8)]
+    assert {b: len(fl) for b, fl in files.items()} == {str(b): 1 for b in range(8)}
+
+
 def test_auto_compaction_bounds_delta_depth(spark, tmp_path):
     seed_df, chg, table, engine = _setup(
         spark, tmp_path, "c2", compact_threshold=3

@@ -114,10 +114,9 @@ def test_time_travel_point_read_uses_old_bounds(spark, tmp_path):
 
 
 def test_small_mor_batch_writes_one_delta_file_per_bucket(spark, tmp_path):
-    """A merge-on-read batch that arrives without ``__bucket`` (the
-    engine's broadcast path, direct callers) lands ONE delta file per
-    dirty bucket, not one per write task: every later read opens each
-    delta file, so the file count is the read cost."""
+    """A merge-on-read batch lands ONE delta file per dirty bucket, not
+    one per write task: every later read opens each delta file, so the
+    file count is the read cost."""
     table = LakeTable.create(spark, str(tmp_path / "lake"), n_buckets=4)
     before: dict[str, int] = {}
     for i, prefix in enumerate(["aaa", "bbb", "ccc"]):

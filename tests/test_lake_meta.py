@@ -112,12 +112,11 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 
 def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
-    """broadcast_key_limit=0 forces the (bucket, subtask) write
-    fan-out; a cow merge used to persist() the full payload on it
+    """A cow merge used to persist() the full payload of a large batch
     (VERDICT r1 'what's wrong' #2). NO DataFrame.persist happens on the
-    replay or on a direct merge of its bucket-window frame followed by
-    compact() (the copy-on-write result), and the result still matches
-    the oracle."""
+    replay or on a direct merge of the engine's deduped frame for the
+    whole rest of the changelog followed by compact() (the
+    copy-on-write result), and the result still matches the oracle."""
     calls: list[str] = []
     orig = psd.DataFrame.persist
 
@@ -134,11 +133,11 @@ def test_cow_large_batch_never_persists_payload(spark, tmp_path, monkeypatch):
     table = LakeTable.create(spark, str(tmp_path / "cow"), n_buckets=4)
     seed_lake(spark, table, seed_df)
     log = changelog_from_pandas(spark, changelog)
-    engine = ReplayEngine(spark, table, log, delta=250, broadcast_key_limit=0)
+    engine = ReplayEngine(spark, table, log, delta=250)
     engine.run(max_batches=1)
     lo, head = table.watermark(), int(changelog["lsn"].max())
     events = log.filter((F.col("lsn") > lo) & (F.col("op") != "DDL"))
-    table.merge(engine._dedup_changes(events, fanout=True), batch_id="cow-tail",
+    table.merge(engine._dedup_changes(events), batch_id="cow-tail",
                 watermark_hi=head)
     table.compact()
 

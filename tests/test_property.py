@@ -1,5 +1,5 @@
 """Property-based convergence (hypothesis): for ANY delivery order,
-batch size, dedup path, and DDL placement, replay converges to the
+batch size, bucket count, and DDL placement, replay converges to the
 single-threaded oracle state — the T2/T4/T5 invariants quantified over
 the input space instead of fixed seeds.
 
@@ -21,7 +21,7 @@ CASE = st.fixed_dictionaries(
     {
         "seed": st.integers(0, 10_000),
         "delta": st.sampled_from([75, 200, 450]),
-        "large_batch": st.booleans(),
+        "n_buckets": st.sampled_from([1, 4, 7]),
         "permute": st.booleans(),
         "ddl_frac": st.one_of(st.none(), st.floats(0.2, 0.8)),
     }
@@ -48,16 +48,13 @@ def test_any_config_converges_to_oracle(spark, tmp_path_factory, case):
     delivered = permute_delivery(chg, seed=case["seed"]) if case["permute"] else chg
 
     wd = tmp_path_factory.mktemp("prop")
-    table = LakeTable.create(spark, str(wd / "t"), n_buckets=4)
+    table = LakeTable.create(spark, str(wd / "t"), n_buckets=case["n_buckets"])
     seed_lake(spark, table, seed_df)
     ReplayEngine(
         spark,
         table,
         changelog_from_pandas(spark, delivered),
         delta=case["delta"],
-        # every batch takes bucket-window dedup; 0 adds the (bucket,
-        # subtask) write fan-out, the default writes by bucket alone
-        **({"broadcast_key_limit": 0} if case["large_batch"] else {}),
     ).run()
 
     expected = replay(seed_df, chg)  # oracle always sees LSN order

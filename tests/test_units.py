@@ -3,6 +3,8 @@ invariants, manifest derivation."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -242,7 +244,7 @@ def test_iceberg_backend_signature_parity():
     for meth in ("merge", "alter", "checkpoint_watermark", "compact",
                  "read", "meta", "watermark", "delta_depth",
                  "applied_batch_ids", "snapshot_chain", "bucket_expr",
-                 "expire_snapshots"):
+                 "route", "expire_snapshots"):
         lake_fn = getattr(LakeTable, meth)
         ice_fn = getattr(IcebergTable, meth)
         lake_params = inspect.signature(lake_fn).parameters
@@ -258,38 +260,8 @@ def test_iceberg_backend_signature_parity():
                 )
 
 
-def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path):
-    """Plan-shape guard: the large-batch path's write repartition must
-    collapse into the bucket-window dedup exchange — exactly ONE
-    Exchange (payload shuffle) end-to-end, keyed by (bucket, subtask).
-    A second Exchange here would double the payload bytes moved per
-    batch at 10^10 events (PLANS.md section 2 is the human-readable
-    twin of this assert)."""
-    from pyspark.sql import functions as F
-
-    from dx.engine import ReplayEngine, changelog_from_pandas
-    from dx.generator import gen_changelog, gen_seed_table
-
-    seed_df = gen_seed_table(2, 10, seed=3)
-    chg = gen_changelog(seed_df, n_events=300, seed=3)
-    table = LakeTable.create(spark, str(tmp_path / "fuse"), n_buckets=8)
-    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
-                       broadcast_key_limit=0)
-    events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
-    changes = eng._dedup_changes(events, fanout=True)
-    stored = table._stored_select(
-        changes.withColumn("_op", F.col("op")), table.columns(), include_op=True
-    ).repartition(table.write_partitions(True), "__bucket", "__subtask")
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "__subtask" in plan
-
-
-def test_small_batch_write_reuses_the_dedup_exchange(spark, tmp_path, monkeypatch):
-    """Plan-shape guard for the small path: the frame the bucket write
-    saves has exactly ONE Exchange, keyed by the bucket alone (no
-    ``__subtask``), so each dirty bucket gets one delta file and the
-    payload shuffles once."""
+def _record_writes(monkeypatch):
+    """Patch the parquet writer to record every frame it saves."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     written = []
@@ -300,16 +272,70 @@ def test_small_batch_write_reuses_the_dedup_exchange(spark, tmp_path, monkeypatc
         return parquet(self, path, *args, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    return written
+
+
+def _bucket_writes(spark, tmp_path, monkeypatch, n_buckets):
+    """The frames the bucket writes of a seed, one replay batch and a
+    compaction save, in that order."""
+    written = _record_writes(monkeypatch)
     seed_df = gen_seed_table(2, 10, seed=3)
     chg = gen_changelog(seed_df, n_events=300, seed=3)
-    table = LakeTable.create(spark, str(tmp_path / "small"), n_buckets=8)
+    table = LakeTable.create(spark, str(tmp_path / f"w{n_buckets}"), n_buckets=n_buckets)
     seed_lake(spark, table, seed_df)
-    written.clear()  # the seed write
     ReplayEngine(spark, table, changelog_from_pandas(spark, chg)).run_batch(0, 150)
-    assert len(written) == 1
-    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    table.compact()
+    assert len(written) == 3
+    return written
+
+
+def _assert_one_key_route(df, n_buckets):
+    """The frame's plan has exactly one Exchange: the key-hash route."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-    assert "hashpartitioning(__bucket" in plan and "__subtask" not in plan, plan
+    assert re.search(
+        rf"Exchange hashpartitioning\(repo#\d+, path#\d+, {n_buckets}\)", plan
+    ), plan
+    assert "subtask" not in plan, plan
+    return plan
+
+
+def test_bucket_write_fuses_into_dedup_exchange(spark, tmp_path, monkeypatch):
+    """Plan-shape guard: the frame every bucket write saves (seed,
+    replay batch with its dedup, compaction with its reconcile) has
+    exactly ONE Exchange, the key-hash route into ``n_buckets``
+    partitions; the dedup and reconcile windows and the write reuse it.
+    A second Exchange would double the payload bytes moved per batch.
+    PLANS.md section 2 is the human-readable twin of this assert."""
+    seed, batch, compaction = _bucket_writes(spark, tmp_path, monkeypatch, 8)
+    _assert_one_key_route(seed, 8)
+    for df in (batch, compaction):
+        assert "Window" in _assert_one_key_route(df, 8)
+
+
+def test_small_batch_write_reuses_the_dedup_exchange(spark, tmp_path, monkeypatch):
+    """Plan-shape guard for a small batch: the frame the bucket write
+    saves has exactly ONE Exchange, the dedup's key route, and write
+    task i holds bucket i, so each dirty bucket gets one delta file and
+    the payload shuffles once."""
+    seed_df = gen_seed_table(2, 10, seed=3)
+    chg = gen_changelog(seed_df, n_events=300, seed=3)
+    table = LakeTable.create(spark, str(tmp_path / "small"), n_buckets=4)
+    seed_lake(spark, table, seed_df)
+    written = _record_writes(monkeypatch)
+    lo = int(chg["lsn"].min()) - 1
+    ReplayEngine(spark, table, changelog_from_pandas(spark, chg)).run_batch(lo, lo + 12)
+    assert len(written) == 1
+    assert "Window" in _assert_one_key_route(written[0], 4)
+    assert written[0].filter(F.spark_partition_id() != F.col("__bucket")).count() == 0
+
+
+@pytest.mark.parametrize("n_buckets", [4, 8])
+def test_write_task_holds_exactly_its_bucket(spark, tmp_path, monkeypatch, n_buckets):
+    """Write task i holds bucket i and only bucket i, so each dirty
+    bucket gets one file per write and no task carries two buckets."""
+    for df in _bucket_writes(spark, tmp_path, monkeypatch, n_buckets):
+        assert df.filter(F.spark_partition_id() != F.col("__bucket")).count() == 0
 
 
 def test_empty_segment_metadata_only_commit(spark, tmp_path, jobs_of):

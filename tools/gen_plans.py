@@ -60,28 +60,30 @@ def main() -> int:
         grep(plan_of(q), "PushedFilters", "ReadSchema"),
     ))
 
-    # 2. bucket-window dedup = one exchange
+    # 2. routed dedup + bucket write = one exchange
     seed_df = gen_seed_table(3, 20, seed=5)
     chg = gen_changelog(seed_df, n_events=2_000, seed=5)
     import shutil
     wd = os.path.join(REPO, ".tmp", "plans")
     shutil.rmtree(wd, ignore_errors=True)
     table = LakeTable.create(spark, wd, n_buckets=8)
-    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg),
-                       broadcast_key_limit=0)
+    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg))
     events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
-    changes = eng._dedup_changes(events, fanout=True)
-    stored = table._stored_select(
-        changes.withColumn("_op", F.col("op")), table.columns(), include_op=True
-    ).repartition(table.write_partitions(True), "__bucket", "__subtask")
+    # the frame merge() hands _write_buckets, routed as the write routes it
+    stored = table.route(table._stored_select(
+        eng._dedup_changes(events).withColumn("__bucket", table.bucket_expr())
+        .withColumn("_op", F.col("op")),
+        table.columns(), include_op=True,
+    ))
     p2 = plan_of(stored)
     n_ex = p2.count("Exchange")
     sections.append((
-        f"Large-batch dedup + bucket write: exactly {n_ex} payload shuffle",
-        "`_dedup_changes(..., fanout=True)` fuses max-LSN dedup with the "
-        "write's (bucket, subtask) fan-out partitioning; the write-side "
-        "repartition collapses into the dedup's exchange (Exchange "
-        "count must be 1).",
+        f"Batch dedup + bucket write: exactly {n_ex} payload shuffle",
+        "`_dedup_changes` routes the batch by the key hash into "
+        "`n_buckets` partitions (`LakeTable.route`), so partition i "
+        "holds bucket i; the max-LSN window keyed on (repo, path) and "
+        "the write's own route reuse that exchange (Exchange count "
+        "must be 1).",
         grep(p2, "Exchange", "Window", "Sort "),
     ))
 
