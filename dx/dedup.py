@@ -107,7 +107,7 @@ def fold_partial(df: DataFrame, key: list[str] = KEY, lsn_col: str = "lsn",
     reserved = {*key, lsn_col, "op"}
     if value_cols is None:
         # Inferred default excludes engine/system helper columns
-        # (underscore-prefixed: __bucket, _lsn, …) and the
+        # (underscore-prefixed: _content_sha, _lsn, …) and the
         # replay frame's bookkeeping fields — folding those as payload
         # would silently corrupt them. A payload column that really
         # starts with "_" must be passed via value_cols explicitly.

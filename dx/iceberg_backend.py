@@ -229,8 +229,7 @@ class IcebergTable:
 
         ``changes`` is the engine's prepared frame: max-LSN deduped
         (X2), columns = logical schema + ``op`` + ``_content_sha`` +
-        ``_lsn`` (+ optional ``__bucket`` planning column, dropped —
-        Iceberg routes rows via its own bucket transform).
+        ``_lsn``; Iceberg routes rows via its own bucket transform.
         The payload-bearing source frame is never broadcast: multi-KB
         ``content`` per row over a whole batch can blow
         the broadcast size limit or OOM the driver.
@@ -239,8 +238,7 @@ class IcebergTable:
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
-        src = changes.drop("__bucket") if "__bucket" in changes.columns else changes
-        src.createOrReplaceTempView("dx_changes")
+        changes.createOrReplaceTempView("dx_changes")
         self._set_commit_props(batch_id, watermark_hi, lineage)
         self.spark.conf.set("spark.wap.id", batch_id)  # snapshot stamping
         value_cols = ["commit", "lang", "content", "_content_sha"]
@@ -248,7 +246,7 @@ class IcebergTable:
             # X10 (LakeTable.merge(update_mode='partial')): untouched
             # columns stay at their stored value unless a mid-batch
             # delete reset the key (dedup.fold_partial's __reset flag).
-            reset = ("c.__reset" if "__reset" in src.columns else "false")
+            reset = ("c.__reset" if "__reset" in changes.columns else "false")
             sets = ", ".join(
                 f"t.{c} = CASE WHEN {reset} THEN c.{c} "
                 f"ELSE coalesce(c.{c}, t.{c}) END"

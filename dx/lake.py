@@ -55,7 +55,12 @@ Scale notes (10^10 rows / 1000 executors):
   partitions, which is exactly the bucket id, so write task i holds
   bucket i and lands ONE file in it (Iceberg's ``bucket(N)`` transform
   as the write distribution). ``n_buckets`` sets the write task count,
-  and a reader pays per layer, not per write task.
+  and a reader pays per layer, not per write task. The write is flat
+  (no partition directories, no write-side sort): Spark names task
+  i's file ``part-<i>-…``, so the file name is the bucket. One pass
+  over the new files' parquet footers then yields each file's bucket,
+  key bounds and row count; a 0-row file (Spark always writes one for
+  partition 0) is left unreferenced for GC.
 - Readers take the physical schema from the snapshot's column specs
   (stored names + types), never from file footers: a file written
   before a column existed reads it as null, a dropped column's
@@ -203,6 +208,39 @@ def _newest_live(df: DataFrame) -> DataFrame:
     )
 
 
+# Iceberg manifests carry per-data-file column bounds so a point /
+# keyed read prunes files WITHIN a partition; same idea here: each
+# committed file's (repo, path) min/max goes into the snapshot's
+# ``file_stats`` map and keyed readers drop provably-disjoint files
+# before any IO (VERDICT r4 #4 — at 100× scale a bucket holds many
+# files and without this every one is scanned).
+def _key_bounds(md) -> list[str]:
+    """[repo_min, repo_max, path_min, path_max] from one file's parquet
+    footer (no data pages read — the same column-chunk statistics
+    Iceberg's writer lifts into manifests). Empty (→ the file is never
+    pruned, always conservative) when any key column lacks min/max
+    stats or a bound reaches the 64-char band where parquet writers
+    may truncate (a truncated max can under-state the range)."""
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    bounds: list[str] = []
+    for colname in KEY:
+        i = idx.get(colname)
+        if i is None:
+            return []
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(i).statistics
+            if st is None or not st.has_min_max:
+                return []
+            mn, mx = st.min, st.max
+            lo = mn if lo is None or mn < lo else lo
+            hi = mx if hi is None or mx > hi else hi
+        if lo is None or len(lo) >= 64 or len(hi) >= 64:
+            return []
+        bounds.extend([lo, hi])
+    return bounds
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed first: the planned snapshot's sequence
     number was taken between plan and commit (the commit's ``os.link``
@@ -219,6 +257,9 @@ APPLIED_BATCH_CAP = 4096
 
 # A committed snapshot's file name; commit temp files never match it.
 _SNAP_NAME = re.compile(r"s(\d+)\.json")
+# A written data file's name starts with its write task's partition id,
+# which the routed write makes the bucket id.
+_PART_NAME = re.compile(r"part-(\d+)-")
 
 
 class LakeTable:
@@ -269,7 +310,6 @@ class LakeTable:
             "deltas": {},
             "lineage": [],
             "applied_batches": [],
-            "row_count": 0,
             "applied_at": time.time(),
         }
         t._commit(snap)
@@ -463,12 +503,7 @@ class LakeTable:
         """Table state — current, or as of ``snapshot_id`` (time
         travel: snapshots are immutable, so any committed id stays
         readable until GC'd, exactly Iceberg's `VERSION AS OF`)."""
-        if snapshot_id is None:
-            meta = self.meta()
-            cols = self.columns()
-        else:
-            meta = self.snapshot_meta(snapshot_id)
-            cols = [ColumnSpec(**c) for c in meta["columns"]]
+        meta, cols = self._snapshot(snapshot_id)
         buckets = sorted(
             set(meta["files"]) | set(meta.get("deltas", {})), key=int
         )
@@ -479,11 +514,12 @@ class LakeTable:
 
     def _bucket_of(self, repo: str, path: str) -> int:
         """Bucket id of one key, computed on the driver: ``spark_hash``
-        reproduces the writers' ``bucket_expr`` bit for bit, and Python's
-        ``%`` with a positive divisor is Spark's ``pmod``. The first call
-        in a process checks the port against ``F.hash`` once
-        (``_check_hash_port``), so a Spark version that changes the hash
-        fails loudly instead of routing lookups to the wrong bucket."""
+        reproduces ``bucket_expr`` (the writers' ``route``) bit for bit,
+        and Python's ``%`` with a positive divisor is Spark's ``pmod``.
+        The first call in a process checks the port against ``F.hash``
+        once (``_check_hash_port``), so a Spark version that changes the
+        hash fails loudly instead of routing lookups to the wrong
+        bucket."""
         _check_hash_port(self.spark)
         return spark_hash(repo, path) % self.n_buckets
 
@@ -510,12 +546,7 @@ class LakeTable:
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import DataType, StructField, StructType
 
-        if snapshot_id is None:
-            meta = self.meta()
-            cols = self.columns()
-        else:
-            meta = self.snapshot_meta(snapshot_id)
-            cols = [ColumnSpec(**c) for c in meta["columns"]]
+        meta, cols = self._snapshot(snapshot_id)
         pf = self._point_files(meta, str(self._bucket_of(repo, path)), repo, path)
         physical = _physical_columns(cols, include_op=True)
         schema = DataType.fromDDL(_ddl(physical))
@@ -562,6 +593,12 @@ class LakeTable:
         self.meta_file_reads += 1
         return meta
 
+    def _snapshot(self, snapshot_id: str | None) -> tuple[dict, list[ColumnSpec]]:
+        """(metadata, logical columns) of ``snapshot_id``, or of the
+        head when it is None."""
+        meta = self.meta() if snapshot_id is None else self.snapshot_meta(snapshot_id)
+        return meta, [ColumnSpec(**c) for c in meta["columns"]]
+
     def changes(self, from_snapshot: str,
                 to_snapshot: str | None = None) -> DataFrame:
         """Incremental changelog read between two committed snapshots —
@@ -585,11 +622,8 @@ class LakeTable:
         across rewrites, so ``_lsn`` equality is an exact unchanged
         test (no payload comparison ever happens).
         """
-        old_meta = self.snapshot_meta(from_snapshot)
-        new_meta = (self.snapshot_meta(to_snapshot) if to_snapshot
-                    else self.meta())
-        old_cols = [ColumnSpec(**c) for c in old_meta["columns"]]
-        new_cols = [ColumnSpec(**c) for c in new_meta["columns"]]
+        old_meta, old_cols = self._snapshot(from_snapshot)
+        new_meta, new_cols = self._snapshot(to_snapshot)
         o_files, n_files = old_meta["files"], new_meta["files"]
         o_delt = old_meta.get("deltas", {})
         n_delt = new_meta.get("deltas", {})
@@ -681,79 +715,43 @@ class LakeTable:
         return snap["snapshot_id"]
 
     # ---------------------------------------------------------------- write
-    def _write_buckets(self, df: DataFrame, snapshot_id: str) -> dict[str, list[str]]:
-        """Write df (with __bucket col) routed by :meth:`route`, so each
-        write task holds one bucket and lands one file; return the
-        {bucket: sorted files} map of the committed output, found by
-        listing it (no extra Spark job; safe because Spark's committer
-        has moved committed files into place and removed its _temporary
-        dir by the time write() returns). The directory is
-        ``data/<snapshot_id>-<8 hex>``: racing writers plan the same
-        snapshot id, and must not write into each other's output."""
-        out_dir = os.path.join(self.root, "data", f"{snapshot_id}-{uuid.uuid4().hex[:8]}")
-        self.route(df).write.partitionBy("__bucket").parquet(out_dir)
-        files: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("__bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            d = os.path.join(out_dir, entry)
-            files[b] = sorted(
-                os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-            )
-        return files
+    def _write(self, df: DataFrame,
+               snapshot_id: str) -> tuple[dict[str, list[str]], dict[str, list[str]], int]:
+        """Write df routed by :meth:`route`, flat, into
+        ``data/<snapshot_id>-<8 hex>`` (racing writers plan the same
+        snapshot id and must not write into each other's output), then
+        read each new file's parquet footer once. Returns the
+        {bucket: sorted files} map, the per-file key bounds and the
+        number of rows written.
 
-    # ------------------------------------------------- key-level file skipping
-    # Iceberg manifests carry per-data-file column bounds so a point /
-    # keyed read prunes files WITHIN a partition; same idea here: each
-    # committed file's (repo, path) min/max goes into the snapshot's
-    # ``file_stats`` map and keyed readers drop provably-disjoint
-    # files before any IO (VERDICT r4 #4 — at 100× scale a bucket
-    # holds many files and without this every one is scanned).
-
-    def _collect_file_stats(self, files_map: dict[str, list[str]]) -> dict[str, list[str]]:
-        """Per-file [repo_min, repo_max, path_min, path_max] from the
-        parquet FOOTERS of just-committed files (no data pages read —
-        the same column-chunk statistics Iceberg's writer lifts into
-        manifests). A file is skipped (→ never pruned, always
-        conservative) when any key column lacks min/max stats or a
-        bound reaches the 64-char band where parquet writers may
-        truncate (a truncated max can under-state the range).
-
-        Driver-side footer reads are bounded by the batch's file
-        count (one per dirty bucket) on the local root."""
+        Write task i holds bucket i and Spark names its file
+        ``part-<i>-…``, so the bucket comes from the name; a task whose
+        output ``spark.sql.files.maxRecordsPerFile`` splits lands
+        several files in the one bucket. A 0-row file (Spark writes one
+        for partition 0 even when bucket 0 is clean) is not referenced;
+        GC removes it. Listing the output is safe: Spark's committer
+        has moved committed files into place and removed its
+        _temporary dir by the time write() returns."""
         import pyarrow.parquet as pq
 
-        out: dict[str, list[str]] = {}
-        for fl in files_map.values():
-            for f in fl:
-                try:
-                    md = pq.ParquetFile(f).metadata
-                except Exception:
-                    continue
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                bounds: list[str] = []
-                for colname in KEY:
-                    i = idx.get(colname)
-                    if i is None:
-                        bounds = []
-                        break
-                    lo = hi = None
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(i).statistics
-                        if st is None or not st.has_min_max:
-                            lo = None
-                            break
-                        mn, mx = st.min, st.max
-                        lo = mn if lo is None or mn < lo else lo
-                        hi = mx if hi is None or mx > hi else hi
-                    if lo is None or len(lo) >= 64 or len(hi) >= 64:
-                        bounds = []
-                        break
-                    bounds.extend([lo, hi])
-                if bounds:
-                    out[f] = bounds
-        return out
+        out_dir = os.path.join(self.root, "data", f"{snapshot_id}-{uuid.uuid4().hex[:8]}")
+        self.route(df).write.parquet(out_dir)
+        files: dict[str, list[str]] = {}
+        stats: dict[str, list[str]] = {}
+        rows = 0
+        for name in sorted(os.listdir(out_dir)):
+            if not name.endswith(".parquet"):
+                continue
+            f = os.path.join(out_dir, name)
+            md = pq.read_metadata(f)
+            if md.num_rows == 0:
+                continue
+            files.setdefault(str(int(_PART_NAME.match(name)[1])), []).append(f)
+            rows += md.num_rows
+            bounds = _key_bounds(md)
+            if bounds:
+                stats[f] = bounds
+        return files, stats, rows
 
     @staticmethod
     def _rebuild_file_stats(old_stats: dict, new_stats: dict,
@@ -804,30 +802,16 @@ class LakeTable:
         sel += [F.col(n).cast(t).alias(n) for n, t in SYSTEM_COLUMNS]
         if include_op:
             sel.append(F.col("_op").cast("string").alias("_op"))
-        sel.append(F.col("__bucket"))
         return df.select(*sel)
 
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
-        """Initial full load (all buckets written once). Row count is
-        observed DURING the write action (merge's Observation
-        shape) — a full initial load is the one batch that touches
-        every byte, so a read-back counting pass would double it."""
-        from pyspark.sql import Observation
-
+        """Initial full load (all buckets written once)."""
         meta = self.meta()
-        cols = self.columns()
         snap = self._child(meta, batch_id, lineage=[])
         sid = snap["snapshot_id"]
-        data = df.withColumn("__bucket", self.bucket_expr())
-        obs = Observation()
-        stored = self._stored_select(data, cols).observe(
-            obs, F.count(F.lit(1)).alias("rows")
+        snap["files"], snap["file_stats"], _ = self._write(
+            self._stored_select(df, self.columns()), sid
         )
-        files = self._write_buckets(stored, sid)
-        row_count = int(obs.get["rows"]) if files else 0
-        snap["files"] = files
-        snap["row_count"] = row_count
-        snap["file_stats"] = self._collect_file_stats(files)
         self._commit(snap)
         return sid
 
@@ -869,34 +853,22 @@ class LakeTable:
             meta, batch_id,
             lineage=lineage or [],
             watermark=max(int(meta["watermark"]), int(watermark_hi)),
-            row_count=None,
         )
         sid = snap["snapshot_id"]
 
         # the write lands ONE delta file per dirty bucket: every later
         # read opens each delta file, so files, not rows, set read cost
-        stored = self._stored_select(
-            changes.withColumn("__bucket", self.bucket_expr())
-            .withColumn("_op", F.col("op")),
-            cols, include_op=True,
+        new_files, new_stats, change_rows = self._write(
+            self._stored_select(changes.withColumn("_op", F.col("op")),
+                                cols, include_op=True),
+            sid,
         )
-        # count the written rows DURING the write action (Observation:
-        # an accumulator evaluated inline) — no second pass, not even a
-        # parquet-footer read job.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stored = stored.observe(obs, F.count(F.lit(1)).alias("rows"))
-        new_files = self._write_buckets(stored, sid)
         deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
         for b, fl in new_files.items():
             deltas.setdefault(b, []).extend(fl)
-
-        change_rows = int(obs.get["rows"]) if new_files else 0
         snap["deltas"] = deltas
         snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), self._collect_file_stats(new_files),
-            meta["files"], deltas,
+            meta.get("file_stats", {}), new_stats, meta["files"], deltas,
         )
         snap["merge_stats"] = {
             "dirty_buckets": len(new_files),
@@ -966,14 +938,11 @@ class LakeTable:
         return images.unionByName(tombstones)
 
     def delta_depth(self) -> dict[str, int]:
-        """Outstanding delta BATCHES per bucket (compaction signal) —
-        distinct write directories, not raw file count: read
-        amplification scales with reconcile layers, not file handles."""
-        out: dict[str, int] = {}
-        for b, fl in self.meta().get("deltas", {}).items():
-            if fl:
-                out[b] = len({f.rsplit("/data/", 1)[1].split("/")[0] for f in fl})
-        return out
+        """Outstanding delta files per bucket (compaction signal): a
+        write lands one file per dirty bucket (more only when
+        ``spark.sql.files.maxRecordsPerFile`` splits it), so this is the
+        number of reconcile layers a read of the bucket pays."""
+        return {b: len(fl) for b, fl in self.meta().get("deltas", {}).items() if fl}
 
     def compact(self, buckets: list[str] | None = None,
                 batch_id: str | None = None) -> str | None:
@@ -1005,10 +974,7 @@ class LakeTable:
             [f for b in target for f in meta["files"].get(b, []) + meta["deltas"][b]],
             cols, include_op=True,
         )))
-        new_files = self._write_buckets(
-            self._stored_select(state.withColumn("__bucket", self.bucket_expr()), cols),
-            sid,
-        )
+        new_files, new_stats, _ = self._write(self._stored_select(state, cols), sid)
         files = dict(meta["files"])
         deltas = {b: fl for b, fl in meta.get("deltas", {}).items() if b not in target}
         for b in target:
@@ -1016,8 +982,7 @@ class LakeTable:
         snap["files"] = files
         snap["deltas"] = deltas
         snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), self._collect_file_stats(new_files),
-            files, deltas,
+            meta.get("file_stats", {}), new_stats, files, deltas,
         )
         self._commit(snap)
         return sid
@@ -1070,22 +1035,20 @@ class LakeTable:
                 referenced.update(os.path.realpath(f) for f in fl)
             for fl in s.get("deltas", {}).values():
                 referenced.update(os.path.realpath(f) for f in fl)
-        data_root = os.path.join(self.root, "data")
+        data_root = os.path.realpath(os.path.join(self.root, "data"))
+        # write dirs holding a referenced file, at any depth: a table
+        # written with per-bucket subdirectories must keep them
+        live = {os.path.relpath(p, data_root).split(os.sep, 1)[0] for p in referenced}
         for snap_dir in os.listdir(data_root):
             d = os.path.join(data_root, snap_dir)
-            for bucket_dir in os.listdir(d):
-                bd = os.path.join(d, bucket_dir)
-                if not os.path.isdir(bd):
-                    continue
-                for fname in os.listdir(bd):
-                    p = os.path.realpath(os.path.join(bd, fname))
-                    if (fname.endswith(".parquet") and p not in referenced
-                            and now - os.path.getmtime(p) >= min_age_s):
-                        os.remove(p)
-                        removed_data += 1
-                if not os.listdir(bd):
-                    os.rmdir(bd)
-            if (not any(e.startswith("__bucket=") for e in os.listdir(d))
+            for fname in os.listdir(d):
+                p = os.path.join(d, fname)
+                if (fname.endswith(".parquet") and p not in referenced
+                        and now - os.path.getmtime(p) >= min_age_s):
+                    os.remove(p)
+                    removed_data += 1
+            if (snap_dir not in live
+                    and not any(e.endswith(".parquet") for e in os.listdir(d))
                     and now - os.path.getmtime(d) >= min_age_s):
                 # only marker/_SUCCESS files left, or a write that never
                 # committed (its _temporary dir) → the whole dir is dead

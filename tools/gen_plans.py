@@ -69,10 +69,9 @@ def main() -> int:
     table = LakeTable.create(spark, wd, n_buckets=8)
     eng = ReplayEngine(spark, table, changelog_from_pandas(spark, chg))
     events = changelog_from_pandas(spark, chg).filter("op != 'DDL'")
-    # the frame merge() hands _write_buckets, routed as the write routes it
+    # the frame merge() hands _write, routed as the write routes it
     stored = table.route(table._stored_select(
-        eng._dedup_changes(events).withColumn("__bucket", table.bucket_expr())
-        .withColumn("_op", F.col("op")),
+        eng._dedup_changes(events).withColumn("_op", F.col("op")),
         table.columns(), include_op=True,
     ))
     p2 = plan_of(stored)
@@ -83,7 +82,8 @@ def main() -> int:
         "`n_buckets` partitions (`LakeTable.route`), so partition i "
         "holds bucket i; the max-LSN window keyed on (repo, path) and "
         "the write's own route reuse that exchange (Exchange count "
-        "must be 1).",
+        "must be 1). The write is flat (no `partitionBy`), so the only "
+        "Sort is the window's.",
         grep(p2, "Exchange", "Window", "Sort "),
     ))
 
