@@ -5,7 +5,8 @@ and written flat; the bucket of each file is read from its name
 (``part-<write task>-…``). These tests read every referenced file back
 and hash each row, across a seed, a batch that leaves bucket 0 clean,
 a partial merge, a compaction and a write split by
-``spark.sql.files.maxRecordsPerFile``.
+``spark.sql.files.maxRecordsPerFile``, and check that no write plans a
+``Sort`` under its ``WriteFiles``.
 """
 
 from __future__ import annotations
@@ -33,8 +34,8 @@ def _changes(spark, rows):
     return df.withColumn("_content_sha", F.unhex(F.sha2(F.col("content"), 256)))
 
 
-def _keys_outside_bucket_zero(n_buckets, count, prefix="k"):
-    keys = [("r", f"{prefix}/{i:04d}") for i in range(10 * count)]
+def _keys_outside_bucket_zero(n_buckets, count):
+    keys = [("r", f"k/{i:04d}") for i in range(10 * count)]
     return [k for k in keys if spark_hash(*k) % n_buckets != 0][:count]
 
 
@@ -140,3 +141,39 @@ def test_gc_keeps_a_write_dir_whose_referenced_file_is_nested(spark, tmp_path):
     assert os.path.exists(nested)
     assert not os.path.exists(src)
     assert table.read().count() == 6
+
+
+def _write_plans(spark, fn) -> list[str]:
+    """Physical plans of the file writes ``fn`` runs, read back from
+    Spark's SQL status store once its listener bus has drained."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        found = store.executionsList()
+        return [found.apply(i) for i in range(found.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > before]
+    return [p for p in plans if "WriteFiles" in p]
+
+
+def test_bucket_writes_plan_no_sort(spark, tmp_path):
+    """A flat write has no required ordering, so seed, merge and
+    compaction plan nothing between ``WriteFiles`` and the routed rows
+    (a ``partitionBy`` write sorts every row of every task first)."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    keys = [("r", f"k/{i:04d}") for i in range(20)]
+    for write in (
+        lambda: seed_lake(spark, table, gen_seed_table(2, 10, seed=5)),
+        lambda: table.merge(_changes(spark, [(r, p, i + 1, "U") for i, (r, p) in enumerate(keys)]),
+                            batch_id="b1", watermark_hi=20),
+        lambda: table.compact(),
+    ):
+        plans = _write_plans(spark, write)
+        assert len(plans) == 1
+        lines = plans[0].splitlines()
+        under = [b for a, b in zip(lines, lines[1:]) if "WriteFiles" in a]
+        assert under and not any("Sort" in b for b in under), plans[0]
