@@ -189,22 +189,16 @@ class ReplayEngine:
 
     # ------------------------------------------------------------ run loop
     def run_batch(self, lo: int, hi: int) -> list[BatchMetrics]:
-        """Apply events with lsn ∈ (lo, hi], splitting at DDL boundaries."""
+        """Apply events with lsn ∈ (lo, hi], splitting at DDL boundaries:
+        each DDL event closes the segment below it and applies alone."""
         out: list[BatchMetrics] = []
-        window = self.changelog.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        ddls = [d for d in self.ddl_events() if lo < d["lsn"] <= hi]
-        bounds = [lo] + [d["lsn"] for d in ddls] + [hi]
-        segments: list[tuple[int, int]] = []
-        for i in range(len(bounds) - 1):
-            a = bounds[i]
-            b = bounds[i + 1] - 1 if i + 1 <= len(ddls) else bounds[i + 1]
-            segments.append((a, b))
-        # segments[i] covers (a, b]; ddls[i] sits between segment i and i+1
-        for i, (a, b) in enumerate(segments):
-            if b > a:
-                out.append(self._apply_segment(a, b, window))
-            if i < len(ddls):
-                out.append(self._apply_ddl(ddls[i]))
+        for d in [d for d in self.ddl_events() if lo < d["lsn"] <= hi]:
+            if d["lsn"] - 1 > lo:
+                out.append(self._apply_segment(lo, d["lsn"] - 1))
+            out.append(self._apply_ddl(d))
+            lo = d["lsn"]
+        if hi > lo:
+            out.append(self._apply_segment(lo, hi))
         return out
 
     def _apply_ddl(self, d) -> BatchMetrics:
@@ -239,14 +233,14 @@ class ReplayEngine:
             .collect()
         ]
 
-    def _apply_segment(self, lo: int, hi: int, window: DataFrame) -> BatchMetrics:
+    def _apply_segment(self, lo: int, hi: int) -> BatchMetrics:
         t0 = time.monotonic()
         batch_id = f"b{lo + 1}-{hi}"
         if mf.already_applied(self.table, batch_id, hi):
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, None, 0, 0.0, 0.0, skipped=True)
             self._emit(m)
             return m
-        events = window.filter(
+        events = self.changelog.filter(
             (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
         )
         # The narrow lineage aggregation runs first: its rows give the

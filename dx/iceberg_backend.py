@@ -142,14 +142,6 @@ class IcebergTable:
         ).collect()
         return int(rows[0]["w"] or 0)
 
-    def applied_batch_ids(self) -> set[str]:
-        """manifest.already_applied's exact-membership side: batch ids
-        from the snapshot summaries — the snapshot log IS the manifest."""
-        rows = self.spark.sql(
-            f"SELECT summary['dx.batch-id'] AS b FROM {self.fqn}.snapshots"
-        ).collect()
-        return {r["b"] for r in rows if r["b"]}
-
     def snapshot_chain(self) -> list[dict]:
         """LakeTable.snapshot_chain (lineage export surface)."""
         rows = self.spark.sql(
@@ -189,8 +181,11 @@ class IcebergTable:
         data, the same guarantee LakeTable implements via __fid names.
 
         Iceberg schema updates do not create data snapshots, so the
-        batch_id/watermark stamp goes into table properties (the
-        idempotence guard reads both)."""
+        batch_id/LSN stamp goes into a ``dx.ddl.<batch_id>`` table
+        property. Nothing reads it: the idempotence guard reads only
+        the snapshot watermark, which this does not advance, so a DDL
+        re-run after a crash before the next data commit is not
+        skipped here."""
         if action == "add_column":
             self.spark.sql(f"ALTER TABLE {self.fqn} ADD COLUMN {column} {col_type}")
         elif action == "drop_column":

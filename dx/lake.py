@@ -60,7 +60,7 @@ Scale notes (10^10 rows / 1000 executors):
   i's file ``part-<i>-…``, so the file name is the bucket. One pass
   over the new files' parquet footers then yields each file's bucket,
   key bounds and row count; a 0-row file (Spark always writes one for
-  partition 0) is left unreferenced for GC.
+  partition 0) is deleted on the spot.
 - Readers take the physical schema from the snapshot's column specs
   (stored names + types), never from file footers: a file written
   before a column existed reads it as null, a dropped column's
@@ -247,14 +247,6 @@ class CommitConflict(RuntimeError):
     found the name present). Re-plan from the new head."""
 
 
-# Recent-batch-id window carried in every snapshot (defense-in-depth
-# idempotence membership). The PRIMARY guard is the monotone watermark
-# (apply advances it to lsn_hi, so any applied batch fails the
-# lsn_hi > watermark test); the id set only exists to also absorb
-# pathological redeliveries, so a bounded recent window is sufficient
-# and keeps snapshot JSON O(1) regardless of run length.
-APPLIED_BATCH_CAP = 4096
-
 # A committed snapshot's file name; commit temp files never match it.
 _SNAP_NAME = re.compile(r"s(\d+)\.json")
 # A written data file's name starts with its write task's partition id,
@@ -309,7 +301,6 @@ class LakeTable:
             "files": {},
             "deltas": {},
             "lineage": [],
-            "applied_batches": [],
             "applied_at": time.time(),
         }
         t._commit(snap)
@@ -356,10 +347,10 @@ class LakeTable:
         """Walk parent links from the current snapshot toward the root.
 
         O(chain) file reads — this is the lineage/time-travel EXPORT
-        surface, never on the per-batch hot path: the per-batch guards
-        (``watermark()``, ``applied_batch_ids()``) read ONLY the head
-        snapshot. The walk stops gracefully at the expire horizon
-        (``expire_snapshots`` GC removes old metadata files).
+        surface, never on the per-batch hot path: the per-batch guard
+        (``watermark()``) reads ONLY the head snapshot. The walk stops
+        gracefully at the expire horizon (``expire_snapshots`` GC
+        removes old metadata files).
         """
         out, meta = [], self.meta()
         while meta is not None:
@@ -384,29 +375,19 @@ class LakeTable:
                              "batch_id": snap.get("batch_id")})
         return rows
 
-    def applied_batch_ids(self) -> set[str]:
-        """Recent applied batch ids — read from the HEAD snapshot only
-        (every commit appends its batch_id to a capped window carried
-        forward in the snapshot), O(1) file reads per call. Before this
-        the check walked every ancestor snapshot: O(batches) JSON reads
-        per batch, O(batches²) over a run — a driver-side scale killer
-        at 10^10 events in Δ-sized batches."""
-        return set(self.meta().get("applied_batches", []))
-
     def _child(self, meta: dict, batch_id: str | None, **overrides) -> dict:
-        """Common child-snapshot construction: the parent's sequence
-        number + 1, parent link, applied-batch window append (capped),
-        commit timestamp."""
-        applied = list(meta.get("applied_batches", []))
-        if batch_id:
-            applied.append(batch_id)
-            applied = applied[-APPLIED_BATCH_CAP:]
+        """Common child-snapshot construction: the parent's table state
+        (schema, watermark, files) under the parent's sequence number +
+        1, a parent link and a commit timestamp. What describes the
+        parent's own commit does not carry over: the child starts with
+        no lineage and no ``merge_stats``."""
+        inherited = {k: v for k, v in meta.items() if k != "merge_stats"}
         return {
-            **meta,
+            **inherited,
             "snapshot_id": f"s{int(meta['snapshot_id'][1:]) + 1}",
             "parent_id": meta["snapshot_id"],
             "batch_id": batch_id,
-            "applied_batches": applied,
+            "lineage": [],
             "applied_at": time.time(),
             **overrides,
         }
@@ -697,7 +678,6 @@ class LakeTable:
             meta, batch_id,
             schema_version=meta["schema_version"] + 1,
             columns=[asdict(c) for c in cols],
-            lineage=[],
             watermark=max(meta["watermark"], at_lsn or 0),
         )
         self._commit(snap)
@@ -707,9 +687,7 @@ class LakeTable:
         """Metadata-only snapshot advancing the watermark (empty batch)."""
         meta = dict(self.meta())
         snap = self._child(
-            meta, batch_id,
-            lineage=[],
-            watermark=max(int(meta["watermark"]), int(hi)),
+            meta, batch_id, watermark=max(int(meta["watermark"]), int(hi)),
         )
         self._commit(snap)
         return snap["snapshot_id"]
@@ -728,10 +706,11 @@ class LakeTable:
         ``part-<i>-…``, so the bucket comes from the name; a task whose
         output ``spark.sql.files.maxRecordsPerFile`` splits lands
         several files in the one bucket. A 0-row file (Spark writes one
-        for partition 0 even when bucket 0 is clean) is not referenced;
-        GC removes it. Listing the output is safe: Spark's committer
-        has moved committed files into place and removed its
-        _temporary dir by the time write() returns."""
+        for partition 0 even when bucket 0 is clean) is deleted: no
+        snapshot references this dir before the caller commits. Listing
+        the output is safe: Spark's committer has moved committed files
+        into place and removed its _temporary dir by the time write()
+        returns."""
         import pyarrow.parquet as pq
 
         out_dir = os.path.join(self.root, "data", f"{snapshot_id}-{uuid.uuid4().hex[:8]}")
@@ -745,6 +724,7 @@ class LakeTable:
             f = os.path.join(out_dir, name)
             md = pq.read_metadata(f)
             if md.num_rows == 0:
+                os.remove(f)
                 continue
             files.setdefault(str(int(_PART_NAME.match(name)[1])), []).append(f)
             rows += md.num_rows
@@ -807,7 +787,7 @@ class LakeTable:
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
         """Initial full load (all buckets written once)."""
         meta = self.meta()
-        snap = self._child(meta, batch_id, lineage=[])
+        snap = self._child(meta, batch_id)
         sid = snap["snapshot_id"]
         snap["files"], snap["file_stats"], _ = self._write(
             self._stored_select(df, self.columns()), sid
@@ -959,7 +939,6 @@ class LakeTable:
             return None
         snap = self._child(
             meta, None,
-            lineage=[],
             merge_stats={
                 "compacted_buckets": len(target),
                 "total_buckets": self.n_buckets,
@@ -1041,6 +1020,9 @@ class LakeTable:
         live = {os.path.relpath(p, data_root).split(os.sep, 1)[0] for p in referenced}
         for snap_dir in os.listdir(data_root):
             d = os.path.join(data_root, snap_dir)
+            # the dir's age is read before its own deletes, which move
+            # its mtime to now
+            dir_age = now - os.path.getmtime(d)
             for fname in os.listdir(d):
                 p = os.path.join(d, fname)
                 if (fname.endswith(".parquet") and p not in referenced
@@ -1049,7 +1031,7 @@ class LakeTable:
                     removed_data += 1
             if (snap_dir not in live
                     and not any(e.endswith(".parquet") for e in os.listdir(d))
-                    and now - os.path.getmtime(d) >= min_age_s):
+                    and dir_age >= min_age_s):
                 # only marker/_SUCCESS files left, or a write that never
                 # committed (its _temporary dir) → the whole dir is dead
                 shutil.rmtree(d)

@@ -106,7 +106,6 @@ def main(argv: list[str] | None = None) -> int:
             "columns": [c["name"] for c in meta["columns"]],
             "watermark": meta["watermark"],
             "n_buckets": meta["n_buckets"],
-            "committed_batches": len(t.applied_batch_ids()),
             "lineage_rows": len(t.lineage()),
         }, indent=2))
         return 0

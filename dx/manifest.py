@@ -15,11 +15,15 @@ there is nothing to desynchronize: re-reading the chain reconstructs
 the manifest exactly.
 
 Idempotence guard: the engine applies batches in LSN order, so
-``batch.lsn_hi <= table.watermark()`` ⇔ already applied ⇒ no-op; the
-exact batch_id set is also available (``applied_batch_ids``) for
-out-of-order defensiveness. Replay from ANY checkpoint converges
-(BASELINE.json:6) because apply is a last-writer-wins MERGE of
-max-LSN-deduped rows — re-applying a prefix is absorbed.
+``batch.lsn_hi <= table.watermark()`` ⇔ already applied ⇒ no-op. The
+watermark is the one guard: every batch id names its top LSN
+(``b<lo>-<hi>``, ``ddl<lsn>``), every commit that applies one sets
+``watermark = max(parent, that LSN)`` and no commit lowers it, so an
+applied id always has ``hi <= watermark`` (Delta's idempotent writes
+likewise keep one monotone version per writer, not a set of ids).
+Replay from ANY checkpoint converges (BASELINE.json:6) because apply
+is a last-writer-wins MERGE of max-LSN-deduped rows — re-applying a
+prefix is absorbed.
 
 FIXTURES.md F3 fixes the exported manifest schema.
 """
@@ -71,8 +75,7 @@ def per_partition_watermarks(spark: SparkSession, table: LakeTable) -> DataFrame
 
 
 def already_applied(table: LakeTable, batch_id: str, lsn_hi: int) -> bool:
-    """Idempotent-apply guard: LSN-order watermark check, plus exact
-    batch-id membership for defense in depth."""
-    if lsn_hi <= table.watermark():
-        return True
-    return batch_id in table.applied_batch_ids()
+    """Idempotent-apply guard: ``batch_id`` (whose top LSN is
+    ``lsn_hi``) is applied iff the head watermark covers ``lsn_hi``.
+    One head-snapshot read."""
+    return lsn_hi <= table.watermark()

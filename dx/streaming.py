@@ -52,12 +52,11 @@ def stream_replay(
     """
 
     def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # the engine treats the micro-batch frame as its changelog and
         # replays (watermark, max lsn] out of it — events at or below
         # the table watermark (redelivery) are skipped by the guard,
-        # events above it are applied in bounded delta steps.
+        # events above it are applied in bounded delta steps. An empty
+        # micro-batch has max lsn 0, so run() returns at once.
         engine = ReplayEngine(
             spark, table, batch_df, delta=delta, **engine_kwargs
         )

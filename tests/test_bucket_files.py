@@ -14,6 +14,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -94,11 +95,12 @@ def test_every_file_holds_only_its_bucket(spark, tmp_path, n_buckets):
     assert table.read().count() == 40 + len(clean0) + len(many)
 
 
-def test_clean_bucket_zero_leaves_one_unreferenced_empty_file(spark, tmp_path):
+def test_clean_bucket_zero_leaves_no_empty_file(spark, tmp_path):
     """Spark writes a 0-row file for partition 0 even when bucket 0 is
-    clean. The merge references no 0-row file and counts only the
-    buckets and rows it wrote; GC removes the empty file and leaves no
-    data dir without a referenced file."""
+    clean; the write deletes it, so right after the merge the parquet
+    files on disk are exactly the ones the snapshot references. The
+    merge counts only the buckets and rows it wrote, and GC after a
+    compaction leaves no data dir without a referenced file."""
     table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     keys = _keys_outside_bucket_zero(4, 10)
     sid = table.merge(_changes(spark, [(r, p, i + 1, "U") for i, (r, p) in enumerate(keys)]),
@@ -106,10 +108,8 @@ def test_clean_bucket_zero_leaves_one_unreferenced_empty_file(spark, tmp_path):
     meta = table.meta()
     data = os.path.join(table.root, "data")
     written = glob.glob(os.path.join(data, f"{sid}-*", "*.parquet"))
-    empty = [f for f in written if pq.read_metadata(f).num_rows == 0]
-    assert [os.path.basename(f)[:11] for f in empty] == ["part-00000-"]
-    refs = _referenced(meta)
-    assert not set(empty) & set(refs)
+    assert all(pq.read_metadata(f).num_rows > 0 for f in written)
+    assert set(written) == set(_referenced(meta))
     dirty = {str(spark_hash(*k) % 4) for k in keys}
     assert set(meta["deltas"]) == dirty
     assert meta["merge_stats"]["dirty_buckets"] == len(dirty)
@@ -117,12 +117,31 @@ def test_clean_bucket_zero_leaves_one_unreferenced_empty_file(spark, tmp_path):
 
     table.compact()
     table.expire_snapshots(keep_last=1, min_age_s=0)
-    assert not any(os.path.exists(f) for f in empty)
     refs = _referenced(table.meta())
     on_disk = glob.glob(os.path.join(data, "**", "*.parquet"), recursive=True)
     assert set(on_disk) == set(refs)
     assert set(os.listdir(data)) == {os.path.basename(os.path.dirname(f)) for f in refs}
     assert table.read().count() == len(keys)
+
+
+def test_gc_removes_an_old_dead_dir_in_one_pass(spark, tmp_path):
+    """A dead write dir older than ``min_age_s`` goes in one GC pass:
+    deleting its files moves the dir's mtime to now, so its age is
+    read before them."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    seed_lake(spark, table, gen_seed_table(1, 6, seed=2))
+    (src,) = next(iter(table.meta()["files"].values()))
+    dead = os.path.join(table.root, "data", "s9-0000dead")
+    os.makedirs(dead)
+    shutil.copy(src, os.path.join(dead, "part-00000-x.parquet"))
+    open(os.path.join(dead, "_SUCCESS"), "w").close()
+    old = time.time() - 3600
+    for p in [os.path.join(dead, n) for n in os.listdir(dead)] + [dead]:
+        os.utime(p, (old, old))
+    table.expire_snapshots(keep_last=1, min_age_s=1)
+    assert not os.path.exists(dead)
+    assert os.path.exists(src)
+    assert table.read().count() == 6
 
 
 def test_gc_keeps_a_write_dir_whose_referenced_file_is_nested(spark, tmp_path):

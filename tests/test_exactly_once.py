@@ -115,3 +115,51 @@ def test_t3b_crash_before_commit_point(spark, tmp_path, world):
     ReplayEngine(spark, LakeTable.load(spark, table.root), log_df, delta=300).run()
     t = LakeTable.load(spark, table.root)
     assert state_hash(spark_state_to_pandas(t.read(include_system=True))) == state_hash(expected)
+
+
+def test_watermark_covers_every_applied_batch_id(spark, tmp_path):
+    """Every batch id names its top LSN (``b<lo>-<hi>``, ``ddl<lsn>``)
+    and no commit lowers the watermark, so after a replay with an empty
+    window and DDL splits every id in the chain is ``already_applied``
+    and a fresh engine applies nothing."""
+    import re
+
+    from dx import manifest as mf
+    from dx.generator import DDLSpec
+
+    seed_df = gen_seed_table(n_repos=2, paths_per_repo=20, seed=23)
+    changelog = gen_changelog(
+        seed_df, n_events=900, seed=23, batch_size=300,
+        ddl_specs=[DDLSpec(0.4, "add_column", "lang2", "string"),
+                   DDLSpec(0.7, "drop_column", "lang2")],
+    )
+    changelog["lsn"] += 300  # the first window (0, 300] is empty
+    table = _fresh_table(spark, tmp_path, seed_df, "cover")
+    log_df = changelog_from_pandas(spark, changelog)
+    metrics = ReplayEngine(spark, table, log_df, delta=300).run()
+    assert any(m.events == 0 and m.snapshot_id for m in metrics)
+    assert sum(m.ddl_applied for m in metrics) == 2
+
+    applied = [(s["batch_id"], int(m[1] or m[2])) for s in table.snapshot_chain()
+               if (m := re.fullmatch(r"b\d+-(\d+)|ddl(\d+)", s["batch_id"] or ""))]
+    assert len(applied) == len(metrics)
+    assert all(mf.already_applied(table, b, hi) for b, hi in applied)
+
+    sid = table.meta()["snapshot_id"]
+    assert ReplayEngine(spark, table, log_df, delta=300).run() == []
+    assert table.meta()["snapshot_id"] == sid
+    assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
+        == state_hash(replay(seed_df, changelog))
+
+
+def test_run_over_an_empty_changelog_is_a_noop(spark, tmp_path, world):
+    """An empty changelog (a streaming micro-batch with no rows) has
+    max LSN 0: ``run()`` returns at once and commits nothing."""
+    from dx.generator import CHANGELOG_DDL
+
+    seed_df, _, _ = world
+    table = _fresh_table(spark, tmp_path, seed_df, "empty")
+    head = table.meta()
+    empty = spark.createDataFrame([], CHANGELOG_DDL)
+    assert ReplayEngine(spark, table, empty, delta=300).run() == []
+    assert table.meta() == head

@@ -243,8 +243,7 @@ def test_iceberg_backend_signature_parity():
 
     for meth in ("merge", "alter", "checkpoint_watermark", "compact",
                  "read", "meta", "watermark", "delta_depth",
-                 "applied_batch_ids", "snapshot_chain", "bucket_expr",
-                 "route", "expire_snapshots"):
+                 "snapshot_chain", "bucket_expr", "route", "expire_snapshots"):
         lake_fn = getattr(LakeTable, meth)
         ice_fn = getattr(IcebergTable, meth)
         lake_params = inspect.signature(lake_fn).parameters
