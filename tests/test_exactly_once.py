@@ -117,7 +117,7 @@ def test_t3b_crash_before_commit_point(spark, tmp_path, world):
     assert state_hash(spark_state_to_pandas(t.read(include_system=True))) == state_hash(expected)
 
 
-def test_watermark_covers_every_applied_batch_id(spark, tmp_path):
+def test_watermark_covers_every_batch_id_in_the_chain(spark, tmp_path):
     """Every batch id names its top LSN (``b<lo>-<hi>``, ``ddl<lsn>``)
     and no commit lowers the watermark, so after a replay with an empty
     window and DDL splits every id in the chain is ``already_applied``
