@@ -12,14 +12,19 @@ Per batch (SURVEY.md §3.4):
   2. events = changelog.filter(W < lsn ≤ W+Δ)                    [X1]
      — Catalyst pushes the range predicate to the parquet scan
   3. split at DDL boundaries; ALTER TABLE per DDL event          [X4]
-  4. per sub-range: one narrow lineage aggregation — its rows give
-     the event count, and none means a metadata-only watermark commit
+  4. per sub-range: a window outside the changelog's event span (one
+     plan scan per engine) takes a metadata-only watermark commit with
+     no Spark job; otherwise the narrow lineage aggregation is
+     submitted to the engine's lineage thread and runs beside step 5
   5. max-LSN dedup [X2]: the batch is routed by the key hash into
      n_buckets partitions (LakeTable.route: partition i holds bucket
      i) and ``row_number() OVER (PARTITION BY repo, path ORDER BY lsn
      DESC) = 1`` reuses that exchange, as does the bucket write —
      exactly one payload shuffle; normalize content + sha256 and
-     materialize evolved columns in the same stage                 [X7]
+     materialize evolved columns in the same stage                 [X7].
+     The write starts at once; the lake waits for the lineage rows
+     only after it, right before the commit, so the two Spark jobs
+     run side by side
   6. skew [X6] is structural: the key-hash shuffle spreads a hot
      repo's paths over every bucket
   7. MERGE into the lake table [X3], merge-on-read: append one delta
@@ -41,8 +46,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,31 +126,46 @@ class ReplayEngine:
         self.delta = delta
         self.metrics_path = metrics_path
         self.compact_threshold = compact_threshold
-        self._max_lsn: int | None = None
-        self._ddls: list | None = None
+        self._plan_cache: dict | None = None
+        # one worker: a segment's lineage aggregation runs here while
+        # the engine thread plans and runs its bucket write
+        self._lineage_pool = ThreadPoolExecutor(max_workers=1,
+                                                thread_name_prefix="dx-lineage")
 
     # ----------------------------------------------------------------- utils
+    def _plan(self) -> dict:
+        """The replay plan, from ONE narrow changelog scan per engine
+        (the changelog frame is immutable): the head LSN, the event
+        span (min and max LSN over non-DDL rows, None when there are
+        none) and the DDL events sorted by LSN. The streaming front end
+        builds one engine per micro-batch, so this is one job per
+        micro-batch."""
+        if self._plan_cache is None:
+            event = F.col("op") != "DDL"
+            r = self.changelog.agg(
+                F.max("lsn").alias("head"),
+                F.min(F.when(event, F.col("lsn"))).alias("first"),
+                F.max(F.when(event, F.col("lsn"))).alias("last"),
+                F.collect_list(F.when(
+                    F.col("op") == "DDL",
+                    F.struct("lsn", "ddl_action", "ddl_column", "ddl_type"),
+                )).alias("ddls"),
+            ).collect()[0]
+            self._plan_cache = {
+                "head": r["head"] or 0,
+                "span": None if r["first"] is None else (r["first"], r["last"]),
+                "ddls": sorted(r["ddls"], key=lambda d: d["lsn"]),
+            }
+        return self._plan_cache
+
     def max_lsn(self) -> int:
-        if self._max_lsn is None:
-            self._max_lsn = (
-                self.changelog.agg(F.max("lsn").alias("m")).collect()[0]["m"] or 0
-            )
-        return self._max_lsn
+        return self._plan()["head"]
 
     def ddl_events(self) -> list:
-        """All DDL events of the changelog, ONCE per engine (the
-        changelog frame is immutable): one narrow scan for the whole
-        replay instead of one per micro-batch — at Δ-sized batches over
-        10^10 events the per-batch DDL scan was a serial job on every
-        batch's critical path."""
-        if self._ddls is None:
-            self._ddls = sorted(
-                self.changelog.filter(F.col("op") == "DDL")
-                .select("lsn", "ddl_action", "ddl_column", "ddl_type")
-                .collect(),
-                key=lambda r: r["lsn"],
-            )
-        return self._ddls
+        """All DDL events of the changelog, sorted by LSN, from the one
+        plan scan: at Δ-sized batches over 10^10 events a per-batch DDL
+        scan would be a serial job on every batch's critical path."""
+        return self._plan()["ddls"]
 
     def _emit(self, m: BatchMetrics) -> None:
         line = json.dumps(m.__dict__)
@@ -240,28 +262,33 @@ class ReplayEngine:
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, None, 0, 0.0, 0.0, skipped=True)
             self._emit(m)
             return m
-        events = self.changelog.filter(
-            (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
-        )
-        # The narrow lineage aggregation runs first: its rows give the
-        # exact event count, and no rows means an empty window, which
-        # takes a METADATA-ONLY watermark advance (no write job, no
-        # data/<sid> dir, no data-shaped snapshot). The write scans the
-        # window again rather than caching it: this scan reads two
-        # narrow columns, and caching would materialize the payload.
-        lineage = self._collect_lineage(events)
-        if not lineage:
+        span = self._plan()["span"]
+        if span is None or hi < span[0] or lo >= span[1]:
+            # no event in the window: a METADATA-ONLY watermark advance,
+            # with no Spark job, no data dir and no data-shaped snapshot
             sid = self.table.checkpoint_watermark(batch_id, hi)
             dt = time.monotonic() - t0
             m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, sid, 0, dt, 0.0)
             self._emit(m)
             return m
+        events = self.changelog.filter(
+            (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
+        )
+        # The narrow lineage aggregation runs on the lineage thread,
+        # under this thread's job group and description, while the
+        # write below runs here; the lake awaits it only right before
+        # its commit. Both scan the window: the lineage scan reads two
+        # narrow columns, and caching would materialize the payload.
+        pending = self._lineage_pool.submit(
+            inheritable_thread_target(self.spark)(self._collect_lineage), events
+        )
         sid = self.table.merge(
             self._dedup_changes(events),
             batch_id=batch_id,
             watermark_hi=hi,
-            lineage=lineage,
+            lineage=pending.result,
         )
+        lineage = pending.result()
         n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
         applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)

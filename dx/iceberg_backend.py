@@ -47,6 +47,7 @@ Semantics mapping (each method notes its sandbox equivalent):
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -216,7 +217,7 @@ class IcebergTable:
         changes: DataFrame,
         batch_id: str,
         watermark_hi: int,
-        lineage: list[dict] | None = None,
+        lineage: list[dict] | Callable[[], list[dict]] | None = None,
         update_mode: str = "full",
     ) -> str:
         """LakeTable.merge (X3): the literal MERGE INTO that LakeTable
@@ -230,9 +231,15 @@ class IcebergTable:
         the broadcast size limit or OOM the driver.
         Copy-on-write vs merge-on-read is fixed per table (the
         write.merge.mode property), not per batch.
+
+        ``lineage`` may be a zero-argument callable, as for LakeTable;
+        Iceberg stamps the summary before the write, so it is resolved
+        here, before the MERGE runs.
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
+        if callable(lineage):
+            lineage = lineage()
         changes.createOrReplaceTempView("dx_changes")
         self._set_commit_props(batch_id, watermark_hi, lineage)
         self.spark.conf.set("spark.wap.id", batch_id)  # snapshot stamping

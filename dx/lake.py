@@ -80,7 +80,9 @@ import shutil
 import struct
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import asdict, dataclass
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -128,6 +130,17 @@ def _physical_columns(columns: list[ColumnSpec],
 
 def _ddl(physical: list[tuple[str, str]]) -> str:
     return ", ".join("`{}` {}".format(n.replace("`", "``"), t) for n, t in physical)
+
+
+@lru_cache(maxsize=64)
+def _read_schema(ddl: str):
+    """(Spark schema, Arrow schema) of a physical column DDL, parsed
+    once per column list rather than once per point lookup."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    return schema, to_arrow_schema(schema)
 
 
 # Spark's ``hash()`` is Murmur3_x86_32 (seed 42) chained across its
@@ -524,16 +537,14 @@ class LakeTable:
         is an Arrow-backed local relation with ``read()``'s schema, so
         its ``collect()`` launches no job either."""
         import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import DataType, StructField, StructType
+        from pyspark.sql.types import StructField, StructType
 
         meta, cols = self._snapshot(snapshot_id)
         pf = self._point_files(meta, str(self._bucket_of(repo, path)), repo, path)
-        physical = _physical_columns(cols, include_op=True)
-        schema = DataType.fromDDL(_ddl(physical))
+        schema, arrow_schema = _read_schema(_ddl(_physical_columns(cols, include_op=True)))
         found = ds.dataset(
             pf["base_pruned"] + pf["deltas_pruned"],
-            schema=to_arrow_schema(schema), format="parquet",
+            schema=arrow_schema, format="parquet",
         ).to_table(filter=(ds.field("repo") == repo) & (ds.field("path") == path))
         if found.num_rows:
             lsns = found.column("_lsn").to_pylist()
@@ -706,7 +717,8 @@ class LakeTable:
         ``part-<i>-…``, so the bucket comes from the name; a task whose
         output ``spark.sql.files.maxRecordsPerFile`` splits lands
         several files in the one bucket. A 0-row file (Spark writes one
-        for partition 0 even when bucket 0 is clean) is deleted: no
+        for partition 0 even when bucket 0 is clean) is deleted, and so
+        is the dir when no data file is left (an empty write): no
         snapshot references this dir before the caller commits. Listing
         the output is safe: Spark's committer has moved committed files
         into place and removed its _temporary dir by the time write()
@@ -731,6 +743,8 @@ class LakeTable:
             bounds = _key_bounds(md)
             if bounds:
                 stats[f] = bounds
+        if not files:
+            shutil.rmtree(out_dir)
         return files, stats, rows
 
     @staticmethod
@@ -800,7 +814,7 @@ class LakeTable:
         changes: DataFrame,
         batch_id: str,
         watermark_hi: int,
-        lineage: list[dict] | None = None,
+        lineage: list[dict] | Callable[[], list[dict]] | None = None,
         update_mode: str = "full",
     ) -> str:
         """MERGE INTO equivalent: last-writer-wins upsert + delete (X3).
@@ -822,6 +836,12 @@ class LakeTable:
         ``update_mode='partial'`` (X10): change rows carry NULL for
         columns the event did not touch; :meth:`_partial_images` turns
         them into full row images, which take the same append.
+
+        ``lineage`` is the list of lineage rows, or a zero-argument
+        callable returning it (the engine passes its pending lineage
+        job's ``result``). It is resolved after the write, right before
+        the commit, so the lineage job runs beside the write; if it
+        raises, nothing is committed.
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
@@ -831,7 +851,6 @@ class LakeTable:
             changes = self._partial_images(changes)
         snap = self._child(
             meta, batch_id,
-            lineage=lineage or [],
             watermark=max(int(meta["watermark"]), int(watermark_hi)),
         )
         sid = snap["snapshot_id"]
@@ -856,6 +875,7 @@ class LakeTable:
             "change_rows": change_rows,
             "mode": "mor",
         }
+        snap["lineage"] = (lineage() if callable(lineage) else lineage) or []
         self._commit(snap)
         return sid
 

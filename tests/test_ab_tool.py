@@ -1,10 +1,12 @@
-"""Verdicts of the A/B harness (``tools/ab.py``) over synthetic pairs:
-no Spark and no git, only its pure summary function and the metric
+"""Verdicts of the A/B harness (``tools/ab.py``) over synthetic pairs,
+and its seed order with its git and benchmark calls stubbed: no Spark
+and no git, only its summary function, its main loop and the metric
 spec it reads from ``BENCHMARK.json``."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -98,3 +100,31 @@ def test_failed_operations_and_missing_runs_are_reported_per_side():
     assert m["change"] == [0.9, None]
     assert (m["change_wins"], m["parent_wins"]) == (1, 0)
     assert m["gain"] is False  # 1 win of 2 pairs run
+
+
+def test_seed_order_starts_at_first_seed(monkeypatch, capsys):
+    """Pair k runs seed ``first_seed + k - 1`` on both sides, the parent
+    first on odd k, and the JSON line names the seeds run. ``_git`` and
+    ``_run`` are stubbed: no worktree is made and no benchmark runs."""
+    runs, git_calls = [], []
+
+    def fake_git(*args, check=True):
+        git_calls.append(args)
+        return f"rev-{args[-1]}" if args[0] == "rev-parse" else ""
+
+    def fake_run(command, tree, args, seed):
+        runs.append((os.path.basename(tree).split("-")[0], seed))
+        return _result(events_per_s=1000.0 + seed)
+
+    monkeypatch.setattr(ab, "_git", fake_git)
+    monkeypatch.setattr(ab, "_run", fake_run)
+    assert ab.main(["p", "c", "--workload", "trickle_replay", "--pairs", "3",
+                    "--first-seed", "11"]) == 0
+    assert runs == [("parent", 11), ("change", 11), ("change", 12), ("parent", 12),
+                    ("parent", 13), ("change", 13)]
+    out = json.loads(capsys.readouterr().out)
+    assert out["seeds"] == [11, 12, 13] and out["pairs"] == 3
+    assert [a[0] for a in git_calls].count("worktree") == 4  # 2 adds, 2 removes
+    assert ab.main(["p", "c", "--workload", "bulk_replay", "--pairs", "2"]) == 0
+    assert [s for _, s in runs[6:]] == [1, 1, 2, 2]
+    assert json.loads(capsys.readouterr().out)["seeds"] == [1, 2]

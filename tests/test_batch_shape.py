@@ -1,11 +1,13 @@
 """Shape of one replay batch: how many Spark jobs it launches, what its
 write plan shuffles, and what it hands the lake table.
 
-A small batch is one lineage collect, one max-LSN window dedup fused
-with the bucket write, and the snapshot commit. These tests pin its
-job count, the lineage argument ``merge`` receives, and the collapse
-of event rows redelivered within one batch. The write plan's shape and
-the empty window's single job are pinned in test_units.py.
+A small batch is one lineage collect, run on the engine's lineage
+thread beside one max-LSN window dedup fused with the bucket write,
+then the snapshot commit; the replay is planned by one changelog scan
+per engine. These tests pin the batch's job count, the lineage callable
+``merge`` receives, the plan scan, and the collapse of event rows
+redelivered within one batch. The write plan's shape and the empty
+windows' commits are pinned in test_units.py.
 """
 
 from __future__ import annotations
@@ -14,9 +16,10 @@ import json
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
-from dx.generator import gen_changelog, gen_seed_table
+from dx.generator import DDLSpec, gen_changelog, gen_seed_table
 from dx.lake import LakeTable
 from tests.oracle import replay, spark_state_to_pandas, state_hash
 
@@ -51,8 +54,10 @@ def test_small_segment_job_count(spark, tmp_path, world, jobs_of):
 
 
 def test_merge_receives_lineage_as_a_json_list(spark, tmp_path, world):
-    """The lineage argument is the collected rows themselves, which a
-    backend that serializes it at commit time (IcebergTable stamps
+    """``merge`` gets the pending lineage job's ``result``, a callable,
+    so the lake waits for it only after its write. Its value is the
+    collected rows as a JSON-able list, which a backend that
+    serializes it at commit time (IcebergTable stamps
     ``json.dumps(lineage)`` into the snapshot summary) can take as is."""
     eng = _engine(spark, tmp_path, world, "lineage")
     seen = []
@@ -64,9 +69,62 @@ def test_merge_receives_lineage_as_a_json_list(spark, tmp_path, world):
 
     eng.table.merge = recording_merge
     m = eng.run_batch(0, 200)[0]
-    assert len(seen) == 1 and isinstance(seen[0], list)
-    assert json.loads(json.dumps(seen[0])) == m.lineage
-    assert sum(r["row_count"] for r in seen[0]) == m.events
+    assert len(seen) == 1 and callable(seen[0])
+    rows = seen[0]()
+    assert isinstance(rows, list) and json.loads(json.dumps(rows)) == m.lineage
+    assert sum(r["row_count"] for r in rows) == m.events
+    assert eng.table.meta()["lineage"] == m.lineage
+
+
+def test_failing_lineage_commits_nothing(spark, tmp_path, world):
+    """A lineage callable that raises fails the merge after its write
+    and before its commit: the head snapshot stays as it was."""
+    eng = _engine(spark, tmp_path, world, "lineage-fails")
+    head = eng.table.meta()
+
+    def broken():
+        raise RuntimeError("lineage job failed")
+
+    with pytest.raises(RuntimeError, match="lineage job failed"):
+        eng.table.merge(eng._dedup_changes(eng.changelog.filter("op != 'DDL'")),
+                        batch_id="b1-200", watermark_hi=200, lineage=broken)
+    assert eng.table.meta() == head
+
+
+def test_plan_is_one_changelog_scan(spark, tmp_path, world, jobs_of):
+    """``max_lsn`` and ``ddl_events`` read one plan scan per engine: it
+    costs what a bare head aggregation costs (under adaptive execution,
+    a map-stage job plus its result job), and a second call costs
+    nothing. Before it the DDL filter-and-collect was one more job."""
+    seed_df, _ = world
+    changelog = gen_changelog(seed_df, n_events=300, seed=22, ddl_specs=[
+        DDLSpec(0.6, "add_column", "c2"), DDLSpec(0.3, "add_column", "c1"),
+        DDLSpec(0.8, "drop_column", "c1"),
+    ])
+    table = LakeTable.create(spark, str(tmp_path / "plan"), n_buckets=4)
+    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, changelog))
+    head_only = jobs_of(lambda: eng.changelog.agg(F.max("lsn")).collect())
+    assert jobs_of(lambda: (eng.max_lsn(), eng.ddl_events())) == head_only
+    assert jobs_of(lambda: (eng.max_lsn(), eng.ddl_events())) == 0
+    assert eng.max_lsn() == changelog["lsn"].max()
+    old = sorted(
+        eng.changelog.filter(F.col("op") == "DDL")
+        .select("lsn", "ddl_action", "ddl_column", "ddl_type")
+        .collect(),
+        key=lambda r: r["lsn"],
+    )
+    assert len(old) == 3 and eng.ddl_events() == old
+    assert [d["lsn"] for d in eng.ddl_events()] == sorted(d["lsn"] for d in old)
+    events = changelog[changelog["op"] != "DDL"]["lsn"]
+    assert eng._plan()["span"] == (events.min(), events.max())
+
+
+def test_plan_of_an_empty_changelog(spark, tmp_path, world):
+    _, changelog = world
+    table = LakeTable.create(spark, str(tmp_path / "plan-empty"), n_buckets=4)
+    eng = ReplayEngine(spark, table, changelog_from_pandas(spark, changelog.iloc[:0]))
+    assert (eng.max_lsn(), eng._plan()["span"], eng.ddl_events()) == (0, None, [])
+    assert eng.run() == []
 
 
 def test_redelivered_event_rows_collapse(spark, tmp_path, world):

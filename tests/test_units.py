@@ -340,10 +340,11 @@ def test_write_task_holds_exactly_its_bucket(spark, tmp_path, monkeypatch, n_buc
 
 
 def test_empty_segment_metadata_only_commit(spark, tmp_path, jobs_of):
-    """An empty LSN window must advance the watermark with a
-    METADATA-ONLY commit (ADVICE r2, dx/engine.py): one Spark job (the
-    lineage collect), no write job, no data/<sid> directory, no
-    data-bearing-shaped snapshot — while a later replay over the real
+    """An empty LSN window past the changelog's events must advance the
+    watermark with a METADATA-ONLY commit (ADVICE r2, dx/engine.py):
+    the engine's plan scan already says the window holds no event, so
+    no Spark job runs, no data/<sid>-* directory is made and the
+    snapshot is not data-shaped — while a later replay over the real
     events still converges."""
     import os as _os
 
@@ -358,15 +359,53 @@ def test_empty_segment_metadata_only_commit(spark, tmp_path, jobs_of):
 
     # window strictly past the changelog head: zero events
     metrics = []
-    assert jobs_of(lambda: metrics.extend(eng.run_batch(head, head + 500))) == 1
+    assert jobs_of(lambda: metrics.extend(eng.run_batch(head, head + 500))) == 0
     assert len(metrics) == 1 and metrics[0].events == 0
     sid = metrics[0].snapshot_id
     assert sid is not None
-    assert not _os.path.exists(_os.path.join(table.root, "data", sid))
+    data_dir = _os.path.join(table.root, "data")
+    assert not any(d.startswith(f"{sid}-") for d in _os.listdir(data_dir))
+    assert "merge_stats" not in table.meta()
     assert table.watermark() == head + 500
     # idempotent: re-applying the same empty window is a skip
     again = eng.run_batch(head, head + 500)
     assert again[0].skipped
+
+
+def test_interior_gap_window_commits_no_file(spark, tmp_path):
+    """A window inside the changelog's event span that holds no event
+    (a gap in the LSNs wider than ``delta``) runs its write and commits
+    a snapshot that adds no file, with empty lineage, and leaves no
+    write dir behind; the replay still reaches the oracle state and a
+    re-run skips every window."""
+    import os as _os
+
+    from tests.oracle import replay, spark_state_to_pandas, state_hash
+
+    seed_df = gen_seed_table(n_repos=2, paths_per_repo=6, seed=4)
+    pdf = gen_changelog(seed_df, n_events=120, seed=4)
+    pdf.loc[pdf["lsn"] > 60, "lsn"] += 300  # events at 1..60 and 361..420
+    table = LakeTable.create(spark, str(tmp_path / "gap"), n_buckets=4)
+    seed_lake(spark, table, seed_df)
+    changelog = changelog_from_pandas(spark, pdf)
+    metrics = ReplayEngine(spark, table, changelog, delta=100).run()
+    gaps = [m for m in metrics if m.lsn_lo > 60 and m.lsn_hi < 361]
+    assert [(m.lsn_lo, m.lsn_hi) for m in gaps] == [(101, 200), (201, 300)]
+    data_dir = _os.path.join(table.root, "data")
+    chain = {s["snapshot_id"]: s for s in table.snapshot_chain()}
+    for m in gaps:
+        assert m.events == 0 and m.lineage == []
+        snap = chain[m.snapshot_id]
+        parent = chain[snap["parent_id"]]
+        assert snap["lineage"] == []
+        assert snap["deltas"] == parent["deltas"] and snap["files"] == parent["files"]
+        assert snap["merge_stats"]["change_rows"] == 0
+        assert not any(d.startswith(f"{m.snapshot_id}-") for d in _os.listdir(data_dir))
+    assert state_hash(spark_state_to_pandas(table.read(include_system=True))) \
+        == state_hash(replay(seed_df, pdf))
+    again = ReplayEngine(spark, table, changelog, delta=100)
+    for m in gaps:
+        assert again.run_batch(m.lsn_lo - 1, m.lsn_hi)[0].skipped
 
 
 def test_master_cores_and_wide_codec_threshold():

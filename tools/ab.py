@@ -1,14 +1,17 @@
 """Interleaved A/B of two commits over one perfbench workload.
 
     python tools/ab.py <parent-rev> <change-rev> --workload bulk_replay|trickle_replay
-                       [--pairs 10] [--seconds 12] [--trace 0|1]
+                       [--pairs 10] [--first-seed 1] [--seconds 12] [--trace 0|1]
 
 Both revs are checked out as detached worktrees under ``.tmp/ab/`` and
-removed on exit. Pair k runs the ``BENCHMARK.json`` command on seed k
-in each, the parent first on odd k. Prints one JSON line: per metric,
-the pairs' values, both medians, the parent's IQR, each side's wins and
-the verdicts of :func:`summarize`; and each side's ``failed`` count
-(failed operations, plus one per run that printed no result).
+removed on exit. Pair k (k = 1 .. pairs) runs the ``BENCHMARK.json``
+command on seed ``first_seed + k - 1`` in each, the parent first on odd
+k. ``--first-seed`` lets a claim be re-checked on seeds that were not
+used while the change was written. Prints one JSON line: the seeds run;
+per metric, the pairs' values, both medians, the parent's IQR, each
+side's wins and the verdicts of :func:`summarize`; and each side's
+``failed`` count (failed operations, plus one per run that printed no
+result).
 """
 
 from __future__ import annotations
@@ -94,8 +97,8 @@ def summarize(pairs: list[tuple[dict | None, dict | None]], spec: dict) -> dict:
     return {"pairs": len(pairs), "failed": failed, "metrics": out}
 
 
-def _git(*args: str) -> str:
-    return subprocess.run(["git", *args], cwd=REPO, check=True, capture_output=True,
+def _git(*args: str, check: bool = True) -> str:
+    return subprocess.run(["git", *args], cwd=REPO, check=check, capture_output=True,
                           text=True).stdout.strip()
 
 
@@ -117,6 +120,7 @@ def main(argv=None) -> int:
     p.add_argument("change")
     p.add_argument("--workload", required=True, choices=["bulk_replay", "trickle_replay"])
     p.add_argument("--pairs", type=int, default=10)
+    p.add_argument("--first-seed", type=int, default=1)
     p.add_argument("--seconds", type=float, default=12.0)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = p.parse_args(argv)
@@ -125,8 +129,9 @@ def main(argv=None) -> int:
     command, spec = load_benchmark()
     revs = {side: _git("rev-parse", "--verify", f"{rev}^{{commit}}")
             for side, rev in zip(SIDES, (args.parent, args.change))}
+    seeds = list(range(args.first_seed, args.first_seed + args.pairs))
     # SIGTERM unwinds through the finally below like an error does
-    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    prev_handler = signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     trees = {}
     try:
         for side in SIDES:
@@ -134,18 +139,20 @@ def main(argv=None) -> int:
             _git("worktree", "add", "--detach", tree, revs[side])
             trees[side] = tree
         pairs = []
-        for k in range(1, args.pairs + 1):
+        for k, seed in enumerate(seeds, start=1):
             result = {}
             for side in SIDES if k % 2 else SIDES[::-1]:
-                result[side] = r = _run(command, trees[side], args, k)
-                log(f"[ab] seed {k} {side}: {json.dumps(r)}")
+                result[side] = r = _run(command, trees[side], args, seed)
+                log(f"[ab] seed {seed} {side}: {json.dumps(r)}")
             pairs.append((result["parent"], result["change"]))
-        print(json.dumps({"workload": args.workload, "revs": revs, "seconds": args.seconds,
-                          "trace": args.trace, **summarize(pairs, spec)}), flush=True)
+        print(json.dumps({"workload": args.workload, "revs": revs, "seeds": seeds,
+                          "seconds": args.seconds, "trace": args.trace,
+                          **summarize(pairs, spec)}), flush=True)
         return 0
     finally:
         for tree in trees.values():
-            subprocess.run(["git", "worktree", "remove", "--force", tree], cwd=REPO)
+            _git("worktree", "remove", "--force", tree, check=False)
+        signal.signal(signal.SIGTERM, prev_handler)
 
 
 if __name__ == "__main__":
