@@ -60,7 +60,8 @@ Scale notes (10^10 rows / 1000 executors):
   i's file ``part-<i>-…``, so the file name is the bucket. One pass
   over the new files' parquet footers then yields each file's bucket,
   key bounds and row count; a 0-row file (Spark always writes one for
-  partition 0) is deleted on the spot.
+  partition 0) is deleted on the spot, and a write left with no file
+  removes its dir.
 - Readers take the physical schema from the snapshot's column specs
   (stored names + types), never from file footers: a file written
   before a column existed reads it as null, a dropped column's

@@ -377,7 +377,7 @@ def test_interior_gap_window_commits_no_file(spark, tmp_path):
     (a gap in the LSNs wider than ``delta``) runs its write and commits
     a snapshot that adds no file, with empty lineage, and leaves no
     write dir behind; the replay still reaches the oracle state and a
-    re-run skips every window."""
+    re-run of a gap window skips."""
     import os as _os
 
     from tests.oracle import replay, spark_state_to_pandas, state_hash
