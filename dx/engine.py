@@ -32,13 +32,20 @@ Per batch (SURVEY.md §3.4):
      commit; auto-compact at depth ≥ compact_threshold. n_buckets
      sets the write task count
   8. snapshot commit = link of the next sequence-numbered snapshot
-     file, a compare-and-swap (a losing writer gets CommitConflict);
-     manifest is derived [X5]
+     file, a compare-and-swap. A batch that loses the link is applied
+     to the new head with no Spark work redone; one whose window
+     another writer committed meanwhile is dropped and reported
+     ``skipped``. Manifest is derived [X5]
   9. emit lineage + events/sec metrics (JSON line per batch)     [X8]
 
-Crash-resume: every step before 8 is side-effect-free on committed
-state; re-running a batch whose lsn_hi ≤ watermark is a no-op
-(manifest.already_applied), so replay from any checkpoint converges.
+Crash-resume: every step before 8 writes only files no snapshot
+references (a crash leaves them to GC); re-running a batch whose
+lsn_hi ≤ watermark is a no-op (manifest.already_applied), so replay
+from any checkpoint converges. Engines on several handles may replay
+one changelog into one table at once: a window is committed once when
+their windows line up, while windows that only partly overlap (a
+replay resumed from a DDL's LSN) commit and report the overlap twice,
+which the max-LSN read absorbs.
 """
 
 from __future__ import annotations
@@ -223,18 +230,25 @@ class ReplayEngine:
             out.append(self._apply_segment(lo, hi))
         return out
 
+    def _skipped(self, batch_id: str, lo: int, hi: int, events: int = 0) -> BatchMetrics:
+        """Report a batch another commit already applied."""
+        m = BatchMetrics(batch_id, lo, hi, events, 0, None, 0, 0.0, 0.0, skipped=True)
+        self._emit(m)
+        return m
+
     def _apply_ddl(self, d) -> BatchMetrics:
         t0 = time.monotonic()
         batch_id = f"ddl{d['lsn']}"
-        if mf.already_applied(self.table, batch_id, d["lsn"]):
-            m = BatchMetrics(batch_id, d["lsn"], d["lsn"], 1, 0, None, 0, 0.0, 0.0, skipped=True)
-        else:
+        sid = None
+        if not mf.already_applied(self.table, batch_id, d["lsn"]):
             sid = self.table.alter(
                 d["ddl_action"], d["ddl_column"], d["ddl_type"] or "string",
                 batch_id=batch_id, at_lsn=d["lsn"],
             )
-            dt = time.monotonic() - t0
-            m = BatchMetrics(batch_id, d["lsn"], d["lsn"], 1, 0, sid, 1, dt, 0.0)
+        if sid is None:
+            return self._skipped(batch_id, d["lsn"], d["lsn"], events=1)
+        m = BatchMetrics(batch_id, d["lsn"], d["lsn"], 1, 0, sid, 1,
+                         time.monotonic() - t0, 0.0)
         self._emit(m)
         return m
 
@@ -258,37 +272,38 @@ class ReplayEngine:
     def _apply_segment(self, lo: int, hi: int) -> BatchMetrics:
         t0 = time.monotonic()
         batch_id = f"b{lo + 1}-{hi}"
-        if mf.already_applied(self.table, batch_id, hi):
-            m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, None, 0, 0.0, 0.0, skipped=True)
-            self._emit(m)
-            return m
         span = self._plan()["span"]
-        if span is None or hi < span[0] or lo >= span[1]:
-            # no event in the window: a METADATA-ONLY watermark advance,
-            # with no Spark job, no data dir and no data-shaped snapshot
+        events = None  # no event in the window
+        if span is not None and span[0] <= hi and lo < span[1]:
+            events = self.changelog.filter(
+                (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
+            )
+            changes = self._dedup_changes(events)
+        # The guard reads the head right before the lake's commit reads
+        # it, after the plan is built: a window another writer commits
+        # after the guard is dropped by the lake, not merged twice.
+        if mf.already_applied(self.table, batch_id, hi):
+            return self._skipped(batch_id, lo + 1, hi)
+        lineage = []
+        if events is None:
+            # a METADATA-ONLY watermark advance, with no Spark job, no
+            # data dir and no data-shaped snapshot
             sid = self.table.checkpoint_watermark(batch_id, hi)
-            dt = time.monotonic() - t0
-            m = BatchMetrics(batch_id, lo + 1, hi, 0, 0, sid, 0, dt, 0.0)
-            self._emit(m)
-            return m
-        events = self.changelog.filter(
-            (F.col("lsn") > lo) & (F.col("lsn") <= hi) & (F.col("op") != "DDL")
-        )
-        # The narrow lineage aggregation runs on the lineage thread,
-        # under this thread's job group and description, while the
-        # write below runs here; the lake awaits it only right before
-        # its commit. Both scan the window: the lineage scan reads two
-        # narrow columns, and caching would materialize the payload.
-        pending = self._lineage_pool.submit(
-            inheritable_thread_target(self.spark)(self._collect_lineage), events
-        )
-        sid = self.table.merge(
-            self._dedup_changes(events),
-            batch_id=batch_id,
-            watermark_hi=hi,
-            lineage=pending.result,
-        )
-        lineage = pending.result()
+        else:
+            # The narrow lineage aggregation runs on the lineage thread,
+            # under this thread's job group and description, while the
+            # write below runs here; the lake awaits it only right
+            # before its commit. Both scan the window: the lineage scan
+            # reads two narrow columns, and caching would materialize
+            # the payload.
+            pending = self._lineage_pool.submit(
+                inheritable_thread_target(self.spark)(self._collect_lineage), events
+            )
+            sid = self.table.merge(changes, batch_id=batch_id, watermark_hi=hi,
+                                   lineage=pending.result)
+            lineage = pending.result()
+        if sid is None:
+            return self._skipped(batch_id, lo + 1, hi)
         n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
         applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)
@@ -304,7 +319,9 @@ class ReplayEngine:
 
         A crash anywhere leaves the table at its last commit; a fresh
         engine over the same table resumes from its watermark and
-        converges (T3b).
+        converges (T3b). A batch another writer applied first is
+        reported ``skipped`` with no snapshot id, and the loop goes on
+        from the new watermark.
         """
         out: list[BatchMetrics] = []
         head = self.max_lsn()

@@ -31,8 +31,9 @@ Semantics mapping (each method notes its sandbox equivalent):
 - table layout = Iceberg's own metadata/manifest tree; LakeTable's
   per-bucket files map + link-if-absent of the next sequence-numbered
   snapshot file is the file-system model of the same commit protocol
-  (Iceberg's rename-if-absent metadata swap: optimistic, a losing
-  writer gets ``CommitConflict``).
+  (Iceberg's rename-if-absent metadata swap: optimistic, and a losing
+  writer re-applies its staged change to the new head; only a change
+  that no longer applies raises ``CommitConflict``).
 - ``write.distribution-mode=hash`` + ``bucket(N, repo, path)``
   partitioning reproduces the pmod(hash(repo,path), N) bucket routing.
 - merge-on-read delete files (``write.merge.mode=merge-on-read``)

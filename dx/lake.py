@@ -14,8 +14,16 @@ public Iceberg concepts (spec at iceberg.apache.org/spec/):
   snapshot JSON to ``snapshots/s<n+1>.json``, which fails atomically
   if that name is taken: a compare-and-swap on the parent, like
   Delta's put-if-absent log or Iceberg's rename-if-absent metadata
-  swap. Racing writers (threads or processes) derive the same id;
-  exactly one wins and every loser gets ``CommitConflict``.
+  swap. Every writer stages its data files first and then hands
+  ``_commit`` a *change*: a function from a head snapshot to the
+  child's overrides. A writer that loses the link re-reads the head
+  and applies its change to it again, with no Spark work redone
+  (Iceberg's retry against new metadata). Appends commute, so a merge
+  rebases over any commit that keeps the schema; a compaction rebases
+  over appends; ``CommitConflict`` is raised only when the staged
+  work does not apply to the new head (a DDL under a merge, another
+  compaction of the same bucket, any commit under a partial merge or
+  a seed). A window another writer already applied is dropped.
 - Durability: the snapshot file is fsynced, its directory is not. A
   host crash can lose the newest commit's name, but never leaves a
   torn head (a snapshot is complete before it has a name), and replay
@@ -256,9 +264,12 @@ def _key_bounds(md) -> list[str]:
 
 
 class CommitConflict(RuntimeError):
-    """Another writer committed first: the planned snapshot's sequence
-    number was taken between plan and commit (the commit's ``os.link``
-    found the name present). Re-plan from the new head."""
+    """Staged work does not apply to the head another writer committed
+    since it was staged (a merge under a new schema, a partial merge
+    or a seed under any new commit, a compaction whose buckets were
+    rewritten). Nothing was committed; re-stage from the new head.
+    ``_link`` raises it on a taken sequence number, which ``_commit``
+    answers by rebasing."""
 
 
 # A committed snapshot's file name; commit temp files never match it.
@@ -266,6 +277,11 @@ _SNAP_NAME = re.compile(r"s(\d+)\.json")
 # A written data file's name starts with its write task's partition id,
 # which the routed write makes the bucket id.
 _PART_NAME = re.compile(r"part-(\d+)-")
+
+
+def _next_id(meta: dict) -> str:
+    """Id of the child of snapshot ``meta``: the next sequence number."""
+    return f"s{int(meta['snapshot_id'][1:]) + 1}"
 
 
 class LakeTable:
@@ -317,7 +333,7 @@ class LakeTable:
             "lineage": [],
             "applied_at": time.time(),
         }
-        t._commit(snap)
+        t._link(snap)
         return t
 
     @classmethod
@@ -390,29 +406,73 @@ class LakeTable:
         return rows
 
     def _child(self, meta: dict, batch_id: str | None, **overrides) -> dict:
-        """Common child-snapshot construction: the parent's table state
+        """Child-snapshot construction: the parent's table state
         (schema, watermark, files) under the parent's sequence number +
-        1, a parent link and a commit timestamp. What describes the
-        parent's own commit does not carry over: the child starts with
-        no lineage and no ``merge_stats``."""
+        1, a parent link and a commit timestamp, then ``overrides``.
+        What describes the parent's own commit does not carry over: the
+        child starts with no lineage and no ``merge_stats``.
+        ``file_stats`` in ``overrides`` holds only the new files' key
+        bounds; the child keeps the parent's and the new ones for the
+        files it references."""
         inherited = {k: v for k, v in meta.items() if k != "merge_stats"}
-        return {
+        child = {
             **inherited,
-            "snapshot_id": f"s{int(meta['snapshot_id'][1:]) + 1}",
+            "snapshot_id": _next_id(meta),
             "parent_id": meta["snapshot_id"],
             "batch_id": batch_id,
             "lineage": [],
             "applied_at": time.time(),
             **overrides,
         }
+        stats = {**meta.get("file_stats", {}), **overrides.get("file_stats", {})}
+        live = {f for m in (child["files"], child.get("deltas", {}))
+                for fl in m.values() for f in fl}
+        child["file_stats"] = {f: stats[f] for f in sorted(live) if f in stats}
+        return child
 
-    def _commit(self, snap: dict) -> None:
+    def _commit(self, batch_id: str | None, change: Callable[[dict], dict],
+                lsn_hi: int | None = None, head: dict | None = None,
+                write_dir: str | None = None) -> str | None:
+        """Commit ``change`` as the child of the head; return its id.
+
+        ``change(head)`` returns the child's overrides (see
+        :meth:`_child`), or raises ``CommitConflict`` when the staged
+        work does not apply to that head. The first attempt builds on
+        ``head`` (the head the caller staged on; default: read now).
+        When another writer takes the number first, the head is read
+        again and ``change`` applied to it again. The child's watermark
+        is ``max(head, lsn_hi)``.
+
+        Returns None, committing nothing, when a head committed since
+        ``head`` covers ``lsn_hi`` and ``head`` did not: another writer
+        applied this window. A caller whose own head already covered
+        it re-merges on purpose and commits. ``write_dir`` is the
+        caller's staged data dir: a dropped or refused commit deletes
+        it, since no snapshot references it."""
+        first = head = head if head is not None else self.meta()
+        try:
+            while True:
+                if lsn_hi is not None and first["watermark"] < lsn_hi <= head["watermark"]:
+                    return None
+                snap = self._child(head, **{"batch_id": batch_id, **change(head)})
+                snap["watermark"] = max(head["watermark"], int(lsn_hi or 0))
+                try:
+                    self._link(snap)
+                except CommitConflict:
+                    head = self.meta()
+                    continue
+                write_dir = None  # referenced by the commit
+                return snap["snapshot_id"]
+        finally:
+            if write_dir is not None:
+                shutil.rmtree(write_dir, ignore_errors=True)
+
+    def _link(self, snap: dict) -> None:
         """Write the snapshot JSON to a temp file, fsync it, and link it
         to its sequence-numbered name: the link is the commit point and
         fails atomically if another writer took that number first
-        (``CommitConflict``; the caller re-plans). A crash before it
-        leaves only orphan data files (GC-able) and a temp file, which
-        readers ignore."""
+        (``CommitConflict``). A crash before it leaves only orphan data
+        files (GC-able) and a temp file, which readers ignore."""
         sid = snap["snapshot_id"]
         path = self._snap_path(sid)
         tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
@@ -667,52 +727,49 @@ class LakeTable:
 
     # ------------------------------------------------------------------ DDL
     def alter(self, action: str, column: str, col_type: str = "string",
-              batch_id: str | None = None, at_lsn: int | None = None) -> str:
+              batch_id: str | None = None, at_lsn: int | None = None) -> str | None:
         """Iceberg `ALTER TABLE ADD/DROP COLUMN` equivalent (X4).
 
         Metadata-only: no data files are touched. New columns get a
-        fresh field id; existing rows read as null until rewritten.
+        fresh field id; existing rows read as null until rewritten. The
+        column is checked against the head the commit lands on. Returns
+        None when another writer committed a watermark covering
+        ``at_lsn`` since this call read the head (it applied this DDL).
         """
-        meta = dict(self.meta())
-        cols = self.columns()
-        if action == "add_column":
-            if any(c.name == column for c in cols):
-                raise ValueError(f"column exists: {column}")
-            cols.append(ColumnSpec(column, col_type, meta["next_fid"]))
-            meta["next_fid"] += 1
-        elif action == "drop_column":
-            if all(c.name != column for c in cols):
-                raise ValueError(f"no such column: {column}")
-            cols = [c for c in cols if c.name != column]
-        else:
-            raise ValueError(f"unknown DDL action: {action}")
-        snap = self._child(
-            meta, batch_id,
-            schema_version=meta["schema_version"] + 1,
-            columns=[asdict(c) for c in cols],
-            watermark=max(meta["watermark"], at_lsn or 0),
-        )
-        self._commit(snap)
-        return snap["snapshot_id"]
+        def change(head: dict) -> dict:
+            cols = [ColumnSpec(**c) for c in head["columns"]]
+            next_fid = head["next_fid"]
+            if action == "add_column":
+                if any(c.name == column for c in cols):
+                    raise ValueError(f"column exists: {column}")
+                cols.append(ColumnSpec(column, col_type, next_fid))
+                next_fid += 1
+            elif action == "drop_column":
+                if all(c.name != column for c in cols):
+                    raise ValueError(f"no such column: {column}")
+                cols = [c for c in cols if c.name != column]
+            else:
+                raise ValueError(f"unknown DDL action: {action}")
+            return {"schema_version": head["schema_version"] + 1,
+                    "columns": [asdict(c) for c in cols], "next_fid": next_fid}
 
-    def checkpoint_watermark(self, batch_id: str, hi: int) -> str:
-        """Metadata-only snapshot advancing the watermark (empty batch)."""
-        meta = dict(self.meta())
-        snap = self._child(
-            meta, batch_id, watermark=max(int(meta["watermark"]), int(hi)),
-        )
-        self._commit(snap)
-        return snap["snapshot_id"]
+        return self._commit(batch_id, change, at_lsn)
+
+    def checkpoint_watermark(self, batch_id: str, hi: int) -> str | None:
+        """Metadata-only snapshot advancing the watermark (empty batch).
+        Returns None when another writer committed a watermark covering
+        ``hi`` since this call read the head."""
+        return self._commit(batch_id, lambda head: {}, hi)
 
     # ---------------------------------------------------------------- write
-    def _write(self, df: DataFrame,
-               snapshot_id: str) -> tuple[dict[str, list[str]], dict[str, list[str]], int]:
+    def _write(self, df: DataFrame, snapshot_id: str
+               ) -> tuple[dict[str, list[str]], dict[str, list[str]], int, str]:
         """Write df routed by :meth:`route`, flat, into
-        ``data/<snapshot_id>-<8 hex>`` (racing writers plan the same
-        snapshot id and must not write into each other's output), then
-        read each new file's parquet footer once. Returns the
-        {bucket: sorted files} map, the per-file key bounds and the
-        number of rows written.
+        ``data/<snapshot_id>-<8 hex>`` (``snapshot_id`` is the planned
+        child id; racing writers plan the same one and must not write
+        into each other's output), then read each new file's parquet
+        footer once. Returns the {bucket: sorted files} map, the
+        per-file key bounds, the number of rows written and the dir.
 
         Write task i holds bucket i and Spark names its file
         ``part-<i>-…``, so the bucket comes from the name; a task whose
@@ -746,18 +803,7 @@ class LakeTable:
                 stats[f] = bounds
         if not files:
             shutil.rmtree(out_dir)
-        return files, stats, rows
-
-    @staticmethod
-    def _rebuild_file_stats(old_stats: dict, new_stats: dict,
-                            files: dict, deltas: dict | None) -> dict:
-        """file_stats for a child snapshot: union of parent + new
-        stats, restricted to files the child actually references."""
-        live = {f for fl in files.values() for f in fl}
-        for fl in (deltas or {}).values():
-            live.update(fl)
-        merged = {**old_stats, **new_stats}
-        return {f: merged[f] for f in sorted(live) if f in merged}
+        return files, stats, rows, out_dir
 
     @staticmethod
     def _prune_files(file_list: list[str], stats: dict,
@@ -800,15 +846,19 @@ class LakeTable:
         return df.select(*sel)
 
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
-        """Initial full load (all buckets written once)."""
+        """Initial full load (all buckets written once). Raises
+        ``CommitConflict`` if any commit lands while it writes."""
         meta = self.meta()
-        snap = self._child(meta, batch_id)
-        sid = snap["snapshot_id"]
-        snap["files"], snap["file_stats"], _ = self._write(
-            self._stored_select(df, self.columns()), sid
+        files, stats, _, out_dir = self._write(
+            self._stored_select(df, self.columns()), _next_id(meta)
         )
-        self._commit(snap)
-        return sid
+
+        def change(head: dict) -> dict:
+            if head["snapshot_id"] != meta["snapshot_id"]:
+                raise CommitConflict(f"{batch_id} was staged on {meta['snapshot_id']}")
+            return {"files": files, "file_stats": stats}
+
+        return self._commit(batch_id, change, head=meta, write_dir=out_dir)
 
     def merge(
         self,
@@ -817,7 +867,7 @@ class LakeTable:
         watermark_hi: int,
         lineage: list[dict] | Callable[[], list[dict]] | None = None,
         update_mode: str = "full",
-    ) -> str:
+    ) -> str | None:
         """MERGE INTO equivalent: last-writer-wins upsert + delete (X3).
 
         ``changes`` must be per-key deduped (X2 guarantees ≤1 row per
@@ -843,6 +893,14 @@ class LakeTable:
         job's ``result``). It is resolved after the write, right before
         the commit, so the lineage job runs beside the write; if it
         raises, nothing is committed.
+
+        The delta files commute (a read keeps each key's max-``_lsn``
+        row), so when another writer commits first the merge appends
+        them to the new head instead. It raises ``CommitConflict`` when
+        that head has a new ``schema_version``, and a partial merge on
+        any new head (its images were coalesced from the old one).
+        Returns None when a head committed since the merge began covers
+        ``watermark_hi`` (another writer applied this window).
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
@@ -850,35 +908,28 @@ class LakeTable:
         cols = self.columns()
         if update_mode == "partial":
             changes = self._partial_images(changes)
-        snap = self._child(
-            meta, batch_id,
-            watermark=max(int(meta["watermark"]), int(watermark_hi)),
-        )
-        sid = snap["snapshot_id"]
-
         # the write lands ONE delta file per dirty bucket: every later
         # read opens each delta file, so files, not rows, set read cost
-        new_files, new_stats, change_rows = self._write(
+        new_files, new_stats, change_rows, out_dir = self._write(
             self._stored_select(changes.withColumn("_op", F.col("op")),
                                 cols, include_op=True),
-            sid,
+            _next_id(meta),
         )
-        deltas = {b: list(fl) for b, fl in meta.get("deltas", {}).items()}
-        for b, fl in new_files.items():
-            deltas.setdefault(b, []).extend(fl)
-        snap["deltas"] = deltas
-        snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), new_stats, meta["files"], deltas,
-        )
-        snap["merge_stats"] = {
-            "dirty_buckets": len(new_files),
-            "total_buckets": self.n_buckets,
-            "change_rows": change_rows,
-            "mode": "mor",
-        }
-        snap["lineage"] = (lineage() if callable(lineage) else lineage) or []
-        self._commit(snap)
-        return sid
+        rows = (lineage() if callable(lineage) else lineage) or []
+
+        def change(head: dict) -> dict:
+            if head["schema_version"] != meta["schema_version"] or (
+                    update_mode == "partial" and head["snapshot_id"] != meta["snapshot_id"]):
+                raise CommitConflict(f"{batch_id} was staged on {meta['snapshot_id']}")
+            deltas = {b: list(fl) for b, fl in head.get("deltas", {}).items()}
+            for b, fl in new_files.items():
+                deltas.setdefault(b, []).extend(fl)
+            return {"deltas": deltas, "file_stats": new_stats, "lineage": rows,
+                    "merge_stats": {"dirty_buckets": len(new_files),
+                                    "total_buckets": self.n_buckets,
+                                    "change_rows": change_rows, "mode": "mor"}}
+
+        return self._commit(batch_id, change, watermark_hi, head=meta, write_dir=out_dir)
 
     def _partial_images(self, changes: DataFrame) -> DataFrame:
         """Full row images of a folded partial-update batch (X10).
@@ -950,42 +1001,47 @@ class LakeTable:
         """Fold outstanding deltas into the base for the given buckets
         (default: every bucket with deltas). Equivalent to Iceberg's
         rewrite_data_files maintenance action; safe to run any time —
-        pure state rewrite, watermark and lineage untouched."""
+        pure state rewrite, watermark and lineage untouched.
+
+        A merge that commits while it writes does not stop it: the
+        commit replaces the folded files of a head that still holds
+        the same base and begins each bucket's deltas with the folded
+        ones, and keeps the deltas appended since. On any other head
+        (another compaction, a seed) it raises ``CommitConflict``. The
+        default ``batch_id`` is ``compact-<the id it commits as>``."""
         meta = self.meta()
         cols = self.columns()
-        all_delta = [b for b, fl in meta.get("deltas", {}).items() if fl]
-        target = [b for b in (buckets if buckets is not None else all_delta)
-                  if meta.get("deltas", {}).get(b)]
-        if not target:
+        deltas = meta.get("deltas", {})
+        folded = {b: deltas[b] for b in (buckets if buckets is not None else deltas)
+                  if deltas.get(b)}
+        if not folded:
             return None
-        snap = self._child(
-            meta, None,
-            merge_stats={
-                "compacted_buckets": len(target),
-                "total_buckets": self.n_buckets,
-                "mode": "compact",
-            },
-        )
-        sid = snap["snapshot_id"]
-        snap["batch_id"] = batch_id or f"compact-{sid}"
         # the read is routed, so the reconcile window and the bucket
         # write share its one exchange: one base file per bucket
         state = _newest_live(self.route(self._read_files(
-            [f for b in target for f in meta["files"].get(b, []) + meta["deltas"][b]],
+            [f for b, fl in folded.items() for f in meta["files"].get(b, []) + fl],
             cols, include_op=True,
         )))
-        new_files, new_stats, _ = self._write(self._stored_select(state, cols), sid)
-        files = dict(meta["files"])
-        deltas = {b: fl for b, fl in meta.get("deltas", {}).items() if b not in target}
-        for b in target:
-            files[b] = new_files.get(b, [])
-        snap["files"] = files
-        snap["deltas"] = deltas
-        snap["file_stats"] = self._rebuild_file_stats(
-            meta.get("file_stats", {}), new_stats, files, deltas,
+        new_files, new_stats, _, out_dir = self._write(
+            self._stored_select(state, cols), _next_id(meta)
         )
-        self._commit(snap)
-        return sid
+
+        def change(head: dict) -> dict:
+            files, kept = dict(head["files"]), dict(head.get("deltas", {}))
+            for b, fl in folded.items():
+                if (files.get(b, []) != meta["files"].get(b, [])
+                        or kept.get(b, [])[:len(fl)] != fl):
+                    raise CommitConflict(f"bucket {b} changed since {meta['snapshot_id']}")
+                files[b] = new_files.get(b, [])
+                rest = kept.pop(b)[len(fl):]
+                if rest:
+                    kept[b] = rest
+            return {"batch_id": batch_id or f"compact-{_next_id(head)}",
+                    "files": files, "deltas": kept, "file_stats": new_stats,
+                    "merge_stats": {"compacted_buckets": len(folded),
+                                    "total_buckets": self.n_buckets, "mode": "compact"}}
+
+        return self._commit(None, change, head=meta, write_dir=out_dir)
 
     def expire_snapshots(self, keep_last: int = 100,
                          min_age_s: float = 3600.0) -> dict:

@@ -8,7 +8,9 @@ The manifest is **derived state**: every committed snapshot embeds its
 batch_id, applied LSN watermark, and per-source-partition lineage rows
 (lake.py). The authoritative record is therefore the snapshot chain
 itself — committed atomically with the data by one snapshot-file
-link (a compare-and-swap on the sequence number, dx/lake.py). A
+link (a compare-and-swap on the sequence number, dx/lake.py; a writer
+that loses the link applies its staged change to the new head, and
+drops it when that head's watermark already covers the batch). A
 crash *anywhere* (including "after snapshot commit, before manifest
 bookkeeping", T3b) cannot desynchronize data from manifest, because
 there is nothing to desynchronize: re-reading the chain reconstructs
@@ -58,12 +60,6 @@ def manifest_df(spark: SparkSession, table: LakeTable) -> DataFrame:
                 )
             )
     return spark.createDataFrame(rows, MANIFEST_DDL)
-
-
-def export_manifest(spark: SparkSession, table: LakeTable, path: str) -> None:
-    """Write the manifest cache as parquet (a *view* of the chain —
-    safe to lose; never read for correctness decisions)."""
-    manifest_df(spark, table).write.mode("overwrite").parquet(path)
 
 
 def per_partition_watermarks(spark: SparkSession, table: LakeTable) -> DataFrame:

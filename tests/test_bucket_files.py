@@ -155,7 +155,7 @@ def test_gc_keeps_a_write_dir_whose_referenced_file_is_nested(spark, tmp_path):
                           "part-0.parquet")
     os.makedirs(os.path.dirname(nested))
     shutil.copy(src, nested)
-    table._commit(table._child(meta, "relayout", files={**meta["files"], b: [nested]}))
+    table._link(table._child(meta, "relayout", files={**meta["files"], b: [nested]}))
     table.expire_snapshots(keep_last=1, min_age_s=0)
     assert os.path.exists(nested)
     assert not os.path.exists(src)

@@ -1,8 +1,12 @@
 """The snapshot commit is a compare-and-swap: each commit links an
 fsynced snapshot file to the next sequence number, so of several
-writers planned on one head exactly one wins and every other raises
-``CommitConflict`` — across processes, against compaction, and after
-GC. Metadata-only commits need no Spark session (``spark=None``).
+snapshots planned on one head exactly one links. A writer whose link
+is taken applies its staged change to the new head — across
+processes, against compaction, between engines — and raises
+``CommitConflict`` only where the change does not apply (a schema
+change under a merge, any commit under a partial merge, a second
+compaction of a bucket). Metadata-only commits need no Spark session
+(``spark=None``).
 """
 
 from __future__ import annotations
@@ -15,6 +19,8 @@ import time
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from dx.engine import ReplayEngine, changelog_from_pandas, seed_lake
 from dx.generator import gen_changelog, gen_seed_table
 from dx.lake import CommitConflict, LakeTable
@@ -25,20 +31,20 @@ WRITERS, COMMITS = 4, 50
 
 def _commit_loop(root: str, writer: int, barrier, out) -> None:
     """One racing writer: ``COMMITS`` watermark commits on its own
-    handle; reports the batch ids it was told were committed."""
+    handle; reports (batch id, snapshot id) of each commit that landed.
+    A None id (another writer covered that watermark first) is
+    dropped."""
     try:
         table = LakeTable.load(None, root)
-        committed = []
+        landed = []
         barrier.wait(timeout=120)
         for i in range(COMMITS):
             batch_id = f"w{writer}-{i}"
-            try:
-                table.checkpoint_watermark(batch_id, i + 1)
-            except CommitConflict:
-                continue
-            committed.append(batch_id)
-        out.put(committed)
-    except BaseException as e:  # anything but CommitConflict fails the test
+            sid = table.checkpoint_watermark(batch_id, i + 1)
+            if sid is not None:
+                landed.append((batch_id, sid))
+        out.put(landed)
+    except BaseException as e:  # any error, CommitConflict too, fails the test
         out.put(repr(e))
 
 
@@ -59,18 +65,22 @@ def test_racing_writer_processes_lose_no_commit(tmp_path):
             if p.is_alive():
                 p.terminate()
     assert [r for r in results if isinstance(r, str)] == []
-    committed = [b for r in results for b in r]
-    assert len(committed) < WRITERS * COMMITS  # the writers did race
+    landed = [c for r in results for c in r]
     chain = LakeTable.load(None, root).snapshot_chain()
-    assert sorted(s["batch_id"] for s in chain if s["batch_id"]) == sorted(committed)
-    assert len(chain) == len(committed) + 1  # + s0
+    on_chain = {s["snapshot_id"]: s["batch_id"] for s in chain}
+    assert all(on_chain.get(sid) == batch_id for batch_id, sid in landed)
+    assert len(chain) == len(landed) + 1  # + s0
+    # the writers did race: one after another would switch WRITERS - 1 times
+    writers = [s["batch_id"].split("-")[0] for s in chain[:-1]]
+    assert sum(a != b for a, b in zip(writers, writers[1:])) > WRITERS - 1
 
 
 def test_replay_races_compaction_to_the_oracle(spark, tmp_path):
-    """One thread replays, re-running the engine on CommitConflict;
-    another compacts in a loop on its own handle. Every commit either
-    side was told succeeded is on the final chain, and every loser
-    re-plans from the new head, so the result is the oracle's."""
+    """One thread replays while another compacts in a loop on its own
+    handle. Merges and compactions rebase over each other instead of
+    conflicting: neither side ever sees ``CommitConflict``, every
+    commit either side was told succeeded is on the final chain, and
+    the result is the oracle's."""
     seed_df = gen_seed_table(n_repos=3, paths_per_repo=30, seed=13)
     changelog = gen_changelog(seed_df, n_events=1_500, seed=13, batch_size=300)
     expected = replay(seed_df, changelog)
@@ -86,12 +96,7 @@ def test_replay_races_compaction_to_the_oracle(spark, tmp_path):
 
     def replayer():
         try:
-            while True:
-                try:
-                    engine.run()
-                    return
-                except CommitConflict:
-                    pass
+            engine.run()
         except BaseException as e:
             errors.append(e)
         finally:
@@ -119,7 +124,7 @@ def test_replay_races_compaction_to_the_oracle(spark, tmp_path):
     for t in threads:
         t.join(timeout=600)
     assert errors == []
-    assert compacted or conflicts  # the compactor did race the replay
+    assert conflicts == [] and compacted  # the compactor did race the replay
     final = LakeTable.load(spark, root)
     chain = {s["snapshot_id"]: s["batch_id"] for s in final.snapshot_chain()}
     with open(metrics_path) as f:
@@ -146,7 +151,7 @@ def test_gc_keeps_young_snapshots_so_a_stale_plan_conflicts(tmp_path):
     assert writer.expire_snapshots(keep_last=1)["expired_snapshots"] == 0
     assert os.path.isdir(in_flight)
     with pytest.raises(CommitConflict, match="s1"):
-        stale._commit(snap)
+        stale._link(snap)
     assert LakeTable.load(None, root).watermark() == 3
 
     # with no writer active, min_age_s=0 expires all but the head
@@ -170,3 +175,141 @@ def test_cold_handle_sees_later_commits(tmp_path):
     assert cold.meta_file_reads == 2
     assert cold.checkpoint_watermark("c", 40) == "s4"
     assert writer.watermark() == 40
+
+
+def test_two_engines_replay_one_changelog_to_the_oracle(spark, tmp_path):
+    """Two engines on two handles replay one changelog into one table
+    from two threads. A window one engine commits while the other
+    stages it is dropped and reported skipped, so no batch id lands
+    twice, no staged write is left behind, and (the windows are
+    aligned) the chain's lineage counts every event once."""
+    seed_df = gen_seed_table(n_repos=3, paths_per_repo=30, seed=17)
+    changelog = gen_changelog(seed_df, n_events=1_500, seed=17, batch_size=300)
+    expected = replay(seed_df, changelog)
+    root = str(tmp_path / "two")
+    seed_lake(spark, LakeTable.create(spark, root, n_buckets=8), seed_df)
+    log_df = changelog_from_pandas(spark, changelog)
+    engines = [ReplayEngine(spark, LakeTable.load(spark, root), log_df,
+                            delta=150, compact_threshold=0) for _ in range(2)]
+    reports, errors = [], []
+
+    def run(engine):
+        try:
+            reports.extend(engine.run())
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(e,)) for e in engines]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert errors == []
+    assert len(reports) > 10  # 10 windows: both engines took part
+    final = LakeTable.load(spark, root)
+    head = final.meta()
+    assert final.watermark() == changelog["lsn"].max()
+    chain = final.snapshot_chain()
+    data_ids = [s["batch_id"] for s in chain if s["batch_id"] not in (None, "seed")]
+    assert len(data_ids) == len(set(data_ids))
+    on_chain = {s["snapshot_id"]: s["batch_id"] for s in chain}
+    for m in reports:
+        assert m.skipped == (m.snapshot_id is None)
+        assert m.skipped or on_chain[m.snapshot_id] == m.batch_id
+    assert sum(r["row_count"] for r in final.lineage()) == len(changelog)
+    # no compaction ran, so every data file written is referenced
+    on_disk = {os.path.join(d, f) for d, _, fs in os.walk(os.path.join(root, "data"))
+               for f in fs if f.endswith(".parquet")}
+    live = {f for m in (head["files"], head["deltas"]) for fl in m.values() for f in fl}
+    assert on_disk == live
+    assert state_hash(spark_state_to_pandas(final.read(include_system=True))) \
+        == state_hash(expected)
+
+
+def _one_change(spark, lsn: int):
+    return spark.createDataFrame(
+        [("r", "a", "c1", "py", f"v{lsn}", lsn, "U")],
+        "repo string, path string, commit string, lang string, "
+        "content string, _lsn long, op string",
+    ).withColumn("_content_sha", F.unhex(F.sha2(F.col("content"), 256)))
+
+
+def _after_write(landed: list, commit):
+    """A ``lineage=`` callable: it runs after the merge's write and
+    before its commit, and commits on a second handle at that point."""
+    def lineage():
+        landed.append(commit())
+        return []
+    return lineage
+
+
+def test_merge_rebases_over_a_commit_made_during_its_write(spark, tmp_path):
+    root = str(tmp_path / "t")
+    table = LakeTable.create(spark, root, n_buckets=4)
+    other, landed = LakeTable.load(None, root), []
+    sid = table.merge(_one_change(spark, 9), "b6-9", 9, lineage=_after_write(
+        landed, lambda: other.checkpoint_watermark("b1-5", 5)))
+    head = LakeTable.load(spark, root).meta()
+    assert landed == ["s1"] and sid == head["snapshot_id"] == "s2"
+    assert head["parent_id"] == "s1" and head["watermark"] == 9
+    assert [r["content"] for r in table.read().collect()] == ["v9"]
+
+
+@pytest.mark.parametrize("update_mode, commit", [
+    ("full", lambda t: t.alter("add_column", "c2")),
+    ("partial", lambda t: t.checkpoint_watermark("b1-5", 5)),
+], ids=["full-under-alter", "partial-under-checkpoint"])
+def test_merge_refuses_a_head_it_does_not_apply_to(spark, tmp_path, update_mode, commit):
+    root = str(tmp_path / "t")
+    table = LakeTable.create(spark, root, n_buckets=4)
+    other, landed = LakeTable.load(None, root), []
+    with pytest.raises(CommitConflict, match="staged on s0"):
+        table.merge(_one_change(spark, 9), "b6-9", 9, update_mode=update_mode,
+                    lineage=_after_write(landed, lambda: commit(other)))
+    assert LakeTable.load(None, root).meta()["snapshot_id"] == landed[0] == "s1"
+    assert os.listdir(os.path.join(root, "data")) == []  # the staged write is gone
+
+
+def _race_compaction(table, commit) -> list:
+    """Run ``commit`` right after ``table``'s next bucket write, before
+    its commit; returns the list its result lands in."""
+    write, landed = table._write, []
+
+    def write_then_commit(*args):
+        staged = write(*args)
+        landed.append(commit())
+        return staged
+
+    table._write = write_then_commit
+    return landed
+
+
+def test_compaction_rebases_over_a_merge_made_during_its_write(spark, tmp_path):
+    root = str(tmp_path / "t")
+    table = LakeTable.create(spark, root, n_buckets=1)
+    table.merge(_one_change(spark, 1), "b1-1", 1)
+    folded = table.meta()["deltas"]["0"]
+    other = LakeTable.load(spark, root)
+    landed = _race_compaction(table, lambda: other.merge(_one_change(spark, 2), "b2-2", 2))
+    sid = table.compact()
+    head = LakeTable.load(spark, root).meta()
+    assert landed == ["s2"] and sid == head["snapshot_id"] == "s3"
+    assert head["batch_id"] == "compact-s3" and head["watermark"] == 2
+    merged = other.snapshot_meta("s2")["deltas"]["0"]
+    assert merged[:len(folded)] == folded and head["deltas"]["0"] == merged[len(folded):]
+    assert [r["content"] for r in table.read().collect()] == ["v2"]
+
+
+def test_second_compaction_of_a_bucket_conflicts(spark, tmp_path):
+    root = str(tmp_path / "t")
+    table = LakeTable.create(spark, root, n_buckets=1)
+    table.merge(_one_change(spark, 1), "b1-1", 1)
+    other = LakeTable.load(spark, root)
+    landed = _race_compaction(table, other.compact)
+    with pytest.raises(CommitConflict, match="bucket 0 changed since s1"):
+        table.compact()
+    head = LakeTable.load(spark, root).meta()
+    assert landed == ["s2"] and head["snapshot_id"] == "s2"
+    # the merge's dir and the winner's: the loser's staged write is gone
+    assert sorted(d.split("-")[0] for d in os.listdir(os.path.join(root, "data"))) \
+        == ["s1", "s2"]

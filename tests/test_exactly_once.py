@@ -109,7 +109,7 @@ def test_t3b_crash_before_commit_point(spark, tmp_path, world):
     stale = table._child(table.snapshot_meta(meta["parent_id"]), "stale",
                          watermark=10**9)
     with pytest.raises(CommitConflict, match=meta["snapshot_id"]):
-        table._commit(stale)
+        table._link(stale)
     assert table.watermark() == w  # untouched
 
     ReplayEngine(spark, LakeTable.load(spark, table.root), log_df, delta=300).run()

@@ -228,7 +228,7 @@ def test_optimistic_commit_conflict(spark, tmp_path):
     assert snap["snapshot_id"] == "s1"
     assert t1.checkpoint_watermark("w1", 10) == "s1"  # writer 1 commits first
     with pytest.raises(CommitConflict, match="s1"):
-        t2._commit(snap)
+        t2._link(snap)
     assert t2.watermark() == t1.watermark() == 10  # winner's state intact
 
 
