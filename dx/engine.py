@@ -306,7 +306,7 @@ class ReplayEngine:
             return self._skipped(batch_id, lo + 1, hi)
         n_events = sum(r["row_count"] for r in lineage)
         dt = time.monotonic() - t0
-        applied = self.table.meta(refresh=False).get("merge_stats", {}).get("change_rows", 0)
+        applied = self.table.snapshot_meta(sid).get("merge_stats", {}).get("change_rows", 0)
         m = BatchMetrics(
             batch_id, lo + 1, hi, int(n_events), int(applied), sid, 0, dt,
             round(n_events / dt, 2) if dt > 0 else 0.0, lineage=lineage,

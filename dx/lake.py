@@ -21,9 +21,10 @@ public Iceberg concepts (spec at iceberg.apache.org/spec/):
   (Iceberg's retry against new metadata). Appends commute, so a merge
   rebases over any commit that keeps the schema; a compaction rebases
   over appends; ``CommitConflict`` is raised only when the staged
-  work does not apply to the new head (a DDL under a merge, another
-  compaction of the same bucket, any commit under a partial merge or
-  a seed). A window another writer already applied is dropped.
+  work does not apply to the new head (a DDL under a merge, any
+  commit under a partial merge or a seed). Work another writer
+  already did is dropped: a window it applied, a bucket it compacted.
+  Snapshot files are write-once, so a handle parses each at most once.
 - Durability: the snapshot file is fsynced, its directory is not. A
   host crash can lose the newest commit's name, but never leaves a
   torn head (a snapshot is complete before it has a name), and replay
@@ -266,8 +267,8 @@ def _key_bounds(md) -> list[str]:
 class CommitConflict(RuntimeError):
     """Staged work does not apply to the head another writer committed
     since it was staged (a merge under a new schema, a partial merge
-    or a seed under any new commit, a compaction whose buckets were
-    rewritten). Nothing was committed; re-stage from the new head.
+    or a seed under any new commit). Nothing was committed; re-stage
+    from the new head.
     ``_link`` raises it on a taken sequence number, which ``_commit``
     answers by rebasing."""
 
@@ -298,11 +299,11 @@ class LakeTable:
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        self._meta_cache: dict | None = None
-        # sequence number of the newest snapshot this handle has seen
+        # sequence number of the newest snapshot this handle has seen,
+        # and that snapshot once it parsed or committed it (_load)
         self._head: int | None = None
-        # instrumentation: snapshot-JSON file opens (tests assert the
-        # per-batch metadata cost stays O(1) as the chain grows)
+        self._snap: dict | None = None
+        # instrumentation: snapshot-JSON parses (a lone writer makes none)
         self.meta_file_reads = 0
 
     # ------------------------------------------------------------------ paths
@@ -360,40 +361,41 @@ class LakeTable:
             self._head += 1
         return self._head
 
+    def _load(self, seq: int) -> dict:
+        """Snapshot ``s<seq>``, the one place a snapshot file is parsed.
+        Files are write-once, so the newest one this handle parsed or
+        committed is kept and reused. Callers must not mutate the dict."""
+        if self._snap is not None and self._snap["snapshot_id"] == f"s{seq}":
+            return self._snap
+        with open(self._snap_path(f"s{seq}")) as f:
+            snap = json.load(f)
+        self.meta_file_reads += 1
+        if seq == self._head:  # the newest this handle has seen
+            self._snap = snap
+        return snap
+
     def meta(self, refresh: bool = True) -> dict:
-        if refresh or self._meta_cache is None:
-            with open(self._snap_path(f"s{self._head_seq()}")) as f:
-                self._meta_cache = json.load(f)
-            self.meta_file_reads += 1
-        return self._meta_cache
+        """The head snapshot, parsed only if this handle has not parsed
+        or committed it. ``refresh`` is kept for ``IcebergTable`` parity."""
+        return self._load(self._head_seq())
 
     def columns(self) -> list[ColumnSpec]:
-        return [ColumnSpec(**c) for c in self.meta(refresh=False)["columns"]]
+        return [ColumnSpec(**c) for c in self.meta()["columns"]]
 
     def watermark(self) -> int:
         return int(self.meta()["watermark"])
 
     def snapshot_chain(self) -> list[dict]:
-        """Walk parent links from the current snapshot toward the root.
-
-        O(chain) file reads — this is the lineage/time-travel EXPORT
-        surface, never on the per-batch hot path: the per-batch guard
-        (``watermark()``) reads ONLY the head snapshot. The walk stops
-        gracefully at the expire horizon (``expire_snapshots`` GC
-        removes old metadata files).
-        """
-        out, meta = [], self.meta()
-        while meta is not None:
-            out.append(meta)
-            pid = meta.get("parent_id")
-            meta = None
-            if pid is not None:
-                try:
-                    with open(self._snap_path(pid)) as f:
-                        meta = json.load(f)
-                    self.meta_file_reads += 1
-                except FileNotFoundError:
-                    break  # ancestor expired by GC
+        """Walk parent links from the current snapshot toward the root:
+        O(chain) file reads, the lineage/time-travel export surface and
+        never the per-batch path. It stops at the expire horizon
+        (``expire_snapshots`` removes old metadata files)."""
+        out = [self.meta()]
+        while out[-1]["parent_id"] is not None:
+            try:
+                out.append(self.snapshot_meta(out[-1]["parent_id"]))
+            except FileNotFoundError:
+                break  # ancestor expired by GC
         return out
 
     def lineage(self) -> list[dict]:
@@ -436,25 +438,27 @@ class LakeTable:
         """Commit ``change`` as the child of the head; return its id.
 
         ``change(head)`` returns the child's overrides (see
-        :meth:`_child`), or raises ``CommitConflict`` when the staged
-        work does not apply to that head. The first attempt builds on
-        ``head`` (the head the caller staged on; default: read now).
-        When another writer takes the number first, the head is read
-        again and ``change`` applied to it again. The child's watermark
-        is ``max(head, lsn_hi)``.
+        :meth:`_child`), None when another writer already did the work,
+        or raises ``CommitConflict`` when it does not apply to that
+        head. The first attempt builds on ``head`` (the one the caller
+        staged on; default: the current head). When another writer
+        takes the number first, ``change`` is applied to the new head.
+        The child's watermark is ``max(head, lsn_hi)``.
 
-        Returns None, committing nothing, when a head committed since
-        ``head`` covers ``lsn_hi`` and ``head`` did not: another writer
-        applied this window. A caller whose own head already covered
-        it re-merges on purpose and commits. ``write_dir`` is the
-        caller's staged data dir: a dropped or refused commit deletes
-        it, since no snapshot references it."""
+        Returns None, committing nothing, when ``change`` does, or when
+        a head committed since ``head`` covers ``lsn_hi`` and ``head``
+        did not: another writer applied this window. A caller whose own
+        head already covered it re-merges on purpose and commits.
+        ``write_dir`` is the caller's staged data dir: a dropped or
+        refused commit deletes it, since no snapshot references it."""
         first = head = head if head is not None else self.meta()
         try:
             while True:
                 if lsn_hi is not None and first["watermark"] < lsn_hi <= head["watermark"]:
                     return None
-                snap = self._child(head, **{"batch_id": batch_id, **change(head)})
+                if (overrides := change(head)) is None:
+                    return None
+                snap = self._child(head, **{"batch_id": batch_id, **overrides})
                 snap["watermark"] = max(head["watermark"], int(lsn_hi or 0))
                 try:
                     self._link(snap)
@@ -486,7 +490,7 @@ class LakeTable:
             raise CommitConflict(f"{sid} was committed by another writer") from None
         finally:
             os.remove(tmp)
-        self._meta_cache = snap
+        self._snap = snap
         self._head = int(sid[1:])
 
     # ----------------------------------------------------------------- read
@@ -525,13 +529,11 @@ class LakeTable:
             sel.append(F.coalesce(F.col("_op"), F.lit("U")).alias("_op"))
         return df.select(*sel)
 
-    def _bucket_state(self, buckets: list[str], cols: list[ColumnSpec],
-                      meta: dict | None = None,
+    def _bucket_state(self, buckets: list[str], cols: list[ColumnSpec], meta: dict,
                       key_bounds: tuple | None = None) -> DataFrame:
-        """Reconciled state of the given buckets (base ∪ deltas:
-        max-``_lsn`` row per key wins, tombstones drop) — the read side
-        of Iceberg-v2-style merge-on-read. ``meta`` selects a snapshot
-        (default: current).
+        """Reconciled state of the given buckets of snapshot ``meta``
+        (base ∪ deltas: max-``_lsn`` row per key wins, tombstones drop)
+        — the read side of Iceberg-v2-style merge-on-read.
 
         ``key_bounds`` = (repo_lo, repo_hi, path_lo, path_hi) prunes
         files via the snapshot's per-file stats BEFORE any IO. The
@@ -540,7 +542,6 @@ class LakeTable:
         delta) — the caller must join down to in-bounds keys. Its one
         caller is the partial merge (semi-join on the batch key set);
         ``read_point`` prunes and reconciles its single key itself."""
-        meta = meta if meta is not None else self.meta(refresh=False)
         base_files = [f for b in buckets for f in meta["files"].get(b, [])]
         delta_files = [f for b in buckets for f in meta.get("deltas", {}).get(b, [])]
         if key_bounds is not None:
@@ -641,10 +642,7 @@ class LakeTable:
 
     def snapshot_meta(self, snapshot_id: str) -> dict:
         """Metadata of a committed snapshot (raises if GC-expired)."""
-        with open(self._snap_path(snapshot_id)) as f:
-            meta = json.load(f)
-        self.meta_file_reads += 1
-        return meta
+        return self._load(int(snapshot_id[1:]))
 
     def _snapshot(self, snapshot_id: str | None) -> tuple[dict, list[ColumnSpec]]:
         """(metadata, logical columns) of ``snapshot_id``, or of the
@@ -848,10 +846,8 @@ class LakeTable:
     def seed(self, df: DataFrame, batch_id: str = "seed") -> str:
         """Initial full load (all buckets written once). Raises
         ``CommitConflict`` if any commit lands while it writes."""
-        meta = self.meta()
-        files, stats, _, out_dir = self._write(
-            self._stored_select(df, self.columns()), _next_id(meta)
-        )
+        meta, cols = self._snapshot(None)
+        files, stats, _, out_dir = self._write(self._stored_select(df, cols), _next_id(meta))
 
         def change(head: dict) -> dict:
             if head["snapshot_id"] != meta["snapshot_id"]:
@@ -892,7 +888,7 @@ class LakeTable:
         callable returning it (the engine passes its pending lineage
         job's ``result``). It is resolved after the write, right before
         the commit, so the lineage job runs beside the write; if it
-        raises, nothing is committed.
+        raises, nothing is committed and the staged write is deleted.
 
         The delta files commute (a read keeps each key's max-``_lsn``
         row), so when another writer commits first the merge appends
@@ -904,10 +900,9 @@ class LakeTable:
         """
         if update_mode not in ("full", "partial"):
             raise ValueError(f"unknown update_mode: {update_mode}")
-        meta = self.meta()
-        cols = self.columns()
+        meta, cols = self._snapshot(None)
         if update_mode == "partial":
-            changes = self._partial_images(changes)
+            changes = self._partial_images(changes, meta, cols)
         # the write lands ONE delta file per dirty bucket: every later
         # read opens each delta file, so files, not rows, set read cost
         new_files, new_stats, change_rows, out_dir = self._write(
@@ -915,7 +910,11 @@ class LakeTable:
                                 cols, include_op=True),
             _next_id(meta),
         )
-        rows = (lineage() if callable(lineage) else lineage) or []
+        try:
+            rows = (lineage() if callable(lineage) else lineage) or []
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)  # no snapshot references it
+            raise
 
         def change(head: dict) -> dict:
             if head["schema_version"] != meta["schema_version"] or (
@@ -931,8 +930,10 @@ class LakeTable:
 
         return self._commit(batch_id, change, watermark_hi, head=meta, write_dir=out_dir)
 
-    def _partial_images(self, changes: DataFrame) -> DataFrame:
-        """Full row images of a folded partial-update batch (X10).
+    def _partial_images(self, changes: DataFrame, meta: dict,
+                        cols: list[ColumnSpec]) -> DataFrame:
+        """Full row images of a folded partial-update batch (X10) over
+        snapshot ``meta`` and its columns ``cols``.
 
         On matched keys each column keeps its stored value unless the
         change provides one (``coalesce(change, old)``), except rows
@@ -949,7 +950,6 @@ class LakeTable:
         key bounds against the batch's key box, semi-joined down to the
         batch's broadcast key set (exactly ``_bucket_state``'s
         key_bounds contract)."""
-        cols = self.columns()
         dirty = sorted(
             str(r[0]) for r in changes.select(self.bucket_expr()).distinct().collect()
         )
@@ -958,7 +958,7 @@ class LakeTable:
             F.min("repo"), F.max("repo"), F.min("path"), F.max("path")
         ).collect()[0]
         old_hit = (
-            self._bucket_state(dirty, cols,
+            self._bucket_state(dirty, cols, meta,
                                key_bounds=tuple(kb) if kb[0] is not None else None)
             .join(F.broadcast(keys), on=KEY, how="left_semi")
             .select(
@@ -1006,11 +1006,11 @@ class LakeTable:
         A merge that commits while it writes does not stop it: the
         commit replaces the folded files of a head that still holds
         the same base and begins each bucket's deltas with the folded
-        ones, and keeps the deltas appended since. On any other head
-        (another compaction, a seed) it raises ``CommitConflict``. The
-        default ``batch_id`` is ``compact-<the id it commits as>``."""
-        meta = self.meta()
-        cols = self.columns()
+        ones, and keeps the deltas appended since. Merges only append,
+        so any other head means another compaction folded one of its
+        buckets: it commits nothing and returns None. The default
+        ``batch_id`` is ``compact-<the id it commits as>``."""
+        meta, cols = self._snapshot(None)
         deltas = meta.get("deltas", {})
         folded = {b: deltas[b] for b in (buckets if buckets is not None else deltas)
                   if deltas.get(b)}
@@ -1026,12 +1026,12 @@ class LakeTable:
             self._stored_select(state, cols), _next_id(meta)
         )
 
-        def change(head: dict) -> dict:
+        def change(head: dict) -> dict | None:
             files, kept = dict(head["files"]), dict(head.get("deltas", {}))
             for b, fl in folded.items():
                 if (files.get(b, []) != meta["files"].get(b, [])
                         or kept.get(b, [])[:len(fl)] != fl):
-                    raise CommitConflict(f"bucket {b} changed since {meta['snapshot_id']}")
+                    return None
                 files[b] = new_files.get(b, [])
                 rest = kept.pop(b)[len(fl):]
                 if rest:

@@ -61,6 +61,21 @@ def _scratch(name: str) -> Iterator[str]:
         shutil.rmtree(path, ignore_errors=True)
 
 
+@contextmanager
+def _jvm_property(spark: SparkSession, name: str, value: str) -> Iterator[None]:
+    """Set a JVM-wide system property for the block, then restore its
+    previous value, or clear it if it had none."""
+    system = spark.sparkContext._jvm.java.lang.System
+    old = system.setProperty(name, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            system.clearProperty(name)
+        else:
+            system.setProperty(name, old)
+
+
 CENTS = lambda c: F.floor(c * 100).cast("long")  # noqa: E731 — exact money path
 
 
@@ -109,7 +124,7 @@ def cdc_dedup_window(spark, sf_dir):
 )
 def cdc_dedup_maxby(spark, sf_dir):
     """X2 library dedup (dx/dedup.py ``strategy="maxby"``; the engine
-    runs ``join``): groupBy + max_by — hash aggregation with map-side
+    runs ``window``): groupBy + max_by — hash aggregation with map-side
     partial combine; shuffles |keys| rows, not |events|, and defuses
     per-key skew structurally."""
     ev = _t(spark, sf_dir, "events")
@@ -1308,11 +1323,9 @@ def dx_jdbc_roundtrip(spark, sf_dir):
 
     _require_single_jvm(spark.sparkContext.master)
 
-    with _scratch("jdbc_q") as scratch:
-        # pin derby.log into the scratch (read once at Derby boot)
-        spark.sparkContext._jvm.java.lang.System.setProperty(
-            "derby.system.home", scratch
-        )
+    # pin derby.log into the scratch (read once at Derby boot); the
+    # property is restored before the scratch is removed
+    with _scratch("jdbc_q") as scratch, _jvm_property(spark, "derby.system.home", scratch):
         url = f"jdbc:derby:{scratch}/db;create=true"
         cols = ["o_orderkey", "o_custkey", "o_totalprice"]
         staged = (

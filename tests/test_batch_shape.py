@@ -13,6 +13,7 @@ windows' commits are pinned in test_units.py.
 from __future__ import annotations
 
 import json
+import os
 
 import pandas as pd
 import pytest
@@ -78,9 +79,12 @@ def test_merge_receives_lineage_as_a_json_list(spark, tmp_path, world):
 
 def test_failing_lineage_commits_nothing(spark, tmp_path, world):
     """A lineage callable that raises fails the merge after its write
-    and before its commit: the head snapshot stays as it was."""
+    and before its commit: the head snapshot stays as it was, and the
+    merge's staged write dir is gone."""
     eng = _engine(spark, tmp_path, world, "lineage-fails")
     head = eng.table.meta()
+    data = os.path.join(eng.table.root, "data")
+    before = sorted(os.listdir(data))
 
     def broken():
         raise RuntimeError("lineage job failed")
@@ -89,6 +93,7 @@ def test_failing_lineage_commits_nothing(spark, tmp_path, world):
         eng.table.merge(eng._dedup_changes(eng.changelog.filter("op != 'DDL'")),
                         batch_id="b1-200", watermark_hi=200, lineage=broken)
     assert eng.table.meta() == head
+    assert sorted(os.listdir(data)) == before  # the seed's s1-* only: no s2-* dir
 
 
 def test_plan_is_one_changelog_scan(spark, tmp_path, world, jobs_of):

@@ -4,9 +4,9 @@ snapshots planned on one head exactly one links. A writer whose link
 is taken applies its staged change to the new head — across
 processes, against compaction, between engines — and raises
 ``CommitConflict`` only where the change does not apply (a schema
-change under a merge, any commit under a partial merge, a second
-compaction of a bucket). Metadata-only commits need no Spark session
-(``spark=None``).
+change under a merge, any commit under a partial merge). Work another
+writer already did (a window, a second compaction of a bucket) is
+dropped. Metadata-only commits need no Spark session (``spark=None``).
 """
 
 from __future__ import annotations
@@ -136,6 +136,40 @@ def test_replay_races_compaction_to_the_oracle(spark, tmp_path):
         == state_hash(expected)
 
 
+def test_two_compacting_engines_replay_to_the_oracle(spark, tmp_path):
+    """Two engines on two handles replay one changelog with
+    auto-compaction at depth 2. A compaction of a bucket the other
+    engine already folded is dropped, so no ``CommitConflict`` leaves
+    ``run()``, and the result is the oracle's."""
+    seed_df = gen_seed_table(n_repos=3, paths_per_repo=30, seed=19)
+    changelog = gen_changelog(seed_df, n_events=1_500, seed=19, batch_size=300)
+    expected = replay(seed_df, changelog)
+    root = str(tmp_path / "cc")
+    seed_lake(spark, LakeTable.create(spark, root, n_buckets=4), seed_df)
+    log_df = changelog_from_pandas(spark, changelog)
+    engines = [ReplayEngine(spark, LakeTable.load(spark, root), log_df,
+                            delta=150, compact_threshold=2) for _ in range(2)]
+    errors: list[BaseException] = []
+
+    def run(engine):
+        try:
+            engine.run()
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(e,)) for e in engines]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert errors == []
+    final = LakeTable.load(spark, root)
+    assert final.watermark() == 1_500
+    assert any(str(s["batch_id"]).startswith("compact-") for s in final.snapshot_chain())
+    assert state_hash(spark_state_to_pandas(final.read(include_system=True))) \
+        == state_hash(expected)
+
+
 def test_gc_keeps_young_snapshots_so_a_stale_plan_conflicts(tmp_path):
     """With the default ``min_age_s`` GC keeps snapshots a slow writer
     may still be racing, so a plan on an old parent cannot re-take an
@@ -162,8 +196,8 @@ def test_gc_keeps_young_snapshots_so_a_stale_plan_conflicts(tmp_path):
 
 def test_cold_handle_sees_later_commits(tmp_path):
     """A handle loaded at s0 finds another handle's later commits by
-    probing forward, one snapshot open per ``meta()``, and commits
-    after them."""
+    probing forward, parses the new head once, and commits after
+    them."""
     root = str(tmp_path / "cold")
     writer = LakeTable.create(None, root)
     cold = LakeTable.load(None, root)
@@ -172,9 +206,24 @@ def test_cold_handle_sees_later_commits(tmp_path):
     cold.meta_file_reads = 0
     assert cold.meta()["snapshot_id"] == "s3"
     assert cold.watermark() == 30
-    assert cold.meta_file_reads == 2
+    assert cold.meta_file_reads == 1
     assert cold.checkpoint_watermark("c", 40) == "s4"
     assert writer.watermark() == 40
+
+
+def test_overtaken_handle_returns_the_new_head(tmp_path):
+    """A handle whose kept head (the one it committed) is overtaken by
+    another handle's commit returns the new head on its next
+    ``meta()``, and keeps it."""
+    root = str(tmp_path / "overtaken")
+    a = LakeTable.create(None, root)
+    b = LakeTable.load(None, root)
+    assert a.checkpoint_watermark("a1", 10) == "s1"
+    assert a.meta()["snapshot_id"] == "s1"
+    assert b.checkpoint_watermark("b1", 20) == "s2"
+    a.meta_file_reads = 0
+    assert a.meta()["snapshot_id"] == "s2" and a.watermark() == 20
+    assert a.meta_file_reads == 1
 
 
 def test_two_engines_replay_one_changelog_to_the_oracle(spark, tmp_path):
@@ -300,14 +349,15 @@ def test_compaction_rebases_over_a_merge_made_during_its_write(spark, tmp_path):
     assert [r["content"] for r in table.read().collect()] == ["v2"]
 
 
-def test_second_compaction_of_a_bucket_conflicts(spark, tmp_path):
+def test_second_compaction_of_a_bucket_is_dropped(spark, tmp_path):
+    """A compaction whose bucket another compaction folded while it
+    wrote commits nothing and returns None: the work is done."""
     root = str(tmp_path / "t")
     table = LakeTable.create(spark, root, n_buckets=1)
     table.merge(_one_change(spark, 1), "b1-1", 1)
     other = LakeTable.load(spark, root)
     landed = _race_compaction(table, other.compact)
-    with pytest.raises(CommitConflict, match="bucket 0 changed since s1"):
-        table.compact()
+    assert table.compact() is None
     head = LakeTable.load(spark, root).meta()
     assert landed == ["s2"] and head["snapshot_id"] == "s2"
     # the merge's dir and the winner's: the loser's staged write is gone

@@ -3,6 +3,7 @@ invariants, manifest derivation."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pandas as pd
@@ -459,3 +460,20 @@ def test_jdbc_roundtrip_requires_single_jvm_master():
         assert not single_jvm(master)
         with pytest.raises(RuntimeError, match="single-JVM local"):
             _require_single_jvm(master)
+
+
+def test_jdbc_roundtrip_restores_derby_home(spark):
+    """The JDBC round-trip points the JVM-wide ``derby.system.home`` at
+    its scratch dir only while it runs: afterwards the property reads
+    what it read before, unset included."""
+    from dx.queries import dx_jdbc_roundtrip
+    from tests.test_oracle_gate import _SF_DIR
+
+    system = spark.sparkContext._jvm.java.lang.System
+    for before in (None, os.path.abspath(".tmp")):
+        if before is None:
+            system.clearProperty("derby.system.home")
+        else:
+            system.setProperty("derby.system.home", before)
+        assert dx_jdbc_roundtrip(spark, _SF_DIR).count() > 0
+        assert system.getProperty("derby.system.home") == before
